@@ -277,8 +277,7 @@ object Bench {
       val pages = CorpusSpark.pages(spark, e2eN, parts = cpus.toInt * 8, seed = 42L)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       pages.count()
-      val res = Pipeline.run(pages, GraftConfig(),
-        profile = sys.env.get("SPARK_GRAFT_PROFILE").contains("1"))
+      val res = Pipeline.run(pages, GraftConfig())
       // Result is fully materialized by Pipeline.run's metric aggregates
       val allMetrics = res.metrics.collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap

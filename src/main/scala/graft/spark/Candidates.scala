@@ -405,7 +405,7 @@ object Candidates {
         // note above); making even the narrow work increment-sized needs the
         // band relation persisted in the store between increments. Old-old
         // pairs are excluded by construction; the caller supplies them from
-        // the previous run's persisted pairs table (Pipeline.runIncremental
+        // the previous run's persisted pairs table (Pipeline.runIncrementalScoped
         // keeps them — candidate generation over unchanged reps is a pure
         // function of the rep set, so those rows cannot have changed).
         // Persist + materialize the (increment-sized) id set: it feeds three

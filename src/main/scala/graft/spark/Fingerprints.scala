@@ -57,6 +57,23 @@ object Fingerprints {
     while (df != null) { df.unpersist(false); df = persistedFrames.poll() }
   }
 
+  /** Persist `df`, materialize it in one labeled job and register it for
+    * [[cleanupCaches]] — unless the cache already holds the same plan. The
+    * fingerprint stage and the substring pass dedup the same `pages` (as do
+    * Resume's commit path and a scoped increment's substring pass), so the
+    * second caller finds the first one's frames still cached: re-persisting
+    * them is refused by the cache manager ("Asked to cache already cached
+    * data") and re-counting them is a wasted job. Only this helper persists
+    * these plans, so a cached plan is always a materialized one. */
+  private def persistOnce(df: DataFrame, label: String): DataFrame = {
+    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      persistedFrames.add(df)
+      Pipeline.labeled(df.sparkSession, label) { df.count() }
+    }
+    df
+  }
+
   /** content identity = md5(url + "_" + epochMillis(warc_ts)) — the analog of
     * the reference's md5(filename + "_" + mtime) cache key (db.cpp:22-30):
     * url-stable, content-version-sensitive. */
@@ -148,7 +165,7 @@ object Fingerprints {
     * warc_ts) keys; only the rare losers flow into an anti-join against the
     * unshuffled pages, and only rows of the (rarer still) duplicated keys
     * pass through a payload collapse aggregate. The whole plan is LAZY
-    * (no driver action at construction — pairStage's no-job contract): when
+    * (no driver action at construction — the lazy entry points' contract): when
     * no key is duplicated, dupKeys resolves empty at execution and the
     * collapse branch is a no-op.
     *
@@ -200,13 +217,7 @@ object Fingerprints {
     val keys0 = pages.groupBy(col("url"), col("warc_ts"))
       .agg(count(lit(1)).as("__copies"))
     val keys =
-      if (!eagerKeys) keys0
-      else {
-        val k = keys0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        persistedFrames.add(k)
-        Pipeline.labeled(pages.sparkSession, "graft: url-dedup keys") { k.count() }
-        k
-      }
+      if (!eagerKeys) keys0 else persistOnce(keys0, "graft: url-dedup keys")
     val wUrl = Window.partitionBy(col("url")).orderBy(col("warc_ts").desc)
     val ranked = keys.withColumn("__rn", row_number().over(wUrl))
     val winners = ranked.filter(col("__rn") === 1)
@@ -231,11 +242,8 @@ object Fingerprints {
     val (losers, dupKeys) =
       if (!eagerKeys) (losers0, dupKeys0)
       else {
-        val pinned = losers0.withColumn("__t", lit(0))
-          .unionByName(dupKeys0.withColumn("__t", lit(1)))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        persistedFrames.add(pinned)
-        Pipeline.labeled(pages.sparkSession, "graft: url-dedup decisions") { pinned.count() }
+        val pinned = persistOnce(losers0.withColumn("__t", lit(0))
+          .unionByName(dupKeys0.withColumn("__t", lit(1))), "graft: url-dedup decisions")
         (pinned.filter(col("__t") === 0).select("url", "warc_ts"),
           pinned.filter(col("__t") === 1).select("url", "warc_ts"))
       }

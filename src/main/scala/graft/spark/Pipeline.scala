@@ -22,11 +22,15 @@ import graft.core.GraftConfig
   *
   * Driver-job budget (scaling-efficiency relevant — every driver job is a
   * fixed-latency serialization point that does not shrink with more cores):
-  * by default ALL run metrics are computed in ONE union-aggregate job over
-  * the persisted intermediates; the per-phase wall-time breakdown (which
-  * needs a materializing action per phase) is behind `profile = true`.
+  * ALL run metrics are computed in ONE union-aggregate job over the
+  * persisted intermediates. Per-phase costs are not measured in here: every
+  * phase's jobs carry a `graft: …` description ([[labeled]]), which a
+  * listener outside the program attributes time and bytes to.
   */
 object Pipeline {
+
+  /** Storage level of every frame the pipeline persists. */
+  private val storage = StorageLevel.MEMORY_AND_DISK
 
   final case class Result(
       signatures: DataFrame, // all fingerprint rows (incl. rejected)
@@ -36,45 +40,34 @@ object Pipeline {
       metrics: DataFrame // (metric, value) — the status-report analog (S14)
   )
 
-  def run(pages: DataFrame, cfg: GraftConfig = GraftConfig(),
-          persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-          profile: Boolean = false): Result = {
+  def run(pages: DataFrame, cfg: GraftConfig = GraftConfig()): Result = {
     val scanned = scan(pages, cfg)
-    if (profile) {
-      var t0 = System.nanoTime()
-      val sigs = Fingerprints.pruneForMode(
-        Fingerprints.fromPages(scanned, cfg).toDF(), cfg).persist(persistLevel)
-      val nSigs = sigs.count() // materialize: everything upstream is the fingerprint phase
-      val tFingerprint = (System.nanoTime() - t0) / 1000000L
-      downstreamProfiled(sigs, nSigs, tFingerprint, pages, cfg, persistLevel)
-    } else {
-      // Partitioning diet for the persisted signature frame: callers hand in
-      // page sources at straggler-smoothing granularity (the bench uses
-      // 8 x cores for the skewed synthesis map), but every downstream
-      // consumer of the CACHED signatures re-pays that task count per scan —
-      // at 60k docs that is 256 tasks of ~230 rows each, several times, and
-      // cached scans get no AQE coalescing. Cap at 2 x defaultParallelism
-      // (scale-adaptive: derived from the session, never a constant), only
-      // ever shrinking. coalesce is narrow — the fingerprint map fuses into
-      // the coalesced tasks, each reading several cached page partitions.
-      val spark1 = pages.sparkSession
-      val targetParts = 2 * spark1.sparkContext.defaultParallelism
-      val scanned2 =
-        if (scanned.rdd.getNumPartitions > targetParts) scanned.coalesce(targetParts)
-        else scanned
-      val sigs = Fingerprints.pruneForMode(
-        Fingerprints.fromPages(scanned2, cfg).toDF(), cfg).persist(persistLevel)
-      // Materialize the signature cache ONCE before the downstream fan-out
-      // (guide §2.4 / the bnds.count() discipline in Candidates): the first
-      // action below it (the dictionary sort) fans out into ~8 concurrent
-      // AQE stage jobs — dedup-key aggregate, anti-join/collapse branches,
-      // exact-group aggregate, member/rep joins — and concurrent first touch
-      // of an UNPOPULATED cache races: each stage job re-ran the full
-      // fingerprint expression over the corpus (measured as an 8-job ladder
-      // owning 20.1 s of a 39 s 60k-doc run; one populate pass costs ~2 s).
-      labeled(sigs.sparkSession, "graft: fingerprint materialize") { sigs.count() }
-      downstream(sigs, pages, cfg, persistLevel)
-    }
+    // Partitioning diet for the persisted signature frame: callers hand in
+    // page sources at straggler-smoothing granularity (the bench uses
+    // 8 x cores for the skewed synthesis map), but every downstream
+    // consumer of the CACHED signatures re-pays that task count per scan —
+    // at 60k docs that is 256 tasks of ~230 rows each, several times, and
+    // cached scans get no AQE coalescing. Cap at 2 x defaultParallelism
+    // (scale-adaptive: derived from the session, never a constant), only
+    // ever shrinking. coalesce is narrow — the fingerprint map fuses into
+    // the coalesced tasks, each reading several cached page partitions.
+    val spark = pages.sparkSession
+    val targetParts = 2 * spark.sparkContext.defaultParallelism
+    val scanned2 =
+      if (scanned.rdd.getNumPartitions > targetParts) scanned.coalesce(targetParts)
+      else scanned
+    val sigs = Fingerprints.pruneForMode(
+      Fingerprints.fromPages(scanned2, cfg).toDF(), cfg).persist(storage)
+    // Materialize the signature cache ONCE before the downstream fan-out
+    // (guide §2.4 / the bnds.count() discipline in Candidates): the first
+    // action below it (the dictionary sort) fans out into ~8 concurrent
+    // AQE stage jobs — dedup-key aggregate, anti-join/collapse branches,
+    // exact-group aggregate, member/rep joins — and concurrent first touch
+    // of an UNPOPULATED cache races: each stage job re-ran the full
+    // fingerprint expression over the corpus (measured as an 8-job ladder
+    // owning 20.1 s of a 39 s 60k-doc run; one populate pass costs ~2 s).
+    labeled(spark, "graft: fingerprint materialize") { sigs.count() }
+    downstream(sigs, exactGroups(sigs), pages, cfg)
   }
 
   /** Incremental entry: fingerprints come from / go to the Iceberg-shaped
@@ -89,13 +82,12 @@ object Pipeline {
     * verbatim-overlap match a one-shot run over the full corpus would find.
     * A warning is emitted when this shape is detectable. */
   def runIncremental(pages: DataFrame, store: graft.store.IcebergShaped.Table,
-                     cfg: GraftConfig = GraftConfig(),
-                     persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK)
+                     cfg: GraftConfig = GraftConfig())
       : (Result, Resume.IncrementalResult) = {
     val inc = Resume.incrementalFingerprints(scan(pages, cfg), store, cfg)
-    val sigs = inc.signatures.persist(persistLevel)
+    val sigs = inc.signatures.persist(storage)
     warnIfSubstringTextMissing(sigs, inc, cfg)
-    (downstream(sigs, pages, cfg, persistLevel), inc)
+    (downstream(sigs, exactGroups(sigs), pages, cfg), inc)
   }
 
   /** The substringPass incremental hazard is live store rows whose TEXT is
@@ -177,22 +169,17 @@ object Pipeline {
     * components. */
   def runIncrementalScoped(pages: DataFrame, store: graft.store.IcebergShaped.Table,
                            prev: Option[IncState],
-                           cfg: GraftConfig = GraftConfig(),
-                           persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK)
+                           cfg: GraftConfig = GraftConfig())
       : (Result, Resume.IncrementalResult, IncState) = {
     val inc = Resume.incrementalFingerprints(scan(pages, cfg), store, cfg)
-    val sigs = inc.signatures.persist(persistLevel)
+    val sigs = inc.signatures.persist(storage)
     warnIfSubstringTextMissing(sigs, inc, cfg)
 
-    // ONE exact-group derivation shared with pairStage (the grouping rule —
-    // min-url election per text_md5 — must never diverge between the scoped
-    // and one-shot paths), passed down so downstream() does not rebuild and
-    // re-persist identical members/reps frames.
-    val eg = exactGroups(sigs, persistLevel)
-    val members = eg.members
+    // ONE exact-group derivation (the grouping rule — min-url election per
+    // text_md5 — must never diverge between the scoped and one-shot paths),
+    // read below and handed to downstream() on the first generation.
+    val eg = exactGroups(sigs)
     val reps = eg.reps
-    val valid = eg.valid
-    val rejects = eg.rejects
 
     // Band-relation persistence between increments (round-6; r5 VERDICT #1,
     // the reference's read-before-compute cache protocol applied to the
@@ -215,7 +202,7 @@ object Pipeline {
 
     prev match {
       case None =>
-        val res = downstream(sigs, pages, cfg, persistLevel, Some(eg))
+        val res = downstream(sigs, eg, pages, cfg)
         val repsCk0 = reps.localCheckpoint()
         // first-generation band commit: reps are persisted+materialized by
         // downstream() at this point, so this is one slim explode + write
@@ -254,8 +241,8 @@ object Pipeline {
         // text group gained a smaller url) is stale only.
         val repIdent = repsCk.select(col("url"), col("content_id"))
         val prevIdent = st.reps.select(col("url"), col("content_id"))
-        val newUrls = repIdent.except(prevIdent).select("url").persist(persistLevel)
-        val staleUrls = prevIdent.except(repIdent).select("url").persist(persistLevel)
+        val newUrls = repIdent.except(prevIdent).select("url").persist(storage)
+        val staleUrls = prevIdent.except(repIdent).select("url").persist(storage)
 
         // Current-generation band relation, store-backed: the previous
         // generation's committed rows minus stale reps, plus a fresh explode
@@ -276,7 +263,7 @@ object Pipeline {
           }
         val newBandRows =
           if (hasNew) bandRowsOf(repsCk.join(newUrls, Seq("url"), "left_semi"))
-            .persist(persistLevel)
+            .persist(storage)
           else null
         val bndsAll = storedBands.map { sb =>
           val live = sb.join(staleUrls, Seq("url"), "left_anti")
@@ -307,7 +294,7 @@ object Pipeline {
               .getOrElse(Candidates.bandKeysByUrl(repsCk, cfg))
               .join(staleKeys, Seq("band_id", "key"), "left_semi")
               .select("url").distinct()
-            newUrls.unionByName(coMembers).distinct().persist(persistLevel)
+            newUrls.unionByName(coMembers).distinct().persist(storage)
           }
 
         val cand = Candidates.candidatePairs(repsCk, cfg, Some(seedUrls), bndsAll)
@@ -316,17 +303,7 @@ object Pipeline {
           if (cfg.exactVerify) Pairs.exactVerify(scoredBase, repsCk, cfg) else scoredBase
         val delta =
           (if (cfg.substringPass) Pairs.substringPass(scoredVerified, pages, cfg)
-           else scoredVerified).drop("id_a", "id_b").persist(persistLevel)
-
-        // diagnosis-only volume probe (extra jobs — keep off outside profiling)
-        if (sys.env.contains("GRAFT_INCR_DEBUG")) {
-          System.err.println(s"[incrdbg] new=${newUrls.count()} " +
-            s"stale=${staleUrls.count()} seed=${seedUrls.count()} " +
-            s"delta=${delta.count()} deltaMatched=${delta.filter(col("matched")).count()}")
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get("/tmp/incr_delta_plan.txt"),
-            delta.queryExecution.executedPlan.toString().getBytes)
-        }
+           else scoredVerified).drop("id_a", "id_b").persist(storage)
 
         val keptPrev = st.pairs
           .join(staleUrls.select(col("url").as("url_a")), Seq("url_a"), "left_anti")
@@ -353,37 +330,21 @@ object Pipeline {
         val repAssign = labeled(sigs.sparkSession, "graft: incr assign checkpoint") {
           splice.assign.localCheckpoint()
         }
-        val memberClusters = members
-          .join(repAssign.withColumnRenamed("url", "rep_url"), "rep_url")
-          .select(col("url"), col("cluster_id"))
-        val clustered = memberClusters
-          .join(valid.select(col("url"), col("size"), col("text_len"), col("warc_ts")), "url")
         // same result-boundary lineage truncation as downstream(): the
         // increment-chain plans stay O(this increment) for every consumer
         val clusters = labeled(sigs.sparkSession, "graft: incr clustering") {
-          Clusters.electKeepers(clustered).localCheckpoint()
+          expandAndElect(eg, repAssign).localCheckpoint()
         }
 
         val spark = sigs.sparkSession
         import spark.implicits._
-        val metrics =
-          kvMetrics(sigs.agg(
-            count(lit(1)).as("signatures"),
-            coalesce(sum(when(col("reject_reason").isNotNull, 1L)), lit(0L)).as("rejected"),
-            coalesce(sum(when(!col("extract_ok"), 1L)), lit(0L)).as("extract_mismatches")))
-            .unionByName(kvMetrics(repsCk.agg(count(lit(1)).as("exact_groups"))))
-            .unionByName(kvMetrics(pairs.agg(
-              count(lit(1)).as("candidate_pairs"),
-              coalesce(sum(when(col("matched"), 1L)), lit(0L)).as("matched_pairs"))))
-            .unionByName(kvMetrics(clusters.groupBy("cluster_id").count().agg(
-              coalesce(sum(when(col("count") > 1, 1L)), lit(0L)).as("dup_clusters"),
-              coalesce(sum(when(col("count") > 1, col("count"))), lit(0L)).as("docs_in_dup_clusters"))))
-            .unionByName(Seq(
-              ("recluster_edges", splice.reclusterEdges),
-              ("affected_clusters", splice.affectedClusters),
-              ("untouched_clusters", splice.untouchedClusters)).toDF("metric", "value"))
+        val metrics = runMetrics(sigs, repsCk, pairs, clusters)
+          .unionByName(Seq(
+            ("recluster_edges", splice.reclusterEdges),
+            ("affected_clusters", splice.affectedClusters),
+            ("untouched_clusters", splice.untouchedClusters)).toDF("metric", "value"))
 
-        val res = Result(sigs, rejects, pairs, clusters, metrics)
+        val res = Result(sigs, eg.rejects, pairs, clusters, metrics)
         val state = IncState(repsCk, pairs, repAssign,
           retained = Seq(sigs, reps))
         // every returned frame is a checkpoint leaf (pairs, repAssign,
@@ -416,7 +377,7 @@ object Pipeline {
         if (newBandRows != null) newBandRows.unpersist(false)
         newUrls.unpersist(false); staleUrls.unpersist(false)
         if (!(seedUrls eq newUrls)) seedUrls.unpersist(false)
-        delta.unpersist(false); members.unpersist(false)
+        delta.unpersist(false); eg.members.unpersist(false)
         Candidates.cleanupCaches(); Fingerprints.cleanupCaches()
         (res, inc, state)
     }
@@ -431,10 +392,6 @@ object Pipeline {
       case None => pages
     }
 
-  /** The shared relational core: exact-group -> candidates -> scoring ->
-    * union-find -> keeper election. `pairs` and `clusters` come back
-    * MATERIALIZED and lineage-truncated (see the checkpoint note below);
-    * `signatures` stays a lazy persisted frame. */
   /** Label the jobs of `body` in the Spark UI / listeners (guide §1.5);
     * restores the caller's description so Bench sweep labels survive. */
   private[graft] def labeled[T](spark: org.apache.spark.sql.SparkSession,
@@ -445,10 +402,15 @@ object Pipeline {
     try body finally sc.setJobDescription(prev)
   }
 
-  private def downstream(sigs: DataFrame, pages: DataFrame, cfg: GraftConfig,
-                         persistLevel: StorageLevel,
-                         pre: Option[ExactGroups] = None): Result = {
-    val ps0 = pairStage(sigs, pages, cfg, persistLevel, pre)
+  /** The shared relational core: candidates -> scoring -> [exact verify /
+    * substring pass] -> union-find -> keeper election over the caller's
+    * exact groups. `pairs` and `clusters` come back MATERIALIZED and
+    * lineage-truncated (see the checkpoint note below); `signatures` stays a
+    * lazy persisted frame. */
+  private def downstream(sigs: DataFrame, eg: ExactGroups, pages: DataFrame,
+                         cfg: GraftConfig): Result = {
+    // candidates + scoring (representative level); lazy up to the checkpoint
+    val scored = Pairs.score(Candidates.candidatePairs(eg.reps, cfg), cfg)
     // Lineage truncation at the result boundary. The candidate stage is a
     // DAG of self-joins and unions over the same subtrees (band self-join,
     // heavy/light routing, payload join-back, verify re-joins); expressed as
@@ -471,129 +433,42 @@ object Pipeline {
     // driver planning gaps before the pairs checkpoint at 8k docs. Over a
     // LogicalRDD leaf each pass's plan is O(1); one extra pair-volume
     // checkpoint materialization per enabled pass buys it.
-    val spark0 = sigs.sparkSession
-    val pairsBase = labeled(spark0, "graft: pairs checkpoint") { ps0.pairs.localCheckpoint() }
+    val spark = sigs.sparkSession
+    val pairsBase = labeled(spark, "graft: pairs checkpoint") { scored.localCheckpoint() }
     val pairsVerified =
       if (!cfg.exactVerify) pairsBase
-      else labeled(spark0, "graft: exact verify") {
-        Pairs.exactVerify(pairsBase, ps0.reps, cfg).localCheckpoint()
+      else labeled(spark, "graft: exact verify") {
+        Pairs.exactVerify(pairsBase, eg.reps, cfg).localCheckpoint()
       }
     val pairs =
       if (!cfg.substringPass) pairsVerified
-      else labeled(spark0, "graft: substring pass") {
+      else labeled(spark, "graft: substring pass") {
         Pairs.substringPass(pairsVerified, pages, cfg).localCheckpoint()
       }
-    val ps = ps0.copy(pairs = pairs)
-    val clusters = labeled(spark0, "graft: clustering") {
-      clusterStage(ps, persistLevel).localCheckpoint()
+    // union-find (EAGER — iterative) over the matched pairs; pairs carry
+    // dictionary ids, so its rounds shuffle longs
+    val clusters = labeled(spark, "graft: clustering") {
+      expandAndElect(eg, Clusters.assignByIds(eg.reps.select("url"),
+        pairs.filter(col("matched")))).localCheckpoint()
     }
     // pairs and clusters are now LogicalRDD leaves: nothing references the
     // candidate layer's internal caches (band relation, slim projection)
     // any more — release them, or an incremental chain accumulates one band
-    // relation per increment. members likewise only fed clusterStage.
+    // relation per increment. members likewise only fed the clustering.
     Candidates.cleanupCaches(); Fingerprints.cleanupCaches()
-    ps.members.unpersist(false)
+    eg.members.unpersist(false)
 
-    // one driver job for every remaining run metric (S14): per-frame
-    // aggregates are exploded to (metric, value) rows and unioned, so one
-    // collect scans the persisted intermediates once — no per-phase
-    // .head()/count() fan-out
-    val metrics =
-      kvMetrics(sigs.agg(
-        count(lit(1)).as("signatures"),
-        coalesce(sum(when(col("reject_reason").isNotNull, 1L)), lit(0L)).as("rejected"),
-        coalesce(sum(when(!col("extract_ok"), 1L)), lit(0L)).as("extract_mismatches")))
-        .unionByName(kvMetrics(ps.reps.agg(count(lit(1)).as("exact_groups"))))
-        .unionByName(kvMetrics(ps.pairs.agg(
-          count(lit(1)).as("candidate_pairs"),
-          coalesce(sum(when(col("matched"), 1L)), lit(0L)).as("matched_pairs"))))
-        .unionByName(kvMetrics(clusters.groupBy("cluster_id").count().agg(
-          coalesce(sum(when(col("count") > 1, 1L)), lit(0L)).as("dup_clusters"),
-          coalesce(sum(when(col("count") > 1, col("count"))), lit(0L)).as("docs_in_dup_clusters"))))
-
-    Result(sigs, ps.rejects, ps.pairs, clusters, metrics)
+    Result(sigs, eg.rejects, pairs, clusters, runMetrics(sigs, eg.reps, pairs, clusters))
   }
-
-  /** profile = true: the round-1 behavior — a materializing action per phase
-    * so wall-time attributes to fingerprint / exact-group / candidates /
-    * clustering. Costs ~6 extra driver jobs; for tuning runs only. */
-  private def downstreamProfiled(sigs: DataFrame, nSigs: Long, tFingerprint: Long,
-                                 pages: DataFrame, cfg: GraftConfig,
-                                 persistLevel: StorageLevel): Result = {
-    val spark = sigs.sparkSession
-    import spark.implicits._
-
-    var tMark = System.nanoTime()
-    def phaseMs(): Long = {
-      val now = System.nanoTime()
-      val ms = (now - tMark) / 1000000L
-      tMark = now
-      ms
-    }
-
-    val ps0 = pairStage(sigs, pages, cfg, persistLevel)
-    val withVerify =
-      if (cfg.exactVerify) Pairs.exactVerify(ps0.pairs, ps0.reps, cfg) else ps0.pairs
-    val ps = ps0.copy(pairs =
-      if (cfg.substringPass) Pairs.substringPass(withVerify, pages, cfg)
-      else withVerify)
-    ps.pairs.persist(persistLevel)
-    val repCount = ps.reps.count()
-    val tExactGroup = phaseMs()
-
-    val pairAgg = ps.pairs.agg(
-      count(lit(1)),
-      coalesce(sum(when(col("matched"), 1L)), lit(0L))).head()
-    val tCandidates = phaseMs()
-
-    val clusters = clusterStage(ps, persistLevel).persist(persistLevel)
-    val cluAgg = clusters.groupBy("cluster_id").count()
-      .agg(
-        coalesce(sum(when(col("count") > 1, 1L)), lit(0L)),
-        coalesce(sum(when(col("count") > 1, col("count"))), lit(0L))).head()
-    val tClustering = phaseMs()
-
-    val sigAgg = sigs.agg(
-      coalesce(sum(when(col("reject_reason").isNotNull, 1L)), lit(0L)),
-      coalesce(sum(when(!col("extract_ok"), 1L)), lit(0L))).head()
-
-    val metrics = Seq(
-      ("signatures", nSigs),
-      ("rejected", sigAgg.getLong(0)),
-      ("extract_mismatches", sigAgg.getLong(1)),
-      ("exact_groups", repCount),
-      ("candidate_pairs", pairAgg.getLong(0)),
-      ("matched_pairs", pairAgg.getLong(1)),
-      ("dup_clusters", cluAgg.getLong(0)),
-      ("docs_in_dup_clusters", cluAgg.getLong(1)),
-      ("phase_fingerprint_ms", tFingerprint),
-      ("phase_exact_group_ms", tExactGroup),
-      ("phase_candidates_ms", tCandidates),
-      ("phase_clustering_ms", tClustering)
-    ).toDF("metric", "value")
-
-    // same release discipline as downstream(): pairs and clusters are fully
-    // materialized by the per-phase aggregation actions above, so the
-    // candidate layer's registered persists and the members frame can go —
-    // without this, profiled runs pinned them for the session lifetime (or
-    // until an unrelated later run's cleanup yanked them mid-consumer)
-    Candidates.cleanupCaches(); Fingerprints.cleanupCaches()
-    ps.members.unpersist(false)
-
-    Result(sigs, ps.rejects, ps.pairs, clusters, metrics)
-  }
-
-  private final case class PairStage(rejects: DataFrame, valid: DataFrame,
-                                     members: DataFrame, reps: DataFrame,
-                                     pairs: DataFrame)
 
   private final case class ExactGroups(rejects: DataFrame, valid: DataFrame,
                                        members: DataFrame, reps: DataFrame)
 
   /** Exact-duplicate pre-grouping (one representative = min url per distinct
-    * text) — the ONE definition of the grouping rule, shared by pairStage
-    * and runIncrementalScoped. members and reps come back persisted. */
-  private def exactGroups(sigs: DataFrame, persistLevel: StorageLevel): ExactGroups = {
+    * text) — the ONE definition of the grouping rule: every entry point
+    * derives it once and hands it to downstream (the scoped increment also
+    * reads it directly). members and reps come back persisted. */
+  private def exactGroups(sigs: DataFrame): ExactGroups = {
     val rejects = sigs.filter(col("reject_reason").isNotNull)
       .select(col("url"), col("reject_reason").as("reason"))
     val valid = sigs.filter(col("reject_reason").isNull)
@@ -605,49 +480,40 @@ object Pipeline {
     val members = valid.select(col("url"), col("text_md5"))
       .join(groups, "text_md5")
       .select(col("url"), col("rep_url"))
-      .persist(persistLevel)
+      .persist(storage)
     val reps = valid.join(
       groups.select(col("rep_url").as("url")), Seq("url"), "left_semi")
-      .persist(persistLevel)
+      .persist(storage)
     ExactGroups(rejects, valid, members, reps)
   }
 
-  /** Narrow + candidate half: rejects, exact-dup grouping, LSH candidates,
-    * scored pairs. Lazy — nothing here triggers a job. */
-  private def pairStage(sigs: DataFrame, pages: DataFrame, cfg: GraftConfig,
-                        persistLevel: StorageLevel,
-                        pre: Option[ExactGroups] = None): PairStage = {
-    val eg = pre.getOrElse(exactGroups(sigs, persistLevel))
-    val rejects = eg.rejects
-    val valid = eg.valid
-    val members = eg.members
-    val reps = eg.reps
-
-    // candidates + scoring (representative level). The exact-verify and
-    // substring passes are NOT applied here (round-6): downstream() runs
-    // them over the checkpointed pairs leaf so their plans stay O(1) — see
-    // the checkpoint note there.
-    val cand = Candidates.candidatePairs(reps, cfg)
-    val scoredBase = Pairs.score(cand, cfg)
-    // NOT persisted/checkpointed here: downstream() truncates lineage with
-    // an eager localCheckpoint, downstreamProfiled() persists lazily so its
-    // phase timers still attribute the candidate work to the right marker
-    PairStage(rejects, valid, members, reps, scoredBase)
-  }
-
-  /** Clustering half: union-find (EAGER — iterative), member expansion,
-    * keeper election. */
-  private def clusterStage(ps: PairStage, persistLevel: StorageLevel): DataFrame = {
-    val matched = ps.pairs.filter(col("matched"))
-    // pairs carry dictionary ids: the union-find rounds shuffle longs
-    val repClusters = Clusters.assignByIds(ps.reps.select("url"), matched)
-    val memberClusters = ps.members
-      .join(repClusters.withColumnRenamed("url", "rep_url"), "rep_url")
+  /** Rep-level (url, cluster_id) assignment -> every member of each exact
+    * group, with its keeper-election columns -> keepers elected. */
+  private def expandAndElect(eg: ExactGroups, repAssign: DataFrame): DataFrame = {
+    val memberClusters = eg.members
+      .join(repAssign.withColumnRenamed("url", "rep_url"), "rep_url")
       .select(col("url"), col("cluster_id"))
-    val clustered = memberClusters
-      .join(ps.valid.select(col("url"), col("size"), col("text_len"), col("warc_ts")), "url")
-    Clusters.electKeepers(clustered)
+    Clusters.electKeepers(memberClusters
+      .join(eg.valid.select(col("url"), col("size"), col("text_len"), col("warc_ts")), "url"))
   }
+
+  /** The run metrics (S14) shared by every entry point, in ONE driver job:
+    * per-frame aggregates are exploded to (metric, value) rows and unioned,
+    * so one collect scans the persisted intermediates once — no per-phase
+    * .head()/count() fan-out. */
+  private def runMetrics(sigs: DataFrame, reps: DataFrame, pairs: DataFrame,
+                         clusters: DataFrame): DataFrame =
+    kvMetrics(sigs.agg(
+      count(lit(1)).as("signatures"),
+      coalesce(sum(when(col("reject_reason").isNotNull, 1L)), lit(0L)).as("rejected"),
+      coalesce(sum(when(!col("extract_ok"), 1L)), lit(0L)).as("extract_mismatches")))
+      .unionByName(kvMetrics(reps.agg(count(lit(1)).as("exact_groups"))))
+      .unionByName(kvMetrics(pairs.agg(
+        count(lit(1)).as("candidate_pairs"),
+        coalesce(sum(when(col("matched"), 1L)), lit(0L)).as("matched_pairs"))))
+      .unionByName(kvMetrics(clusters.groupBy("cluster_id").count().agg(
+        coalesce(sum(when(col("count") > 1, 1L)), lit(0L)).as("dup_clusters"),
+        coalesce(sum(when(col("count") > 1, col("count"))), lit(0L)).as("docs_in_dup_clusters"))))
 
   /** Explode a one-row aggregate frame into (metric, value) rows — keeps the
     * whole metrics surface inside one job when unioned. */

@@ -179,6 +179,60 @@ class VerifyModesSpec extends AnyFunSuite {
     // substring matches carry the measured overlap
     assert(viaSub.filter(col("overlap_len") < cfg.minSubstringOverlap).count() === 0)
   }
+
+  test("substring pass reuses the fingerprint stage's url-dedup caches: no " +
+      "plan is persisted twice, no dedup frame is materialized twice") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // both stages dedup the same `pages`: the cache manager refuses a second
+    // entry for a cached plan and says so, so its warning is the observable
+    // of a double persist; a second materialization shows as extra
+    // url-dedup jobs over what the fingerprint stage alone runs
+    val cacheLogName = "org.apache.spark.sql.execution.CacheManager"
+    val refused = new AtomicInteger
+    val appender = new AbstractAppender("double-persist", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("already cached"))
+          refused.incrementAndGet()
+    }
+    appender.start()
+    Configurator.setLevel(cacheLogName, Level.WARN)
+    val cacheLog = LogManager.getLogger(cacheLogName).asInstanceOf[CoreLogger]
+    val dedupJobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).map(_.getProperty("spark.job.description"))
+              .exists(d => d != null && d.startsWith("graft: url-dedup")))
+          dedupJobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    val pages = CorpusSpark.pages(spark, 300L, parts = 4, seed = 42L)
+    def dedupJobsOf(cfg: GraftConfig): Int = {
+      org.apache.spark.graftclock.TaskClock.drain(sc)
+      dedupJobs.set(0)
+      Pipeline.run(pages, cfg).metrics.collect()
+      org.apache.spark.graftclock.TaskClock.drain(sc)
+      dedupJobs.get()
+    }
+    cacheLog.addAppender(appender)
+    sc.addSparkListener(listener)
+    try {
+      val fingerprintOnly = dedupJobsOf(GraftConfig())
+      val withSubstring = dedupJobsOf(GraftConfig(exactVerify = true, substringPass = true))
+      assert(refused.get() === 0, "a cached plan was persisted a second time")
+      assert(fingerprintOnly > 0)
+      assert(withSubstring === fingerprintOnly,
+        "the substring pass re-materialized the url-dedup frames")
+    } finally {
+      sc.removeSparkListener(listener)
+      cacheLog.removeAppender(appender)
+    }
+  }
 }
 
 /** Heavy-key routing strategies: star generation and the salted triangle

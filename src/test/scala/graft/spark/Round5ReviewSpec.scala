@@ -64,7 +64,7 @@ class Round5ReviewSpec extends AnyFunSuite {
     val pages = spark.createDataset(Seq(
       PageRow("http://x.test/a", new Timestamp(0L), Array[Byte](1), "t", "en")))
       .toDF().withColumn("text", boom(col("text")))
-    // pairStage's no-job contract: building the dedup plan over a poisoned
+    // the lazy dedup's no-job contract: building the dedup plan over a poisoned
     // input must NOT evaluate it (the old dupKeys.isEmpty probe did)
     val planned = Fingerprints.dropCaseDuplicateUrls(pages)
     intercept[Throwable](planned.collect())

@@ -55,6 +55,44 @@ class IncrementalScopedSpec extends AnyFunSuite {
       "union-find input must be bounded by the affected subgraph, not the corpus")
     assert(metric(r2, "untouched_clusters") > 0L,
       "unaffected clusters must pass through without re-clustering")
+
+    // one metrics builder serves both paths: every one-shot row is equal,
+    // and the scoped run adds exactly the three splice rows
+    def metricMap(res: Pipeline.Result): Map[String, Long] = {
+      val rows = res.metrics.collect().map(r => r.getString(0) -> r.getLong(1))
+      assert(rows.map(_._1).distinct.length === rows.length, "duplicate metric rows")
+      rows.toMap
+    }
+    val shared = Set("signatures", "rejected", "extract_mismatches", "exact_groups",
+      "candidate_pairs", "matched_pairs", "dup_clusters", "docs_in_dup_clusters")
+    val splice = Set("recluster_edges", "affected_clusters", "untouched_clusters")
+    val scopedM = metricMap(r2)
+    val oneShotM = metricMap(oneShot)
+    assert(oneShotM.keySet === shared)
+    assert(scopedM.keySet === shared ++ splice)
+    assert(scopedM.filter { case (k, _) => shared(k) } === oneShotM)
+  }
+
+  test("incremental cap invariance: under salted-triangle routing the delta " +
+      "path's no-heavy short-circuit yields the heavy-routed pairs and clusters") {
+    // the one-shot cap-invariance spec (HeavyKeyStrategySpec) never
+    // reaches the Some(nu) delta branch of candidatePairs; a cap of 5 fires
+    // the heavy routing there, an unbounded cap takes the no-heavy exit
+    val base = GraftConfig(heavyKeyStar = false, heavyDetectSampleFrac = -1.0)
+    def chain(c: GraftConfig) = {
+      val store = tmpStore()
+      val (_, _, st1) = Pipeline.runIncrementalScoped(
+        CorpusSpark.pages(spark, 600L, 4, c.seed), store, None, c)
+      val prevPairs = pairRows(st1.pairs).toSet
+      val (r2, _, _) = Pipeline.runIncrementalScoped(
+        CorpusSpark.pages(spark, 800L, 4, c.seed), store, Some(st1), c)
+      (pairRows(r2.pairs).filterNot(prevPairs), clusterRows(r2.clusters))
+    }
+    val (deltaHeavy, clustersHeavy) = chain(base.copy(heavyBandKeyCap = 5))
+    val (deltaFast, clustersFast) = chain(base.copy(heavyBandKeyCap = Int.MaxValue))
+    assert(deltaFast.nonEmpty)
+    assert(deltaFast === deltaHeavy)
+    assert(clustersFast === clustersHeavy)
   }
 
   test("re-crawl changes content: stale pairs dropped, affected cluster re-solved") {
