@@ -262,14 +262,18 @@ object Clusters {
         Seq("url"), "left")
       .withColumn("cluster_id", coalesce(col("cluster_id"), col("url")))
 
-    // scale evidence (cheap: subEdges is persisted above, so this count
-    // reads cached blocks; the aggregates run at affected volume)
-    val nEdges = subEdges.count()
-    val nAffected = affectedRoots.count()
-    val nUntouched = untouched.select("cluster_id").distinct().count()
+    // scale evidence in ONE aggregate job (cheap: subEdges and affectedRoots
+    // are persisted above, so it reads cached blocks; the untouched count
+    // runs at assignment volume). An assignment's cluster_id is never null
+    // (every generation's assign coalesces it to the url), so count_distinct
+    // counts every untouched cluster.
+    val n = subEdges.agg(count(lit(1)))
+      .crossJoin(affectedRoots.agg(count(lit(1))))
+      .crossJoin(untouched.agg(count_distinct(col("cluster_id"))))
+      .head()
     affectedRoots.unpersist(blocking = false)
     subEdges.unpersist(blocking = false)
-    Splice(assign, nEdges, nAffected, nUntouched)
+    Splice(assign, n.getLong(0), n.getLong(1), n.getLong(2))
   }
 
   /** Keeper election (SURVEY §2.5 W1): the reference highlights the "better"

@@ -46,7 +46,7 @@ final case class SignatureRow(
 object Fingerprints {
 
   /** Frames persisted internally by [[urlDedup]] (the slim (url, warc_ts)
-    * key aggregate). Same ownership contract as Candidates.persistedFrames:
+    * decision frame). Same ownership contract as Candidates.persistedFrames:
     * the pipeline releases them via [[cleanupCaches]] once its results are
     * lineage-truncated; until then they back every dedup decision branch.
     * Re-materialization after release is correct (just recomputes). */
@@ -182,10 +182,10 @@ object Fingerprints {
   def dropRecrawlDuplicateUrls(pages: DataFrame): DataFrame =
     urlDedup(pages, caseRule = false, eagerKeys = false)
 
-  /** [[dropRecrawlDuplicateUrls]] with the shared key aggregate materialized
-    * NOW (one job): for eager call sites (Resume's commit path) where the
-    * first downstream action fans out into concurrent AQE stage jobs that
-    * would otherwise race the unpopulated keys cache. The public entry
+  /** [[dropRecrawlDuplicateUrls]] with its decision frame materialized NOW
+    * (one job): for eager call sites (Resume's commit path) where the first
+    * downstream action fans out into concurrent AQE stage jobs that would
+    * otherwise race the unpopulated decisions cache. The public entry
     * points stay lazy (plan-construction contract, Round5ReviewSpec). */
   private[graft] def dropRecrawlDuplicateUrlsEager(pages: DataFrame): DataFrame =
     urlDedup(pages, caseRule = false, eagerKeys = true)
@@ -195,97 +195,118 @@ object Fingerprints {
     * election decision — recency rank, case rank, duplicate-key detection —
     * is computed once in a slim (url, warc_ts) key space; the full-payload
     * `pages` relation is consumed by exactly two single-pass branches (the
-    * chained anti-joins and the rare-key collapse aggregate), never by a
-    * payload window and never re-derived per consumer. A previous cut let
-    * rule 2 re-consume the rule-1 output twice, tripling full-payload cache
-    * reads of a ~10 KB/row relation on a bandwidth-bound box. */
+    * broadcast anti-join and the rare-key collapse aggregate,
+    * [[applyUrlElection]]), never by a payload window and never re-derived
+    * per consumer. A previous cut let rule 2 re-consume the rule-1 output
+    * twice, tripling full-payload cache reads of a ~10 KB/row relation on a
+    * bandwidth-bound box. */
   private def urlDedup(pages: DataFrame, caseRule: Boolean,
                        eagerKeys: Boolean): DataFrame = {
-    val dataCols = pages.columns.toSeq.filter(c => c != "url" && c != "warc_ts")
-    // The slim key aggregate feeds EVERY decision branch (recrawl ranking,
-    // case ranking, duplicate-key detection), and each branch is referenced
-    // from both payload passes below — as a logical TREE that is ~6 copies
-    // of this subtree, and the broadcast builds materialize them as ~6
-    // concurrent jobs that each re-scan `pages` (measured: a 6-job ladder of
-    // 256-task stages owning the sigs-build wall at 60k docs). Persist +
-    // eager-materialize once; every branch then reads 60k slim cached rows.
-    // Released by the pipeline via cleanupCaches (Candidates discipline).
+    // The decision frame is broadcast from BOTH payload branches, and as a
+    // logical TREE each reference re-derives it: the broadcast builds ran
+    // as concurrent jobs that each re-scanned `pages` (measured: a 6-job
+    // ladder of 256-task stages owning the sigs-build wall at 60k docs).
+    // Eager mode persists + materializes it once (one job; its slim key
+    // aggregate is computed inside that job and referenced nowhere else);
+    // released by the pipeline via cleanupCaches (Candidates discipline).
     // eagerKeys=false keeps plan construction side-effect-free (the
     // Round5ReviewSpec contract): persist() alone already optimizes the
     // cached plan, which EVALUATES LocalRelation projections — so the lazy
-    // entry points skip the persist too and keep the exact pre-round-6 plan.
-    val keys0 = pages.groupBy(col("url"), col("warc_ts"))
-      .agg(count(lit(1)).as("__copies"))
-    val keys =
-      if (!eagerKeys) keys0 else persistOnce(keys0, "graft: url-dedup keys")
-    val wUrl = Window.partitionBy(col("url")).orderBy(col("warc_ts").desc)
-    val ranked = keys.withColumn("__rn", row_number().over(wUrl))
-    val winners = ranked.filter(col("__rn") === 1)
-    val recrawlLosers = ranked.filter(col("__rn") > 1).select("url", "warc_ts")
-    // rule 2 runs among the per-url winner KEYS — after rule-1 collapse every
-    // url holds exactly the (url, max warc_ts) key, so the slim winner set IS
-    // the rule-1 output's key set and the case election never needs to touch
-    // (or re-derive) the payload relation
-    val losers0 =
-      if (!caseRule) recrawlLosers
-      else {
-        val wCase = Window.partitionBy(lower(col("url")))
-          .orderBy(col("warc_ts"), col("url"))
-        val caseLosers = winners.withColumn("__rc", row_number().over(wCase))
-          .filter(col("__rc") > 1).select("url", "warc_ts")
-        recrawlLosers.union(caseLosers)
-      }
-    val dupKeys0 = winners.filter(col("__copies") > 1).select("url", "warc_ts")
-    // eager mode also pins the two (tiny) decision outputs in ONE job: each
-    // is broadcast from BOTH payload branches, and the broadcast builds
-    // re-ran the ranking windows per referencing copy otherwise
-    val (losers, dupKeys) =
-      if (!eagerKeys) (losers0, dupKeys0)
-      else {
-        val pinned = persistOnce(losers0.withColumn("__t", lit(0))
-          .unionByName(dupKeys0.withColumn("__t", lit(1))), "graft: url-dedup decisions")
-        (pinned.filter(col("__t") === 0).select("url", "warc_ts"),
-          pinned.filter(col("__t") === 1).select("url", "warc_ts"))
-      }
+    // entry points skip the persist too.
+    val decisions0 = electUrlKeys(urlKeysOf(pages), caseRule)
+    val decisions =
+      if (!eagerKeys) decisions0 else persistOnce(decisions0, "graft: url-dedup decisions")
+    // the broadcast hints are LOAD-BEARING (round-6 measurement): this dedup
+    // is the child of the persisted signatures frame, and AQE does not
+    // re-plan join strategies inside a cached-plan build — without the hints
+    // the planner kept SortMergeJoin and the full ~10 KB/row payload
+    // relation was exchanged + sorted per join branch (5 payload exchanges,
+    // 7 concurrent 256-task stages, ~60% of a 60k-doc pipeline's wall).
+    applyUrlElection(pages, decisions, collapse = true)
+  }
 
-    // payload pass 1: both anti-joins chain inside one scan stage. The
-    // broadcast hints are LOAD-BEARING (round-6 measurement): this dedup is
-    // the child of the persisted signatures frame, and AQE does not re-plan
-    // join strategies inside a cached-plan build — without the hints the
-    // planner kept SortMergeJoin and the full ~10 KB/row payload relation
-    // was exchanged + sorted per join branch (5 payload exchanges, 7
-    // concurrent 256-task stages, ~60% of a 60k-doc pipeline's wall). Loser
-    // and dup-key sets are keys of re-crawled/case-variant urls — rare by
-    // the ingest contract; a pathological batch fails loudly at the 8 GB
-    // broadcast cap rather than silently reintroducing the payload shuffle.
-    val clean = pages.join(broadcast(losers), Seq("url", "warc_ts"), "left_anti")
-      .join(broadcast(dupKeys), Seq("url", "warc_ts"), "left_anti")
-    // payload pass 2 (empty in well-formed input): collapse identical-key
-    // copies to ONE row via an aggregate — the winner is the lexicographic
-    // minimum over (xxhash64 of every non-key column, then the columns
-    // themselves), so the survivor is a pure function of the data under any
-    // partitioning, hash-collision ties included; byte-identical copies
-    // compare equal and min() keeps exactly one
-    val packedFields = {
-      val fs = dataCols.zipWithIndex.map { case (c, i) => xxhash64(col(c)).as(s"__h$i") } ++
-        dataCols.map(c => col(c).as(c))
-      if (fs.isEmpty) Seq(lit(0L).as("__h0")) else fs
+  /** The slim key aggregate every url election runs on: one row per
+    * distinct (url, warc_ts) with its record count `__copies`, clustered by
+    * `__lu` = lower(url). Both election rules partition by a superset of
+    * `__lu` (rule 1 by (__lu, url), rule 2 by __lu), so this ONE slim
+    * shuffle serves the aggregate and both ranking windows. */
+  private[graft] def urlKeysOf(rows: DataFrame): DataFrame =
+    rows.select(col("url"), col("warc_ts"), lower(col("url")).as("__lu"))
+      .repartition(col("__lu"))
+      .groupBy(col("__lu"), col("url"), col("warc_ts"))
+      .agg(count(lit(1)).as("__copies"))
+
+  /** THE url election — rule 1 (per exact url, the newest warc_ts wins) and,
+    * with `caseRule`, rule 2 (among the rule-1 winners, the earliest
+    * (warc_ts, url) per lower(url) wins) — computed on [[urlKeysOf]] keys
+    * only, never on a payload row. The one-shot dedup ([[urlDedup]]) and the
+    * incremental live view ([[Resume.liveView]]) both call it, so the two
+    * paths cannot elect different survivors. Rule 2 ranks the rule-1
+    * winners of each lower(url) first (a loser's rank is irrelevant: it
+    * leaves anyway), so one window pass over the keys decides both rules.
+    *
+    * Returns the keys whose rows do not survive as they are, tagged `__t`:
+    * 0 for losers (either rule), 1 for surviving keys held by more than one
+    * record (copies that [[applyUrlElection]] collapses to one row). Lazy:
+    * no job runs here. */
+  private[graft] def electUrlKeys(keys: DataFrame, caseRule: Boolean): DataFrame = {
+    val ranked = keys.withColumn("__rn", row_number().over(
+      Window.partitionBy(col("__lu"), col("url")).orderBy(col("warc_ts").desc)))
+    val (withRanks, lost) =
+      if (!caseRule) (ranked, col("__rn") > 1)
+      else (ranked.withColumn("__rc", row_number().over(Window.partitionBy(col("__lu"))
+          .orderBy(col("__rn") > 1, col("warc_ts"), col("url")))),
+        col("__rn") > 1 || col("__rc") > 1)
+    withRanks
+      .select(col("url"), col("warc_ts"),
+        when(lost, 0).when(col("__copies") > 1, 1).as("__t"))
+      .filter(col("__t").isNotNull)
+  }
+
+  /** Applies an [[electUrlKeys]] decision frame to the full rows. Payload
+    * pass 1: losers and duplicated keys leave in ONE broadcast anti-join, so
+    * no payload column crosses a shuffle. Decision keys are keys of
+    * re-crawled/case-variant urls — rare by the ingest contract; a
+    * pathological batch fails loudly at the 8 GB broadcast cap rather than
+    * silently reintroducing the payload shuffle.
+    *
+    * Payload pass 2, only with `collapse` (empty in well-formed input):
+    * collapse identical-key copies to ONE row via an aggregate — the winner
+    * is the lexicographic minimum over (xxhash64 of every non-key column,
+    * then the columns themselves), so the survivor is a pure function of the
+    * data under any partitioning, hash-collision ties included;
+    * byte-identical copies compare equal and min() keeps exactly one. A
+    * caller that knows no key is duplicated passes `collapse = false` and
+    * skips the second scan. */
+  private[graft] def applyUrlElection(rows: DataFrame, decisions: DataFrame,
+                                      collapse: Boolean): DataFrame = {
+    // the USING join moves the keys to the front; keep the caller's order
+    val clean = rows.join(broadcast(decisions.select("url", "warc_ts")),
+      Seq("url", "warc_ts"), "left_anti").select(rows.columns.map(col): _*)
+    if (!collapse) clean
+    else {
+      val dataCols = rows.columns.toSeq.filter(c => c != "url" && c != "warc_ts")
+      val packedFields = {
+        val fs = dataCols.zipWithIndex.map { case (c, i) => xxhash64(col(c)).as(s"__h$i") } ++
+          dataCols.map(c => col(c).as(c))
+        if (fs.isEmpty) Seq(lit(0L).as("__h0")) else fs
+      }
+      val collapsed = rows
+        .join(broadcast(decisions.filter(col("__t") === 1).select("url", "warc_ts")),
+          Seq("url", "warc_ts"), "left_semi")
+        .groupBy(col("url"), col("warc_ts"))
+        .agg(min(struct(packedFields: _*)).as("__w"))
+        .select(col("url") +: col("warc_ts") +:
+          dataCols.map(c => col("__w").getField(c).as(c)): _*)
+      clean.unionByName(collapsed.select(rows.columns.map(col): _*))
     }
-    val packed = struct(packedFields: _*)
-    val collapsed = pages.join(broadcast(losers), Seq("url", "warc_ts"), "left_anti")
-      .join(broadcast(dupKeys), Seq("url", "warc_ts"), "left_semi")
-      .groupBy(col("url"), col("warc_ts"))
-      .agg(min(packed).as("__w"))
-      .select(col("url") +: col("warc_ts") +:
-        dataCols.map(c => col("__w").getField(c).as(c)): _*)
-    clean.unionByName(collapsed.select(pages.columns.map(col): _*))
   }
 
   /** Full url recency/case dedup — rule 1 ([[dropRecrawlDuplicateUrls]])
-    * then rule 2, in the SAME order as the cross-increment live view in
-    * [[Resume.incrementalFingerprints]] so the surviving row per url is
-    * independent of how a crawl is split into batches (batch-split
-    * invariance, pinned in KernelHardeningSpec):
+    * then rule 2, through the SAME election ([[electUrlKeys]]) as the
+    * cross-increment live view in [[Resume.liveView]], so the surviving row
+    * per url is independent of how a crawl is split into batches
+    * (batch-split invariance, pinned in KernelHardeningSpec):
     *
     *  2. the reference's case-insensitive distinct — the O(n^2) scan over
     *     `_everyVideo` (mainwindow.cpp:217-225): among the per-url winners,

@@ -216,7 +216,25 @@ object Pairs {
     * source pages; overlap >= cfg.minSubstringOverlap chars marks the pair
     * matched via='substring'. The expensive O((|a|+|b|) log) kernel runs only
     * on this narrow, gated subset, inside partitions. */
-  def substringPass(scored: DataFrame, pages: DataFrame, cfg: GraftConfig): DataFrame = {
+  def substringPass(scored: DataFrame, pages: DataFrame, cfg: GraftConfig): DataFrame =
+    checkSubstrings(scored, substringText(pages), cfg)
+
+  /** The substring pass's text source: `pages` deduped with the SAME rule
+    * as the fingerprint path. Raw pages may carry a url twice (re-crawl in
+    * one batch), and a multi-row url would fan every pair touching it into
+    * N rows with possibly contradictory verdicts. A bare (url, text) source
+    * without warc_ts is taken as already one-row-per-url. Eager-keys dedup:
+    * the pass runs from eager contexts (downstream post-checkpoint, the
+    * scoped increment) where materializing the shared key aggregate up
+    * front avoids the concurrent-stage re-scan ladder. */
+  private[graft] def substringText(pages: DataFrame): DataFrame =
+    if (pages.columns.contains("warc_ts")) Fingerprints.dropCaseDuplicateUrlsEager(pages)
+    else pages
+
+  /** [[substringPass]] over a text source that is already one row per url
+    * ([[substringText]], or the fingerprint stage's own deduped pages). */
+  private[graft] def checkSubstrings(scored: DataFrame, src: DataFrame,
+                                     cfg: GraftConfig): DataFrame = {
     val lcsUdf = udf((a: String, b: String) =>
       SuffixOverlap.longestCommonSubstring(a, b))
 
@@ -224,21 +242,10 @@ object Pairs {
     val untouched = scored.filter(!col("from_ss") || col("matched"))
       .withColumn("overlap_len", lit(null).cast("int"))
 
-    // LEFT joins: a candidate whose text is absent from `pages` (e.g. an
+    // LEFT joins: a candidate whose text is absent from `src` (e.g. an
     // incremental run where `pages` is only the current batch while pairs
     // span the full live store) is RETAINED as unmatched with a null
     // overlap_len — an inner join would silently drop the scored pair.
-    // The text source is deduped with the SAME rule as the fingerprint path:
-    // raw pages may carry a url twice (re-crawl in one batch), and a
-    // multi-row url would fan every pair touching it into N rows with
-    // possibly contradictory verdicts. A bare (url, text) source without
-    // warc_ts is taken as already one-row-per-url.
-    // eager-keys dedup: substringPass runs from eager contexts (downstream
-    // post-checkpoint, the scoped increment) where materializing the shared
-    // key aggregate up front avoids the concurrent-stage re-scan ladder
-    val src =
-      if (pages.columns.contains("warc_ts")) Fingerprints.dropCaseDuplicateUrlsEager(pages)
-      else pages
     val txtA = src.select(col("url").as("url_a"), col("text").as("text_a"))
     val txtB = src.select(col("url").as("url_b"), col("text").as("text_b"))
     val checked = candidates

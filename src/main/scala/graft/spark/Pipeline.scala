@@ -56,8 +56,13 @@ object Pipeline {
     val scanned2 =
       if (scanned.rdd.getNumPartitions > targetParts) scanned.coalesce(targetParts)
       else scanned
+    // the ONE deduped page plan: fingerprinting reads it, and so does the
+    // substring pass's text join — deduping the raw `pages` there again ran
+    // the whole url dedup a second time whenever the plans differed
+    // (coalesced or lang-filtered input)
+    val deduped = Fingerprints.dropCaseDuplicateUrlsEager(scanned2)
     val sigs = Fingerprints.pruneForMode(
-      Fingerprints.fromPages(scanned2, cfg).toDF(), cfg).persist(storage)
+      Fingerprints.fromPagesPreDeduped(deduped, cfg), cfg).persist(storage)
     // Materialize the signature cache ONCE before the downstream fan-out
     // (guide §2.4 / the bnds.count() discipline in Candidates): the first
     // action below it (the dictionary sort) fans out into ~8 concurrent
@@ -67,7 +72,7 @@ object Pipeline {
     // fingerprint expression over the corpus (measured as an 8-job ladder
     // owning 20.1 s of a 39 s 60k-doc run; one populate pass costs ~2 s).
     labeled(spark, "graft: fingerprint materialize") { sigs.count() }
-    downstream(sigs, exactGroups(sigs), pages, cfg)
+    downstream(sigs, exactGroups(sigs), deduped, cfg)
   }
 
   /** Incremental entry: fingerprints come from / go to the Iceberg-shaped
@@ -85,9 +90,9 @@ object Pipeline {
                      cfg: GraftConfig = GraftConfig())
       : (Result, Resume.IncrementalResult) = {
     val inc = Resume.incrementalFingerprints(scan(pages, cfg), store, cfg)
-    val sigs = inc.signatures.persist(storage)
+    val sigs = inc.signatures // a materialized checkpoint leaf (Resume.liveView)
     warnIfSubstringTextMissing(sigs, inc, cfg)
-    (downstream(sigs, exactGroups(sigs), pages, cfg), inc)
+    (downstream(sigs, exactGroups(sigs), Pairs.substringText(pages), cfg), inc)
   }
 
   /** The substringPass incremental hazard is live store rows whose TEXT is
@@ -97,7 +102,7 @@ object Pipeline {
     * (A previous cut warned on `skipped > 0`, which fires on the CORRECT
     * usage — full live corpus passed, store satisfies most of it — and
     * stays silent on the hazardous batch-only shape.) Costs one count on
-    * the already-persisted live view, which downstream materializes anyway. */
+    * the already-materialized live view. */
   private def warnIfSubstringTextMissing(liveSigs: DataFrame,
                                          inc: Resume.IncrementalResult,
                                          cfg: GraftConfig): Unit =
@@ -124,13 +129,14 @@ object Pipeline {
     * durable version of this hand-off is the store itself (write
     * pairs/assign as tables, read them back next increment).
     *
-    * `retained` carries the generation's still-persisted frames (the live
-    * sigs view + reps — the Result references them lazily, so they cannot
-    * be released at return); the NEXT scoped call unpersists them on entry,
-    * keeping a k-increment chain's cache footprint O(one increment) instead
-    * of k persisted corpus-sized frame pairs. Consequence: a previous
-    * increment's lazy Result frames (signatures, metrics) recompute from
-    * lineage if consumed after the next increment starts. */
+    * `retained` carries the generation's still-persisted frames (reps —
+    * the Result references them lazily, so they cannot be released at
+    * return); the NEXT scoped call unpersists them on entry, keeping a
+    * k-increment chain's cache footprint O(one increment) instead of k
+    * persisted corpus-sized frames. Consequence: a previous increment's lazy
+    * Result frames (metrics) recompute from lineage if consumed after the
+    * next increment starts. The live signature view is a checkpoint leaf
+    * (Resume.liveView), not a persisted frame. */
   final case class IncState(reps: DataFrame, pairs: DataFrame, repAssign: DataFrame,
                             retained: Seq[DataFrame] = Nil)
 
@@ -172,7 +178,7 @@ object Pipeline {
                            cfg: GraftConfig = GraftConfig())
       : (Result, Resume.IncrementalResult, IncState) = {
     val inc = Resume.incrementalFingerprints(scan(pages, cfg), store, cfg)
-    val sigs = inc.signatures.persist(storage)
+    val sigs = inc.signatures // a materialized checkpoint leaf (Resume.liveView)
     warnIfSubstringTextMissing(sigs, inc, cfg)
 
     // ONE exact-group derivation (the grouping rule — min-url election per
@@ -202,7 +208,7 @@ object Pipeline {
 
     prev match {
       case None =>
-        val res = downstream(sigs, eg, pages, cfg)
+        val res = downstream(sigs, eg, Pairs.substringText(pages), cfg)
         val repsCk0 = reps.localCheckpoint()
         // first-generation band commit: reps are persisted+materialized by
         // downstream() at this point, so this is one slim explode + write
@@ -213,20 +219,20 @@ object Pipeline {
           res.pairs.drop("id_a", "id_b").localCheckpoint(),
           res.clusters.join(reps.select("url"), Seq("url"), "left_semi")
             .select(col("url"), col("cluster_id")).localCheckpoint(),
-          retained = Seq(sigs, reps))
+          retained = Seq(reps))
         (res, inc, state)
 
       case Some(st) =>
-        // release the PREVIOUS generation's persisted corpus-sized frames
-        // (live sigs + reps): the state hand-off is all checkpoint leaves,
-        // so nothing in this increment reads them — see IncState.retained
+        // release the PREVIOUS generation's persisted corpus-sized frame
+        // (reps): the state hand-off is all checkpoint leaves, so nothing in
+        // this increment reads it — see IncState.retained
         st.retained.foreach(_.unpersist(false))
         // Lineage truncation at branch ENTRY, not just at hand-off: this
-        // branch runs ~a dozen eager actions (excepts, isEmpty, delta
+        // branch runs ~a dozen eager actions (the new/stale aggregate, delta
         // persists, splice rounds, metric aggregates) and each one would
-        // re-ANALYZE the full reps lineage (sigs = store-read ∪ fingerprint
-        // expression over the page source) — measured as the wall time of a
-        // 2k-doc increment being ~3x driver-side planning, ~1/4 execution.
+        // re-ANALYZE the full reps lineage — measured, when the live view
+        // was still a lazy store read, as the wall time of a 2k-doc
+        // increment being ~3x driver-side planning, ~1/4 execution.
         // The one-shot path pays that analysis once (downstream truncates at
         // the pairs boundary); here the same truncation happens up front.
         // No extra storage vs before — the state hand-off already
@@ -238,11 +244,18 @@ object Pipeline {
         // new/changed vs stale reps by (url, content_id): a re-crawled url
         // (new warc_ts -> new content_id) is BOTH stale (old pairs invalid)
         // and new (delta candidates regenerate them); a demoted rep (its
-        // text group gained a smaller url) is stale only.
-        val repIdent = repsCk.select(col("url"), col("content_id"))
-        val prevIdent = st.reps.select(col("url"), col("content_id"))
-        val newUrls = repIdent.except(prevIdent).select("url").persist(storage)
-        val staleUrls = prevIdent.except(repIdent).select("url").persist(storage)
+        // text group gained a smaller url) is stale only. ONE full-outer
+        // identity join yields both sides (reps are unique per url), and one
+        // aggregate job below materializes it and answers both emptiness
+        // questions.
+        val identDiff = repsCk.select(col("url"), col("content_id"), lit(true).as("__cur"))
+          .join(st.reps.select(col("url"), col("content_id"), lit(true).as("__prev")),
+            Seq("url", "content_id"), "full_outer")
+          .filter(col("__cur").isNull || col("__prev").isNull)
+          .select(col("url"), col("__prev").isNull.as("__new"))
+          .persist(storage)
+        val newUrls = identDiff.filter(col("__new")).select("url")
+        val staleUrls = identDiff.filter(!col("__new")).select("url")
 
         // Current-generation band relation, store-backed: the previous
         // generation's committed rows minus stale reps, plus a fresh explode
@@ -259,7 +272,9 @@ object Pipeline {
             .select(col("url"), col("band_id"), col("key")))
         val (hasNew, hasStale) =
           labeled(sigs.sparkSession, "graft: incr new/stale detect") {
-            (!newUrls.isEmpty, !staleUrls.isEmpty)
+            val n = identDiff.agg(count(when(col("__new"), 1)),
+              count(when(!col("__new"), 1))).head()
+            (n.getLong(0) > 0, n.getLong(1) > 0)
           }
         val newBandRows =
           if (hasNew) bandRowsOf(repsCk.join(newUrls, Seq("url"), "left_semi"))
@@ -345,12 +360,11 @@ object Pipeline {
             ("untouched_clusters", splice.untouchedClusters)).toDF("metric", "value"))
 
         val res = Result(sigs, eg.rejects, pairs, clusters, metrics)
-        val state = IncState(repsCk, pairs, repAssign,
-          retained = Seq(sigs, reps))
-        // every returned frame is a checkpoint leaf (pairs, repAssign,
-        // clusters, state.reps) or persisted in its own right (sigs, reps —
-        // metrics still aggregates them; the NEXT increment releases them
-        // via state.retained): the increment-local caches and the candidate
+        val state = IncState(repsCk, pairs, repAssign, retained = Seq(reps))
+        // every returned frame is a checkpoint leaf (sigs, pairs, repAssign,
+        // clusters, state.reps) or persisted in its own right (reps —
+        // metrics still aggregates it; the NEXT increment releases it via
+        // state.retained): the increment-local caches and the candidate
         // layer's internals are released here, keeping a long incremental
         // chain's cache footprint O(one increment)
         // Band-table maintenance for the NEXT generation: append-only on the
@@ -375,7 +389,7 @@ object Pipeline {
           }
         }
         if (newBandRows != null) newBandRows.unpersist(false)
-        newUrls.unpersist(false); staleUrls.unpersist(false)
+        identDiff.unpersist(false)
         if (!(seedUrls eq newUrls)) seedUrls.unpersist(false)
         delta.unpersist(false); eg.members.unpersist(false)
         Candidates.cleanupCaches(); Fingerprints.cleanupCaches()
@@ -405,9 +419,10 @@ object Pipeline {
   /** The shared relational core: candidates -> scoring -> [exact verify /
     * substring pass] -> union-find -> keeper election over the caller's
     * exact groups. `pairs` and `clusters` come back MATERIALIZED and
-    * lineage-truncated (see the checkpoint note below); `signatures` stays a
-    * lazy persisted frame. */
-  private def downstream(sigs: DataFrame, eg: ExactGroups, pages: DataFrame,
+    * lineage-truncated (see the checkpoint note below); `signatures` is the
+    * caller's frame. `text` is the substring pass's one-row-per-url text
+    * source, evaluated only when that pass is on. */
+  private def downstream(sigs: DataFrame, eg: ExactGroups, text: => DataFrame,
                          cfg: GraftConfig): Result = {
     // candidates + scoring (representative level); lazy up to the checkpoint
     val scored = Pairs.score(Candidates.candidatePairs(eg.reps, cfg), cfg)
@@ -443,7 +458,7 @@ object Pipeline {
     val pairs =
       if (!cfg.substringPass) pairsVerified
       else labeled(spark, "graft: substring pass") {
-        Pairs.substringPass(pairsVerified, pages, cfg).localCheckpoint()
+        Pairs.checkSubstrings(pairsVerified, text, cfg).localCheckpoint()
       }
     // union-find (EAGER — iterative) over the matched pairs; pairs carry
     // dictionary ids, so its rounds shuffle longs

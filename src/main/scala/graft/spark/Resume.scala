@@ -2,6 +2,7 @@ package graft.spark
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.core.GraftConfig
 import graft.store.IcebergShaped
 
@@ -15,6 +16,21 @@ import graft.store.IcebergShaped
   * invalidates, a byte-identical re-crawl row does not. Signatures computed
   * under a different GraftConfig are ignored AND superseded (config_fp
   * mismatch => recompute; db.cpp:46-47 version-stamp analog).
+  *
+  * Two halves, each usable alone:
+  *  - [[commit]] (write after compute): rule-1 dedup of the batch, anti-join
+  *    on content_id, fingerprint the rest, append one snapshot. Rows are
+  *    clustered by part_id before the write, so every commit adds exactly
+  *    one parquet file per part_id dir it touches — store scans open a few
+  *    files per snapshot, not one per write task per part.
+  *  - [[liveView]] (read before compute): the rows clustering sees — the
+  *    current config's store rows with the url election (rule 1, then rule
+  *    2) applied across every committed batch. The election runs in url-KEY
+  *    space ([[Fingerprints.electUrlKeys]], the one-shot dedup's own rules):
+  *    only (url, warc_ts) keys are ranked, and the losing keys leave the
+  *    store scan in one broadcast left-anti join, so no MinHash or band array
+  *    crosses a shuffle and an increment's shuffle tracks the increment, not
+  *    the corpus.
   */
 object Resume {
 
@@ -28,24 +44,35 @@ object Resume {
       skipped: Long // rows served from the store
   )
 
-  /** Fingerprint pages incrementally against `store`; append only new rows.
-    * The anti-join runs on (content_id, config_fp) BEFORE the expensive
-    * fingerprint map, so cached rows cost one hash + one join probe.
-    * Driver-job budget: one count of the (cheap, pre-fingerprint) input, one
-    * emptiness probe on re-runs, and the commit itself — `skipped` is derived
-    * from the commit's own materialized row count, not a second count job. */
+  /** What one [[commit]] did: the fingerprinted frame it wrote (lazy; its
+    * schema is the store's), the batch's rule-1 row count, and the rows
+    * added. */
+  private[graft] final case class Committed(sigs: DataFrame, total: Long, added: Long)
+
+  /** Fingerprint pages incrementally against `store`, append only new rows,
+    * and return the live view after the commit. */
   def incrementalFingerprints(
       pages: DataFrame,
       store: IcebergShaped.Table,
       cfg: GraftConfig): IncrementalResult = {
-    val spark = pages.sparkSession
+    val c = commit(pages, store, cfg)
+    val live = if (store.isEmpty) c.sigs.limit(0) else liveView(pages.sparkSession, store, cfg)
+    IncrementalResult(live, c.added, skipped = c.total - c.added)
+  }
 
+  /** The write half. The anti-join runs on (content_id, config_fp) BEFORE
+    * the expensive fingerprint map, so cached rows cost one hash + one join
+    * probe. Driver-job budget: one count of the (cheap, pre-fingerprint)
+    * input, one emptiness probe on re-runs, and the commit itself. */
+  private[graft] def commit(pages: DataFrame, store: IcebergShaped.Table,
+                            cfg: GraftConfig): Committed = {
+    val spark = pages.sparkSession
     // Rule 1 ONLY before the commit (per-url newest + duplicate-record
     // collapse): case-variant (rule 2) losers MUST be fingerprinted and
     // committed, because a later batch can add an OLDER variant that
     // changes the cross-increment case election — dropping them here made
     // the surviving variant depend on batch boundaries (round-5 review).
-    // The live view below applies the case rule across everything committed.
+    // The live view applies the case rule across everything committed.
     val withId = Fingerprints.dropRecrawlDuplicateUrlsEager(pages)
       .withColumn("content_id", contentIdCol)
     val total = Pipeline.labeled(spark, "graft: incr input count") { withId.count() }
@@ -67,49 +94,61 @@ object Resume {
     // the full two-rule window inside the commit job.
     val newSigs = Fingerprints.pruneForMode(
       Fingerprints.fromPagesPreDeduped(todo.drop("content_id"), cfg).toDF(), cfg)
-    val newCount = Pipeline.labeled(spark, "graft: incr sig commit") {
-      if (firstRun) store.commit(newSigs, cfg.configFp, "overwrite").addedRows
-      else if (!todo.isEmpty) store.commit(newSigs, cfg.configFp, "append").addedRows
+    // cluster by the partition column before the partitionBy write: each
+    // part_id then lands as ONE file instead of one per write task
+    val clustered = newSigs.repartition(col("part_id"))
+    val added = Pipeline.labeled(spark, "graft: incr sig commit") {
+      if (firstRun) store.commit(clustered, cfg.configFp, "overwrite").addedRows
+      else if (!todo.isEmpty) store.commit(clustered, cfg.configFp, "append").addedRows
       else 0L
     }
+    Committed(newSigs, total, added)
+  }
 
-    // stale-config rows remain as history in older snapshots but are not live
-    // for matching: the live view is config-fingerprint-filtered AND deduped
-    // per url (newest warc_ts wins) — a re-crawled url gets a fresh
-    // content_id and is appended, so without the dedup the old capture would
-    // stay live alongside it and clustering would elect keepers among
-    // phantom duplicates of the same url. The case rule (F1: earliest
-    // warc_ts, then url, per lower(url)) runs HERE and ONLY here for the
-    // incremental path — across every committed variant, whatever batch it
-    // arrived in. Running it per batch before the commit would permanently
-    // discard a variant a later batch's OLDER twin needs to lose against,
-    // making the elected variant batch-boundary-dependent.
-    // The live view also honors cfg.langFilter (S2): the scan filter applies
-    // to the batch before fingerprinting, and rows committed by an
-    // unfiltered earlier config are config-compatible (langFilter is not
-    // fingerprint-affecting), so the store side must filter too or an
-    // incremental run clusters languages a one-shot run excludes.
-    val live =
-      if (store.isEmpty) newSigs.limit(0)
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("url"))
-          .orderBy(col("warc_ts").desc, col("content_id").desc)
-        val wCase = org.apache.spark.sql.expressions.Window
-          .partitionBy(lower(col("url")))
-          .orderBy(col("warc_ts"), col("url"))
-        val base = store.read(spark)
-          .filter(col("config_fp") === cfg.configFp)
-        val filtered = cfg.langFilter match {
-          case Some(ls) => base.filter(col("lang").isin(ls.toSeq: _*))
-          case None => base
-        }
-        filtered
-          .withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1).drop("_rn")
-          .withColumn("_rc", row_number().over(wCase))
-          .filter(col("_rc") === 1).drop("_rc")
+  /** The read half: the live signature rows of a non-empty `store` under
+    * `cfg`, returned as a materialized checkpoint leaf.
+    *
+    * Stale-config rows remain as history in older snapshots but are not
+    * live. The url election runs HERE and ONLY here for the incremental path
+    * — across every committed row, whatever batch it arrived in: rule 1
+    * (newest warc_ts per url; a re-crawled url gets a fresh content_id and
+    * is appended, so without it the old capture would stay live beside the
+    * new one) and rule 2 (F1: earliest (warc_ts, url) per lower(url) among
+    * the rule-1 winners). Running rule 2 per batch before the commit would
+    * discard a variant a later batch's OLDER twin needs to lose against.
+    * The view also honors cfg.langFilter (S2): rows committed by an
+    * unfiltered earlier config are config-compatible (langFilter is not
+    * fingerprint-affecting), so the store side must filter too or an
+    * incremental run clusters languages a one-shot run excludes.
+    *
+    * Two eager labeled jobs, both before any consumer fans out:
+    *  - the key-space decisions (losing keys, duplicated keys) over a slim
+    *    (url, warc_ts) scan of the store, persisted and counted at once;
+    *  - the live rows: ONE payload scan minus the losing keys (broadcast
+    *    left-anti join), checkpointed, so every consumer reads the leaf
+    *    instead of re-scanning the store.
+    * Live rows are unique per (url, warc_ts) within one config_fp — the
+    * commit anti-joins on content_id, a function of the key — so duplicated
+    * keys never occur in a store written by [[commit]]; if some writer put
+    * them there, the copies collapse to one row ([[Fingerprints.applyUrlElection]])
+    * and only then does the second payload pass run. */
+  private[graft] def liveView(spark: SparkSession, store: IcebergShaped.Table,
+                              cfg: GraftConfig): DataFrame = {
+    val base = store.read(spark).filter(col("config_fp") === cfg.configFp)
+    val rows = cfg.langFilter match {
+      case Some(ls) => base.filter(col("lang").isin(ls.toSeq: _*))
+      case None => base
+    }
+    val decisions = Fingerprints.electUrlKeys(Fingerprints.urlKeysOf(rows), caseRule = true)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val duplicated = Pipeline.labeled(spark, "graft: incr live keys") {
+        decisions.agg(coalesce(sum(col("__t")), lit(0L))).head().getLong(0)
       }
-    IncrementalResult(live, newCount, skipped = total - newCount)
+      Pipeline.labeled(spark, "graft: incr live view") {
+        Fingerprints.applyUrlElection(rows, decisions, collapse = duplicated > 0)
+          .localCheckpoint()
+      }
+    } finally decisions.unpersist(false)
   }
 }

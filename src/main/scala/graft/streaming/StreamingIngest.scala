@@ -35,10 +35,11 @@ object StreamingIngest {
         col("fp.simhash_head"), col("fp.simhash_tail"),
         col("fp.text_len"), col("fp.size"), col("fp.reject_reason"))
 
-  /** Micro-batch ingest into the signatures store via the batch resume path:
-    * new content is fingerprinted and committed as one snapshot per
-    * non-empty batch; already-seen content_ids are skipped (idempotent under
-    * replay). Each batch goes through the SAME scan filter (S2) as the
+  /** Micro-batch ingest into the signatures store via the batch resume path
+    * (its write half, [[Resume.commit]]; the live view is built by whoever
+    * reads the store): new content is fingerprinted and committed as one
+    * snapshot per non-empty batch; already-seen content_ids are skipped
+    * (idempotent under replay). Each batch goes through the SAME scan filter (S2) as the
     * batch entry — without it, out-of-filter pages would be fingerprinted
     * and committed to the store forever. The default trigger drains
     * available data and stops (backfill shape); continuous ingest passes
@@ -56,10 +57,7 @@ object StreamingIngest {
         // source (emptiness probe, pre-fingerprint count, commit job)
         val scanned = graft.spark.Pipeline.scan(batch, cfg).persist()
         try {
-          if (!scanned.isEmpty) {
-            Resume.incrementalFingerprints(scanned, store, cfg)
-            ()
-          }
+          if (!scanned.isEmpty) { Resume.commit(scanned, store, cfg); () }
         } finally { scanned.unpersist(false); () }
       }
       .start()

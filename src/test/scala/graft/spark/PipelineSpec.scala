@@ -157,6 +157,27 @@ class PipelineSpec extends AnyFunSuite {
 class VerifyModesSpec extends AnyFunSuite {
   private lazy val spark = SparkTest.spark
 
+  /** `graft: url-dedup …` jobs started by one `Pipeline.run(pages, cfg)`. */
+  private def dedupJobsOf(pages: org.apache.spark.sql.DataFrame, cfg: GraftConfig): Int = {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).map(_.getProperty("spark.job.description"))
+              .exists(d => d != null && d.startsWith("graft: url-dedup")))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graftclock.TaskClock.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      Pipeline.run(pages, cfg).metrics.collect()
+      org.apache.spark.graftclock.TaskClock.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get()
+  }
+
   test("exact-verify mode: exact dups still match; jaccard column populated") {
     import org.apache.spark.sql.functions._
     val cfg = GraftConfig(exactVerify = true)
@@ -187,7 +208,6 @@ class VerifyModesSpec extends AnyFunSuite {
     import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
     import org.apache.logging.log4j.core.appender.AbstractAppender
     import org.apache.logging.log4j.core.config.{Configurator, Property}
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     // both stages dedup the same `pages`: the cache manager refuses a second
     // entry for a cached plan and says so, so its warning is the observable
     // of a double persist; a second materialization shows as extra
@@ -203,35 +223,27 @@ class VerifyModesSpec extends AnyFunSuite {
     appender.start()
     Configurator.setLevel(cacheLogName, Level.WARN)
     val cacheLog = LogManager.getLogger(cacheLogName).asInstanceOf[CoreLogger]
-    val dedupJobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).map(_.getProperty("spark.job.description"))
-              .exists(d => d != null && d.startsWith("graft: url-dedup")))
-          dedupJobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
     val pages = CorpusSpark.pages(spark, 300L, parts = 4, seed = 42L)
-    def dedupJobsOf(cfg: GraftConfig): Int = {
-      org.apache.spark.graftclock.TaskClock.drain(sc)
-      dedupJobs.set(0)
-      Pipeline.run(pages, cfg).metrics.collect()
-      org.apache.spark.graftclock.TaskClock.drain(sc)
-      dedupJobs.get()
-    }
     cacheLog.addAppender(appender)
-    sc.addSparkListener(listener)
     try {
-      val fingerprintOnly = dedupJobsOf(GraftConfig())
-      val withSubstring = dedupJobsOf(GraftConfig(exactVerify = true, substringPass = true))
+      val fingerprintOnly = dedupJobsOf(pages, GraftConfig())
+      val withSubstring = dedupJobsOf(pages, GraftConfig(exactVerify = true, substringPass = true))
       assert(refused.get() === 0, "a cached plan was persisted a second time")
       assert(fingerprintOnly > 0)
       assert(withSubstring === fingerprintOnly,
         "the substring pass re-materialized the url-dedup frames")
-    } finally {
-      sc.removeSparkListener(listener)
-      cacheLog.removeAppender(appender)
-    }
+    } finally cacheLog.removeAppender(appender)
+  }
+
+  test("substring pass reads the fingerprint stage's deduped pages when the " +
+      "input is coalesced (more than 2 x defaultParallelism partitions)") {
+    val pages = CorpusSpark.pages(spark, 400L, parts = 32, seed = 42L)
+    assert(pages.rdd.getNumPartitions > 2 * spark.sparkContext.defaultParallelism)
+    val fingerprintOnly = dedupJobsOf(pages, GraftConfig())
+    val withSubstring = dedupJobsOf(pages, GraftConfig(substringPass = true))
+    assert(fingerprintOnly > 0)
+    assert(withSubstring === fingerprintOnly,
+      "the substring pass ran the url dedup a second time")
   }
 }
 

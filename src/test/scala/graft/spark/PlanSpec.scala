@@ -108,4 +108,49 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct"), plan.take(2000))
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
   }
+
+  test("incremental live view: no Exchange carries the signature payload " +
+      "(the url election runs in key space)") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.FileSourceScanLike
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val cfg = GraftConfig()
+    val store = graft.store.IcebergShaped.table(
+      java.nio.file.Files.createTempDirectory("graft-plan-live").toString)
+    val pages = CorpusSpark.pages(spark, 400L, parts = 4, seed = cfg.seed)
+    val base = pages.filter(col("url") < "https://example.org/s12")
+    val recrawls = base.filter(xxhash64(col("url")) % 4 === 0)
+      .withColumn("warc_ts", timestamp_millis(unix_millis(col("warc_ts")) + 86400000L))
+    val batch = pages.filter(col("url") >= "https://example.org/s12").unionByName(recrawls)
+    Resume.incrementalFingerprints(base, store, cfg)
+    Resume.incrementalFingerprints(batch, store, cfg)
+
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // a re-run of the same batch commits nothing: every query from here
+      // on builds or reads the live view (or probes the payload-free batch)
+      Resume.incrementalFingerprints(batch, store, cfg).signatures.collect()
+      org.apache.spark.graftclock.TaskClock.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+
+    import scala.jdk.CollectionConverters._
+    object Plans extends AdaptiveSparkPlanHelper
+    val plans = seen.asScala.toSeq.map(_.executedPlan)
+    val payload = Set("minhash", "mh_bands_head")
+    def carriesPayload(attrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute]) =
+      attrs.exists(a => payload.contains(a.name))
+    assert(plans.exists(p => Plans.collect(p) {
+      case s: FileSourceScanLike if carriesPayload(s.output) => s }.nonEmpty),
+      "no query read the store's signature payload")
+    val offending = plans.flatMap(p => Plans.collect(p) {
+      case e: Exchange if carriesPayload(e.output) => e })
+    assert(offending.isEmpty, offending.map(_.toString.take(500)).mkString("\n"))
+  }
 }

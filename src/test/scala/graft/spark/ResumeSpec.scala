@@ -154,4 +154,91 @@ class ResumeSpec extends AnyFunSuite {
     assert(live === Seq("https://l/de"), "en store row must not be live under --langs de")
   }
 
+
+  /** The pre-key-space live view, kept here as the oracle: two row_number
+    * windows over the full store rows (rule 1 by url, newest first; rule 2
+    * by lower(url), earliest (warc_ts, url) first). */
+  private def windowElection(store: IcebergShaped.Table, c: GraftConfig) = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("url"))
+      .orderBy(col("warc_ts").desc, col("content_id").desc)
+    val wCase = Window.partitionBy(lower(col("url"))).orderBy(col("warc_ts"), col("url"))
+    val base = store.read(spark).filter(col("config_fp") === c.configFp)
+    c.langFilter.fold(base)(ls => base.filter(col("lang").isin(ls.toSeq: _*)))
+      .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
+      .withColumn("_rc", row_number().over(wCase)).filter(col("_rc") === 1).drop("_rc")
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame, cols: Seq[String]): Seq[String] =
+    df.select(cols.map(col): _*).collect().map(_.toString).toSeq.sorted
+
+  test("key-space live view equals the window election: re-crawls, case " +
+      "variants out of order across batches, langFilter, mixed configs") {
+    import spark.implicits._
+    val store = tmpStore()
+    val pages = CorpusSpark.pages(spark, 480L, 4, cfg.seed)
+    // Corpus plants case-variant urls (an upper-case spelling of a parent
+    // url, captured after it); batch 1 takes every variant but NOT its
+    // parent, so the earlier parent arrives a batch later and must win
+    val isVariant = col("url") =!= lower(col("url"))
+    val variantKeys = pages.filter(isVariant).select(lower(col("url"))).as[String].collect()
+    val parentOfVariant = !isVariant && lower(col("url")).isin(variantKeys.toSeq: _*)
+    val b1 = pages.filter(col("url") < "https://example.org/s10" && !parentOfVariant)
+    val b2 = pages.filter(col("url") >= "https://example.org/s10" || parentOfVariant)
+    // re-crawls of a third of batch 1, one day later
+    val b3 = b1.filter(xxhash64(col("url")) % 3 === 0)
+      .withColumn("warc_ts", timestamp_millis(unix_millis(col("warc_ts")) + 86400000L))
+    assert(b1.filter(isVariant).count() > 0 && b3.count() > 0)
+
+    val cfgK5 = cfg.copy(k = 5)
+    val langs = cfg.copy(langFilter = Some(Set("en", "de")))
+    Resume.incrementalFingerprints(b1, store, cfg)
+    // a different config's rows share the store, re-crawls included
+    Resume.incrementalFingerprints(b3.limit(40), store, cfgK5)
+    for ((batch, i) <- Seq(b2, b3).zipWithIndex) {
+      val live = Resume.incrementalFingerprints(batch, store, cfg).signatures
+      assert(sortedRows(live, live.columns) ===
+        sortedRows(windowElection(store, cfg), live.columns), s"after batch ${i + 2}")
+    }
+    val filtered = Resume.incrementalFingerprints(b3, store, langs).signatures
+    assert(sortedRows(filtered, filtered.columns) ===
+      sortedRows(windowElection(store, langs), filtered.columns))
+    assert(filtered.filter(!col("lang").isin("en", "de")).count() === 0)
+    val other = Resume.incrementalFingerprints(b3.limit(40), store, cfgK5).signatures
+    assert(sortedRows(other, other.columns) ===
+      sortedRows(windowElection(store, cfgK5), other.columns))
+  }
+
+  test("duplicated store keys collapse to one live row (never both copies)") {
+    val store = tmpStore()
+    val pages = CorpusSpark.pages(spark, 120L, 4, cfg.seed)
+    val first = Resume.incrementalFingerprints(pages, store, cfg).signatures
+    val liveUrls = first.count()
+    // a writer that bypasses the content_id anti-join: the same rows again
+    store.commit(store.read(spark).filter(col("url") < "https://example.org/s02"),
+      cfg.configFp, "append")
+    val live = Resume.incrementalFingerprints(pages.limit(0), store, cfg).signatures
+    assert(live.count() === liveUrls)
+    assert(live.groupBy("url").count().filter(col("count") > 1).count() === 0)
+    assert(sortedRows(live, live.columns) === sortedRows(first, live.columns))
+  }
+
+  test("each commit writes one parquet file per part_id dir") {
+    import scala.jdk.CollectionConverters._
+    val store = tmpStore()
+    Resume.incrementalFingerprints(CorpusSpark.pages(spark, 300L, 4, cfg.seed), store, cfg)
+    Resume.incrementalFingerprints(CorpusSpark.pages(spark, 600L, 4, cfg.seed), store, cfg)
+    val snaps = store.liveFilesTagged.map(_._1.snapshotId).distinct
+    assert(snaps.size === 2, "a base and one append")
+    def list(p: java.nio.file.Path) = {
+      val s = Files.list(p)
+      try s.iterator().asScala.toList finally s.close()
+    }
+    val partDirs = store.liveFiles.map(f => java.nio.file.Paths.get(f.path))
+    assert(partDirs.size > 2 * 4, "rows should spread over many part_id dirs")
+    partDirs.foreach { d =>
+      val files = list(d).map(_.getFileName.toString).filter(_.endsWith(".parquet"))
+      assert(files.size === 1, s"$d holds ${files.size} parquet files")
+    }
+  }
 }
