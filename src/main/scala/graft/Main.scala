@@ -136,7 +136,7 @@ object Main {
 
         val result = opts.get("store") match {
           case Some(root) =>
-            Pipeline.runIncremental(pages, IcebergShaped.table(root), cfg)._1
+            Pipeline.runIncrementalScoped(pages, IcebergShaped.table(root), None, cfg)._1
           case None => Pipeline.run(pages, cfg)
         }
 

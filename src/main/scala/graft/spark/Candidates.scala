@@ -41,33 +41,6 @@ import graft.core.GraftConfig
   */
 object Candidates {
 
-  /** Frames persisted internally by candidatePairs (the slim rep projection,
-    * the band relation, the delta id set). They must stay cached while the
-    * returned lazy pairs frame executes; the PIPELINE owns release — it
-    * calls [[cleanupCaches]] once its results are lineage-truncated
-    * (localCheckpoint), after which nothing references these plans. Without
-    * the release a long-running incremental chain accumulates one band
-    * relation per increment until LRU eviction, with the JVM references
-    * never reclaimed (same discipline as DedupOps.cleanupCaches).
-    *
-    * CONTRACT: the registry is JVM-global, so pipeline runs must not
-    * overlap — a concurrent run's cleanupCaches would unpersist this run's
-    * frames mid-query (correct results, silent full recomputation). One
-    * pipeline at a time per SparkSession, which is how every entry point
-    * drives it; a multi-tenant session would need a per-run registry
-    * threaded through candidatePairs. */
-  private val persistedFrames =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-  private def registerPersist(df: DataFrame): DataFrame = {
-    persistedFrames.add(
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    df
-  }
-  def cleanupCaches(): Unit = {
-    var df = persistedFrames.poll()
-    while (df != null) { df.unpersist(false); df = persistedFrames.poll() }
-  }
-
   /** Band rows are slim — (band_id, key, id) only, where `id` is a dense
     * dictionary long (the order-preserving encoding built at the top of
     * [[candidatePairs]]), NOT the url string. Scoring
@@ -135,18 +108,31 @@ object Candidates {
     }
   }
 
-  /** Band keys per URL (no dictionary encoding) — incremental support:
-    * [[Pipeline.runIncrementalScoped]] derives the keys a STALE rep used to
-    * emit (from the previous generation's checkpointed rep rows) and the
-    * current members of those keys, so a group whose topology links left
-    * with the stale rep (a re-crawled star hub, a demoted rep) regenerates
-    * in full instead of fragmenting. */
+  /** Band keys per URL (no dictionary encoding) — the band relation the
+    * scoped increment keeps in the store (`<root>/bands`), and the one a
+    * [[Delta]] carries: [[Pipeline.runIncrementalScoped]] commits these rows
+    * per generation, then reads the keys a STALE rep used to emit and the
+    * current members of those keys back from them, so a group whose
+    * topology links left with the stale rep (a re-crawled star hub, a
+    * demoted rep) regenerates in full instead of fragmenting. */
   private[graft] def bandKeysByUrl(reps: DataFrame, cfg: GraftConfig): DataFrame =
     bands(reps.withColumn("id", col("url")), cfg)
       .select(col("id").as("url"), col("band_id"), col("key"))
 
+  /** The increment of a delta-mode [[candidatePairs]] call.
+    *
+    * @param newUrls (url) rows of the reps whose pairs are regenerated: every
+    *   emitted pair has at least one endpoint here.
+    * @param bands the band relation (url, band_id, key) of the WHOLE current
+    *   rep set; rows must equal what [[bandKeysByUrl]] over `reps` emits.
+    *   The scoped pipeline reads it back from the store instead of
+    *   re-exploding the full rep set, so an increment explodes only its NEW
+    *   reps' bands (bands are a pure function of the rep row). */
+  final case class Delta(newUrls: DataFrame, bands: DataFrame)
+
   /** Self-join bands into distinct candidate pairs (url_a < url_b), with
-    * explicit salted handling of heavy band keys.
+    * explicit salted handling of heavy band keys. With a [[Delta]], only
+    * pairs with a new endpoint are emitted, over the delta's band relation.
     *
     * Heavy keys (> cfg.heavyBandKeyCap rows — boilerplate bands, near-constant
     * simhash slices) are routed through a triangle-bucket replicated join
@@ -157,19 +143,8 @@ object Candidates {
     * north-rule "salted keys for skewed buckets". AQE skew-join remains on as
     * backstop for moderately hot keys.
     */
-  /** @param prebuiltBands delta-mode only (round-6, VERDICT r5 #1): the band
-    *   relation (url, band_id, key) read back from the store instead of
-    *   re-exploded from the full rep set — the store carries it between
-    *   increments, so the per-increment full-corpus band EXPLODE (and the
-    *   signature-payload read feeding it) is gone; only NEW reps' bands are
-    *   computed per increment (by the caller) and unioned in. Rows must equal
-    *   what [[bandKeysByUrl]] over the current rep set would emit (bands are
-    *   a pure function of the rep row — the caller maintains the store by
-    *   appending new reps' bands and dropping stale reps' rows). Ignored on
-    *   the one-shot path. */
   def candidatePairs(reps: DataFrame, cfg: GraftConfig,
-                     newUrls: Option[DataFrame] = None,
-                     prebuiltBands: Option[DataFrame] = None): DataFrame = {
+                     delta: Option[Delta] = None): DataFrame = {
     // dictionary-encode urls to dense order-preserving longs for the whole
     // candidate layer: every shuffle from here to pair join-back carries an
     // 8-byte id instead of the url string (the largest measured bandwidth
@@ -209,9 +184,8 @@ object Candidates {
     // is classification-invariant (light equi-join and triangle both emit
     // every in-key pair); under star routing the delta topology is already
     // documented as a conservative superset of one-shot's.
-    val delta = newUrls.isDefined
     val sortedUrls =
-      if (delta) None
+      if (delta.isDefined) None
       else Some(Pipeline.labeled(spark, "graft: url dictionary sort") {
         reps.select(col("url")).orderBy("url").as[String].rdd
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -239,14 +213,12 @@ object Candidates {
     }
 
     // the band relation feeds the key-count pass, both sides of the light
-    // self-join and both sides of the heavy triangle join. In delta mode a
-    // store-backed relation replaces the explode when provided (see
-    // prebuiltBands scaladoc).
+    // self-join and both sides of the heavy triangle join. In delta mode it
+    // is the caller's (store-backed) relation, never an explode here.
     val bnds = Pipeline.labeled(spark, "graft: band relation build") {
-      (prebuiltBands match {
-        case Some(pb) if delta =>
-          pb.select(col("url").as("id"), col("band_id"), col("key"))
-        case _ => bands(repSlim, cfg)
+      (delta match {
+        case Some(d) => d.bands.select(col("url").as("id"), col("band_id"), col("key"))
+        case None => bands(repSlim, cfg)
       }).localCheckpoint()
     }
     // sortedUrls (one-shot mode only) is released after the rawPairs match
@@ -265,14 +237,20 @@ object Candidates {
     // the same rows regardless of partitioning or task order (ids are
     // themselves a pure function of the url set), so the pairs TABLE (not
     // just the clusters) is partition-invariant — SURVEY §5.7.
-    // persisted: the frame feeds two consumers one-shot (light anti-join +
-    // heavy semi-join) and three in delta mode — unpersisted, each action
-    // re-ran the aggregation over the full band relation and re-broadcast it
-    // same checkpoint-leaf discipline as bnds above (two one-shot consumers,
-    // three in delta mode)
-    val heavyKeys = Pipeline.labeled(spark, "graft: heavy-key detect") {
+    // Same checkpoint-leaf discipline as bnds above: the frame feeds two
+    // consumers one-shot (light anti-join + heavy semi-join) and three in
+    // delta mode — unmaterialized, each action re-ran the aggregation over
+    // the full band relation and re-broadcast it.
+    //
+    // The common case has NO heavy keys (boilerplate bands only appear in
+    // skewed corpora): the leaf is tiny, so one O(1) emptiness probe skips
+    // the whole heavy branch — otherwise the empty-set plumbing still pays a
+    // full band-relation scan for the heavy slice plus the anti-join stream
+    // filter on every light row. Pair-set identical by construction (an
+    // empty heavy set routes nothing through either branch).
+    val (heavyKeys, noHeavy) = Pipeline.labeled(spark, "graft: heavy-key detect") {
       val frac = cfg.heavyDetectSampleFrac
-      (if (frac <= 0)
+      val hk = (if (frac <= 0)
         bnds.groupBy("band_id", "key").count()
           .filter(col("count") > cfg.heavyBandKeyCap)
           .select("band_id", "key")
@@ -285,15 +263,8 @@ object Candidates {
           .filter(col("count") > cfg.heavyBandKeyCap * (cut.toDouble / m) / 2)
           .select("band_id", "key")
       }).localCheckpoint()
+      (hk, hk.isEmpty)
     }
-
-    // the common case has NO heavy keys (boilerplate bands only appear in
-    // skewed corpora): heavyKeys is a tiny eager leaf, so one O(1) probe
-    // skips the whole heavy branch — otherwise the empty-set plumbing still
-    // pays a full band-relation scan for the heavy slice plus the anti-join
-    // stream filter on every light row. Pair-set identical by construction
-    // (an empty heavy set routes nothing through either branch).
-    val noHeavy = heavyKeys.isEmpty
     val light =
       if (noHeavy) bnds
       else bnds.join(broadcast(heavyKeys), Seq("band_id", "key"), "left_anti")
@@ -368,7 +339,7 @@ object Candidates {
           .select(col("id_a"), col("id_b"), col("band_id"))
       }
 
-    val rawPairs = newUrls match {
+    val rawPairs = delta match {
       case None =>
         // full self-join (the one-shot path — unchanged)
         val la = light.withColumnRenamed("id", "id_a")
@@ -391,35 +362,35 @@ object Candidates {
           lightPairs.unionByName(heavyPairGen(heavyRows))
         }
 
-      case Some(nu) =>
-        // INCREMENTAL delta: only pairs with >= 1 endpoint in `nu` (new or
-        // changed reps). The light family becomes a new-side x all-side join
-        // — when the increment is small Catalyst broadcasts the new side, so
-        // the PAIR JOIN adds no full-corpus shuffle (the 10^12-doc resume
-        // story: candidate-join work scales with the increment). Honest
-        // bound: the band-relation build and the sampled heavy detection
-        // above still touch the full rep set each increment — a narrow
-        // explode plus a sample-volume shuffle, no full-corpus WIDE shuffle
-        // (the dictionary sort + dictionary join the one-shot path pays are
-        // skipped in delta mode — ids here ARE the urls, see the delta-mode
-        // note above); making even the narrow work increment-sized needs the
-        // band relation persisted in the store between increments. Old-old
+      case Some(d) =>
+        // INCREMENTAL delta: only pairs with >= 1 endpoint in `d.newUrls`
+        // (new or changed reps). The light family becomes a new-side x
+        // all-side join — when the increment is small Catalyst broadcasts the
+        // new side, so the PAIR JOIN adds no full-corpus shuffle (the
+        // 10^12-doc resume story: candidate-join work scales with the
+        // increment). Honest bound: the band-relation checkpoint and the
+        // sampled heavy detection above still scan the full (store-read)
+        // band relation each increment — a narrow scan plus a sample-volume
+        // shuffle, no full-corpus WIDE shuffle (the dictionary sort +
+        // dictionary join the one-shot path pays are skipped in delta mode —
+        // ids here ARE the urls, see the delta-mode note above). Old-old
         // pairs are excluded by construction; the caller supplies them from
         // the previous run's persisted pairs table (Pipeline.runIncrementalScoped
         // keeps them — candidate generation over unchanged reps is a pure
         // function of the rep set, so those rows cannot have changed).
-        // Persist + materialize the (increment-sized) id set: it feeds three
-        // consumers (bndsNew, na/nb) that would each re-run nu's lineage.
-        val newIds = registerPersist(nu.select(col("url").as("id")).distinct())
-        newIds.count()
-        // increment-sized slice of the band relation, referenced by three
-        // consumers (lightNew, touchedHeavy, and the heavy semi below) — as
-        // a lazy semi-join each reference re-scanned the FULL band relation
-        // (no Exchange under a broadcast semi-join => no reuse; measured as
-        // ~143 leaf re-scans / 371 task-s inside one 60k increment's delta
-        // materialization). One eager increment-sized leaf bounds that.
-        val bndsNew = Pipeline.labeled(spark, "graft: incr new-band slice") {
-          bnds.join(newIds, Seq("id"), "left_semi").localCheckpoint()
+        //
+        // Two increment-sized eager leaves, one job each:
+        //  - the new id set, which feeds three consumers (bndsNew, na/nb)
+        //    that would each re-run the caller's lineage;
+        //  - the new slice of the band relation, referenced by three
+        //    consumers (lightNew, touchedHeavy, and the heavy semi below) — as
+        //    a lazy semi-join each reference re-scanned the FULL band relation
+        //    (no Exchange under a broadcast semi-join => no reuse; measured as
+        //    ~143 leaf re-scans / 371 task-s inside one 60k increment's delta
+        //    materialization).
+        val (newIds, bndsNew) = Pipeline.labeled(spark, "graft: incr new-band slice") {
+          val ids = d.newUrls.select(col("url").as("id")).distinct().localCheckpoint()
+          (ids, bnds.join(ids, Seq("id"), "left_semi").localCheckpoint())
         }
         val lightNew =
           if (noHeavy) bndsNew

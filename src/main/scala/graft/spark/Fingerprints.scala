@@ -46,10 +46,16 @@ final case class SignatureRow(
 object Fingerprints {
 
   /** Frames persisted internally by [[urlDedup]] (the slim (url, warc_ts)
-    * decision frame). Same ownership contract as Candidates.persistedFrames:
-    * the pipeline releases them via [[cleanupCaches]] once its results are
-    * lineage-truncated; until then they back every dedup decision branch.
-    * Re-materialization after release is correct (just recomputes). */
+    * decision frame). The PIPELINE owns release: it calls [[cleanupCaches]]
+    * once its results are lineage-truncated; until then they back every
+    * dedup decision branch. Re-materialization after release is correct
+    * (just recomputes).
+    *
+    * CONTRACT: the registry is JVM-global, so pipeline runs must not
+    * overlap — a concurrent run's cleanupCaches would unpersist this run's
+    * frames mid-query (correct results, silent full recomputation). One
+    * pipeline at a time per SparkSession, which is how every entry point
+    * drives it. */
   private val persistedFrames =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
   def cleanupCaches(): Unit = {
@@ -208,7 +214,7 @@ object Fingerprints {
     // ladder of 256-task stages owning the sigs-build wall at 60k docs).
     // Eager mode persists + materializes it once (one job; its slim key
     // aggregate is computed inside that job and referenced nowhere else);
-    // released by the pipeline via cleanupCaches (Candidates discipline).
+    // released by the pipeline via cleanupCaches.
     // eagerKeys=false keeps plan construction side-effect-free (the
     // Round5ReviewSpec contract): persist() alone already optimizes the
     // cached plan, which EVALUATES LocalRelation projections — so the lazy

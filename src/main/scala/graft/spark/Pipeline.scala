@@ -75,26 +75,6 @@ object Pipeline {
     downstream(sigs, exactGroups(sigs), deduped, cfg)
   }
 
-  /** Incremental entry: fingerprints come from / go to the Iceberg-shaped
-    * store (anti-join resume, Resume.scala); clustering always runs over the
-    * full live signature set — new rows can join existing clusters.
-    *
-    * substringPass caller contract (same as [[runIncrementalScoped]]):
-    * `pages` must span BOTH sides of possible pairs — the live page source,
-    * not just the increment batch. The store holds fingerprints, not text,
-    * so a substring candidate whose old-side text is absent from `pages`
-    * stays unmatched (the left join retains it with a null overlap) — a
-    * verbatim-overlap match a one-shot run over the full corpus would find.
-    * A warning is emitted when this shape is detectable. */
-  def runIncremental(pages: DataFrame, store: graft.store.IcebergShaped.Table,
-                     cfg: GraftConfig = GraftConfig())
-      : (Result, Resume.IncrementalResult) = {
-    val inc = Resume.incrementalFingerprints(scan(pages, cfg), store, cfg)
-    val sigs = inc.signatures // a materialized checkpoint leaf (Resume.liveView)
-    warnIfSubstringTextMissing(sigs, inc, cfg)
-    (downstream(sigs, exactGroups(sigs), Pairs.substringText(pages), cfg), inc)
-  }
-
   /** The substringPass incremental hazard is live store rows whose TEXT is
     * absent from `pages` — those candidates are retained unmatched. Every
     * input row lands in the live view (committed or already resident), so
@@ -108,7 +88,10 @@ object Pipeline {
                                          cfg: GraftConfig): Unit =
     if (cfg.substringPass) {
       val inputRows = inc.newlyFingerprinted + inc.skipped
-      if (liveSigs.count() > inputRows)
+      val liveRows = labeled(liveSigs.sparkSession, "graft: incr input count") {
+        liveSigs.count()
+      }
+      if (liveRows > inputRows)
         System.err.println(
           "[graft] substringPass on an incremental run: `pages` must be the " +
             "LIVE page source (both sides of every possible pair), not just " +
@@ -116,7 +99,9 @@ object Pipeline {
             "from `pages` cannot substring-match (they are kept, unmatched)")
     }
 
-  /** Carry-over state for [[runIncrementalScoped]]: the previous run's rep
+  /** Carry-over state for [[runIncrementalScoped]], the only store-backed
+    * entry — every incremental caller (`Main --store`, `ResumeDemo`, the
+    * benchmark's chain) goes through it: the previous run's rep
     * set (with content_id, for stale detection), its scored pairs table
     * (WITHOUT the per-run dictionary ids — those are not stable across
     * generations), and its rep-level cluster assignment.
@@ -140,11 +125,12 @@ object Pipeline {
   final case class IncState(reps: DataFrame, pairs: DataFrame, repAssign: DataFrame,
                             retained: Seq[DataFrame] = Nil)
 
-  /** Incremental entry SCOPED to the increment (SURVEY §2.10 "re-cluster
-    * affected components"; reference analog mainwindow.cpp:153-154 — skip
-    * unaffected work on re-runs). Unlike [[runIncremental]], which re-runs
-    * banding + scoring + union-find over the FULL live set every increment,
-    * this path:
+  /** The incremental entry, SCOPED to the increment (SURVEY §2.10
+    * "re-cluster affected components"; reference analog
+    * mainwindow.cpp:153-154 — skip unaffected work on re-runs).
+    * Fingerprints come from / go to the Iceberg-shaped store (anti-join
+    * resume, Resume.scala), and instead of re-running banding + scoring +
+    * union-find over the FULL live set every increment, this path:
     *
     *   - generates candidates only for pairs with >= 1 NEW/CHANGED endpoint
     *     (Candidates.candidatePairs delta mode — a broadcastable new-side x
@@ -166,10 +152,16 @@ object Pipeline {
     * adversarial length-modifier asymmetry inside a near-identical
     * boilerplate group, not a shape this corpus produces.
     * substringPass callers must pass `pages` spanning BOTH sides of possible
-    * pairs (the live page source), not just the increment batch.
+    * pairs (the live page source), not just the increment batch: the store
+    * holds fingerprints, not text, so a substring candidate whose old-side
+    * text is absent from `pages` stays unmatched (the left join retains it
+    * with a null overlap). A warning is emitted when this shape is
+    * detectable.
     *
-    * First call (prev = None) falls back to the full downstream and just
-    * builds the state. Returns (result, resume stats, state-for-next-call).
+    * First call (prev = None) runs the full downstream over the live set,
+    * commits the band relation to `<root>/bands` and builds the state; a
+    * one-process run (`Main --store`) is exactly this generation. Returns
+    * (result, resume stats, state-for-next-call).
     * Metrics gain recluster_edges / affected_clusters / untouched_clusters —
     * the scale evidence that the union-find input is bounded by affected
     * components. */
@@ -208,17 +200,22 @@ object Pipeline {
 
     prev match {
       case None =>
+        val spark = sigs.sparkSession
         val res = downstream(sigs, eg, Pairs.substringText(pages), cfg)
-        val repsCk0 = reps.localCheckpoint()
+        val repsCk0 = labeled(spark, "graft: incr reps checkpoint") { reps.localCheckpoint() }
         // first-generation band commit: reps are persisted+materialized by
         // downstream() at this point, so this is one slim explode + write
-        labeled(sigs.sparkSession, "graft: band store commit") {
+        labeled(spark, "graft: band store commit") {
           bandsTable.commit(bandRowsOf(repsCk0), cfg.configFp, "overwrite")
         }
         val state = IncState(repsCk0,
-          res.pairs.drop("id_a", "id_b").localCheckpoint(),
-          res.clusters.join(reps.select("url"), Seq("url"), "left_semi")
-            .select(col("url"), col("cluster_id")).localCheckpoint(),
+          labeled(spark, "graft: incr pairs checkpoint") {
+            res.pairs.drop("id_a", "id_b").localCheckpoint()
+          },
+          labeled(spark, "graft: incr assign checkpoint") {
+            res.clusters.join(reps.select("url"), Seq("url"), "left_semi")
+              .select(col("url"), col("cluster_id")).localCheckpoint()
+          },
           retained = Seq(reps))
         (res, inc, state)
 
@@ -227,6 +224,17 @@ object Pipeline {
         // (reps): the state hand-off is all checkpoint leaves, so nothing in
         // this increment reads it — see IncState.retained
         st.retained.foreach(_.unpersist(false))
+        // The band relation this increment reads and maintains. A missing
+        // table (a wiped sibling dir, a store written before the table
+        // existed) is rebuilt from the previous generation's reps first, so
+        // there is one path below: bands are a pure function of the rep row,
+        // and the current reps are st.reps minus stale plus new by
+        // (url, content_id) — live ∪ new over the rebuilt table is the
+        // current rep set's relation.
+        if (bandsTable.isEmpty)
+          labeled(sigs.sparkSession, "graft: band store commit") {
+            bandsTable.commit(bandRowsOf(st.reps), cfg.configFp, "overwrite")
+          }
         // Lineage truncation at branch ENTRY, not just at hand-off: this
         // branch runs ~a dozen eager actions (the new/stale aggregate, delta
         // persists, splice rounds, metric aggregates) and each one would
@@ -261,15 +269,11 @@ object Pipeline {
         // generation's committed rows minus stale reps, plus a fresh explode
         // of the NEW reps only — row-identical to a full re-explode (bands
         // are a pure function of the rep row; unchanged (url, content_id)
-        // means an unchanged row). Falls back to the full explode if the
-        // band table is missing (state built by an older generation of this
-        // code or a wiped sibling dir).
-        val storedBandsFull =
-          if (bandsTable.isEmpty) None
-          else Some(bandsTable.read(sigs.sparkSession))
-        val storedBands = storedBandsFull.map(
-          _.filter(col("config_fp") === cfg.configFp)
-            .select(col("url"), col("band_id"), col("key")))
+        // means an unchanged row).
+        val storedBandsFull = bandsTable.read(sigs.sparkSession)
+        val storedBands = storedBandsFull
+          .filter(col("config_fp") === cfg.configFp)
+          .select(col("url"), col("band_id"), col("key"))
         val (hasNew, hasStale) =
           labeled(sigs.sparkSession, "graft: incr new/stale detect") {
             val n = identDiff.agg(count(when(col("__new"), 1)),
@@ -280,11 +284,10 @@ object Pipeline {
           if (hasNew) bandRowsOf(repsCk.join(newUrls, Seq("url"), "left_semi"))
             .persist(storage)
           else null
-        val bndsAll = storedBands.map { sb =>
-          val live = sb.join(staleUrls, Seq("url"), "left_anti")
-          if (hasNew) live.unionByName(newBandRows.select("url", "band_id", "key"))
-          else live
-        }
+        val liveBands = storedBands.join(staleUrls, Seq("url"), "left_anti")
+        val bndsAll =
+          if (hasNew) liveBands.unionByName(newBandRows.select("url", "band_id", "key"))
+          else liveBands
 
         // stale-key expansion (round-5 review): keptPrev below drops EVERY
         // previous pair with a stale endpoint, but under star routing those
@@ -294,25 +297,21 @@ object Pipeline {
         // re-crawled hub therefore fragmented its cluster vs one-shot. Seed
         // the delta new-side with the CURRENT members of every key a stale
         // rep used to emit — read from the committed band rows (no re-explode
-        // of the previous generation's reps), with the full-explode fallback
-        // when the band table is absent. Runs only on increments that
+        // of the previous generation's reps). Runs only on increments that
         // actually contain stale reps.
         val seedUrls =
           if (!hasStale) newUrls
           else {
-            val staleKeys = storedBands
-              .map(_.join(staleUrls, Seq("url"), "left_semi"))
-              .getOrElse(Candidates.bandKeysByUrl(
-                st.reps.join(staleUrls, Seq("url"), "left_semi"), cfg))
+            val staleKeys = storedBands.join(staleUrls, Seq("url"), "left_semi")
               .select("band_id", "key").distinct()
             val coMembers = bndsAll
-              .getOrElse(Candidates.bandKeysByUrl(repsCk, cfg))
               .join(staleKeys, Seq("band_id", "key"), "left_semi")
               .select("url").distinct()
             newUrls.unionByName(coMembers).distinct().persist(storage)
           }
 
-        val cand = Candidates.candidatePairs(repsCk, cfg, Some(seedUrls), bndsAll)
+        val cand = Candidates.candidatePairs(repsCk, cfg,
+          Some(Candidates.Delta(seedUrls, bndsAll)))
         val scoredBase = Pairs.score(cand, cfg)
         val scoredVerified =
           if (cfg.exactVerify) Pairs.exactVerify(scoredBase, repsCk, cfg) else scoredBase
@@ -364,35 +363,30 @@ object Pipeline {
         // every returned frame is a checkpoint leaf (sigs, pairs, repAssign,
         // clusters, state.reps) or persisted in its own right (reps —
         // metrics still aggregates it; the NEXT increment releases it via
-        // state.retained): the increment-local caches and the candidate
-        // layer's internals are released here, keeping a long incremental
-        // chain's cache footprint O(one increment)
+        // state.retained): the increment-local caches and the url-dedup
+        // caches are released below, keeping a long incremental chain's
+        // cache footprint O(one increment)
         // Band-table maintenance for the NEXT generation: append-only on the
         // common (no-stale) path; a stale increment compacts by committing
-        // the already-computed live ∪ new rows (no re-explode); a missing
-        // table rebuilds from the current rep set (fallback only).
+        // the already-computed live ∪ new rows (no re-explode).
         labeled(sigs.sparkSession, "graft: band store update") {
-          storedBandsFull match {
-            case None =>
-              bandsTable.commit(bandRowsOf(repsCk), cfg.configFp, "overwrite")
-            case Some(all) if hasStale =>
-              val staleThis = staleUrls.withColumn("config_fp", lit(cfg.configFp))
-              val liveAll = all.join(staleThis, Seq("url", "config_fp"), "left_anti")
-              val frame =
-                if (hasNew) liveAll.unionByName(
-                  newBandRows.select(all.columns.map(col): _*))
-                else liveAll
-              bandsTable.commit(frame, cfg.configFp, "overwrite")
-            case Some(_) if hasNew =>
-              bandsTable.commit(newBandRows, cfg.configFp, "append")
-            case Some(_) => () // no rep-set change: table already current
-          }
+          if (hasStale) {
+            val staleThis = staleUrls.withColumn("config_fp", lit(cfg.configFp))
+            val liveAll = storedBandsFull.join(staleThis, Seq("url", "config_fp"), "left_anti")
+            val frame =
+              if (hasNew) liveAll.unionByName(
+                newBandRows.select(storedBandsFull.columns.map(col): _*))
+              else liveAll
+            bandsTable.commit(frame, cfg.configFp, "overwrite")
+          } else if (hasNew)
+            bandsTable.commit(newBandRows, cfg.configFp, "append")
+          // else no rep-set change: the table is already current
         }
         if (newBandRows != null) newBandRows.unpersist(false)
         identDiff.unpersist(false)
         if (!(seedUrls eq newUrls)) seedUrls.unpersist(false)
         delta.unpersist(false); eg.members.unpersist(false)
-        Candidates.cleanupCaches(); Fingerprints.cleanupCaches()
+        Fingerprints.cleanupCaches()
         (res, inc, state)
     }
   }
@@ -467,10 +461,10 @@ object Pipeline {
         pairs.filter(col("matched")))).localCheckpoint()
     }
     // pairs and clusters are now LogicalRDD leaves: nothing references the
-    // candidate layer's internal caches (band relation, slim projection)
-    // any more — release them, or an incremental chain accumulates one band
-    // relation per increment. members likewise only fed the clustering.
-    Candidates.cleanupCaches(); Fingerprints.cleanupCaches()
+    // url-dedup caches any more — release them, or an incremental chain
+    // accumulates one set per increment. members likewise only fed the
+    // clustering.
+    Fingerprints.cleanupCaches()
     eg.members.unpersist(false)
 
     Result(sigs, eg.rejects, pairs, clusters, runMetrics(sigs, eg.reps, pairs, clusters))

@@ -116,10 +116,11 @@ object Resume {
     * new one) and rule 2 (F1: earliest (warc_ts, url) per lower(url) among
     * the rule-1 winners). Running rule 2 per batch before the commit would
     * discard a variant a later batch's OLDER twin needs to lose against.
-    * The view also honors cfg.langFilter (S2): rows committed by an
-    * unfiltered earlier config are config-compatible (langFilter is not
-    * fingerprint-affecting), so the store side must filter too or an
-    * incremental run clusters languages a one-shot run excludes.
+    * The view also honors cfg.langFilter (S2, the one rule in
+    * [[Pipeline.scan]]): rows committed by an unfiltered earlier config are
+    * config-compatible (langFilter is not fingerprint-affecting), so the
+    * store side must filter too or an incremental run clusters languages a
+    * one-shot run excludes.
     *
     * Two eager labeled jobs, both before any consumer fans out:
     *  - the key-space decisions (losing keys, duplicated keys) over a slim
@@ -134,11 +135,7 @@ object Resume {
     * and only then does the second payload pass run. */
   private[graft] def liveView(spark: SparkSession, store: IcebergShaped.Table,
                               cfg: GraftConfig): DataFrame = {
-    val base = store.read(spark).filter(col("config_fp") === cfg.configFp)
-    val rows = cfg.langFilter match {
-      case Some(ls) => base.filter(col("lang").isin(ls.toSeq: _*))
-      case None => base
-    }
+    val rows = Pipeline.scan(store.read(spark).filter(col("config_fp") === cfg.configFp), cfg)
     val decisions = Fingerprints.electUrlKeys(Fingerprints.urlKeysOf(rows), caseRule = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {

@@ -6,11 +6,13 @@ import graft.data.CorpusSpark
 import graft.spark.{GraftSession, Pipeline}
 import graft.store.IcebergShaped
 
-/** CLI surface for checkpointed resume: runs the pipeline incrementally
-  * against an Iceberg-shaped signatures store — half the corpus, then the
-  * full corpus (second run computes only the delta), then an unchanged rerun
-  * (zero fingerprint work). Prints per-run skip/compute counts and the
-  * store's snapshot lineage.
+/** CLI surface for checkpointed resume: a scoped increment chain
+  * ([[Pipeline.runIncrementalScoped]], each step handed the previous step's
+  * state) against an Iceberg-shaped signatures store — half the corpus, then
+  * the full corpus (second run fingerprints, bands and re-clusters only the
+  * delta), then an unchanged rerun (zero fingerprint work, nothing
+  * re-clustered). Prints per-run skip/compute counts and the store's
+  * snapshot lineage.
   *
   * Usage: sbt "runMain graft.tools.ResumeDemo [nDocs] [storeDir]"
   */
@@ -24,19 +26,20 @@ object ResumeDemo {
       sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(8), "graft-resume-demo")
     val store = IcebergShaped.table(root)
 
-    def step(label: String, docs: Long): Unit = {
+    def step(label: String, docs: Long, prev: Option[Pipeline.IncState]): Pipeline.IncState = {
       val t0 = System.nanoTime()
-      val (res, inc) = Pipeline.runIncremental(
-        CorpusSpark.pages(spark, docs, 8, cfg.seed), store, cfg)
+      val (res, inc, st) = Pipeline.runIncrementalScoped(
+        CorpusSpark.pages(spark, docs, 8, cfg.seed), store, prev, cfg)
       val m = res.metrics.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       println(f"$label: computed=${inc.newlyFingerprinted} skipped=${inc.skipped} " +
         f"clusters=${m("dup_clusters")} matched=${m("matched_pairs")} " +
         f"wall=${(System.nanoTime() - t0) / 1e9}%.1fs")
+      st
     }
 
-    step("run1 (half corpus)", n / 2)
-    step("run2 (full corpus)", n)
-    step("run3 (unchanged)  ", n)
+    val st1 = step("run1 (half corpus)", n / 2, None)
+    val st2 = step("run2 (full corpus)", n, Some(st1))
+    step("run3 (unchanged)  ", n, Some(st2))
 
     println(s"store=$root version=${store.currentVersion.get} snapshots:")
     var v = store.currentVersion.get

@@ -1,15 +1,16 @@
 package graft.spark
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.GraftConfig
 import graft.data.CorpusSpark
 import graft.store.IcebergShaped
 
-/** Round-6 (r5 VERDICT #1): the band relation is persisted in the store
-  * between scoped increments, and a later increment's candidate generation
-  * READS it instead of re-exploding the full rep set.
+/** The band relation is persisted in the store between scoped increments,
+  * and a later increment's candidate generation READS it instead of
+  * re-exploding the full rep set.
   *
   * The load-bearing pin is the poison test: after increment 1, the committed
   * band rows of ONE old rep are removed from the band table. If increment 2
@@ -17,8 +18,12 @@ import graft.store.IcebergShaped
   * would still band-join with the increment's new near-duplicate and the
   * pair would appear; because banding is store-backed, the pair cannot be
   * proposed. A fresh-explode implementation fails this test.
+  *
+  * A missing table is rebuilt from the previous generation's reps before the
+  * increment runs; the rebuild test pins that the increment then equals the
+  * intact chain's.
   */
-class Round6BandStoreSpec extends AnyFunSuite {
+class BandStoreSpec extends AnyFunSuite {
   private lazy val spark = SparkTest.spark
   private val cfg = GraftConfig()
 
@@ -92,5 +97,52 @@ class Round6BandStoreSpec extends AnyFunSuite {
     assert(stored.exceptAll(expected).isEmpty && expected.exceptAll(stored).isEmpty,
       "after the append increment the stored relation must equal the current " +
         "rep set's bands (new reps appended, nothing lost)")
+  }
+
+  test("a wiped band table is rebuilt before the increment: pairs and " +
+    "clusters equal the intact chain's and the table ends current") {
+    import graft.data.Render
+    val base = CorpusSpark.pages(spark, 320L, 4, cfg.seed)
+    // increment: 160 new pages plus a re-crawl of a base rep with new text,
+    // so the increment has stale reps as well as new ones
+    val victim = graft.data.Corpus.urlOf(0L)
+    val newText = (0 until 300).map(i => f"recrawl$i%05d").mkString(" ")
+    val full = CorpusSpark.pages(spark, 480L, 4, cfg.seed)
+    val current = full.filter(col("url") =!= victim).unionByName(
+      full.filter(col("url") === victim)
+        .withColumn("warc_ts",
+          timestamp_millis(unix_millis(col("warc_ts")) + lit(86400000L)))
+        .withColumn("html", lit(Render.html(newText, 3L)))
+        .withColumn("text", lit(newText)))
+
+    def sortedRows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+
+    def chain(wipe: Boolean): (Seq[String], Seq[String], Pipeline.IncState, IcebergShaped.Table) = {
+      val store = tmpStore()
+      val (_, _, st1) = Pipeline.runIncrementalScoped(base, store, None, cfg)
+      assert(!st1.reps.filter(col("url") === victim).isEmpty,
+        s"fixture broken: $victim must be a base rep")
+      val bandsTable = IcebergShaped.table(store.root + "/bands")
+      if (wipe) {
+        bandsTable.delete(spark, lit(true))
+        assert(bandsTable.isEmpty, "fixture broken: the band table must be empty")
+      }
+      val (r2, _, st2) = Pipeline.runIncrementalScoped(current, store, Some(st1), cfg)
+      (sortedRows(r2.pairs), sortedRows(r2.clusters), st2, bandsTable)
+    }
+
+    val (intactPairs, intactClusters, _, _) = chain(wipe = false)
+    val (pairs, clusters, st2, bandsTable) = chain(wipe = true)
+    assert(pairs === intactPairs)
+    assert(clusters === intactClusters)
+
+    val stored = bandsTable.read(spark)
+      .filter(col("config_fp") === cfg.configFp)
+      .select("url", "band_id", "key")
+    val expected = Candidates.bandKeysByUrl(st2.reps, cfg)
+    assert(stored.exceptAll(expected).isEmpty && expected.exceptAll(stored).isEmpty,
+      "after the rebuild and the increment the stored relation must equal the " +
+        "current rep set's bands")
   }
 }

@@ -327,7 +327,7 @@ class HeavyKeyStrategySpec extends AnyFunSuite {
         .filter(org.apache.spark.sql.functions.col("reject_reason").isNull)
       val out = Candidates.candidatePairs(reps, cfg)
         .select("url_a", "url_b").as[(String, String)].collect().toSet
-      Candidates.cleanupCaches(); Fingerprints.cleanupCaches()
+      Fingerprints.cleanupCaches()
       out
     }
     val viaHeavy = pairSetOf(base.copy(heavyBandKeyCap = 5))

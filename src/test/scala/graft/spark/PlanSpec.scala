@@ -79,7 +79,8 @@ class PlanSpec extends AnyFunSuite {
     // TYPE is the functional discriminator. (The old RDD-leaf counting
     // broke when the candidate layer's internal frames became checkpoint
     // leaves in round 6 — every mode has LogicalRDD leaves now.)
-    val delta = Candidates.candidatePairs(reps, cfg, Some(nu))
+    val delta = Candidates.candidatePairs(reps, cfg,
+      Some(Candidates.Delta(nu, Candidates.bandKeysByUrl(reps, cfg))))
     assert(delta.schema("id_a").dataType ==
       org.apache.spark.sql.types.StringType,
       "delta mode must be url-keyed (no dictionary sort on increments)")
@@ -87,7 +88,6 @@ class PlanSpec extends AnyFunSuite {
     assert(oneShot.schema("id_a").dataType ==
       org.apache.spark.sql.types.LongType,
       "one-shot mode must keep the dense dictionary ids")
-    Candidates.cleanupCaches()
   }
 
   test("exact-verify shingle join is a hash join gated to the admitted stratum") {

@@ -172,14 +172,15 @@ class IncrementalScopedSpec extends AnyFunSuite {
     // broken shape (pre-fix Pipeline): the delta new-side contains only the
     // re-crawled url, whose new keys don't touch the group -> zero delta
     // pairs for it, and keptPrev lost every hub link
+    val remainingBands = Candidates.bandKeysByUrl(remaining, cfg2)
     val unseeded = Candidates.candidatePairs(remaining, cfg2,
-      Some(Seq.empty[String].toDF("url")))
+      Some(Candidates.Delta(Seq.empty[String].toDF("url"), remainingBands)))
     assert(unseeded.isEmpty, "unseeded heavy group must emit no delta pairs")
 
     // fixed shape: Pipeline seeds ALL current members of the stale rep's
     // keys -> the full star/path topology regenerates and reconnects them
     val seeded = Candidates.candidatePairs(remaining, cfg2,
-      Some(remaining.select("url")))
+      Some(Candidates.Delta(remaining.select("url"), remainingBands)))
       .select("url_a", "url_b").as[(String, String)].collect()
     val uf = new graft.core.UnionFind[String]
     seeded.foreach { case (a, b) => uf.union(a, b)(graft.core.Utf8Ordering) }
