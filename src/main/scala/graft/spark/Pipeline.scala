@@ -270,7 +270,13 @@ object Pipeline {
         // of the NEW reps only — row-identical to a full re-explode (bands
         // are a pure function of the rep row; unchanged (url, content_id)
         // means an unchanged row).
-        val storedBandsFull = bandsTable.read(sigs.sparkSession)
+        // Still empty after the rebuild only when the previous generation
+        // had no band rows (an empty, all-rejected or all-filtered batch):
+        // an empty partitionBy write lists no files, so the relation is an
+        // empty frame of the table's schema rather than a store read.
+        val storedBandsFull =
+          if (bandsTable.isEmpty) bandRowsOf(st.reps.limit(0))
+          else bandsTable.read(sigs.sparkSession)
         val storedBands = storedBandsFull
           .filter(col("config_fp") === cfg.configFp)
           .select(col("url"), col("band_id"), col("key"))

@@ -21,7 +21,9 @@ import graft.store.IcebergShaped
   *
   * A missing table is rebuilt from the previous generation's reps before the
   * increment runs; the rebuild test pins that the increment then equals the
-  * intact chain's.
+  * intact chain's. A previous generation with no reps leaves the table
+  * empty (an empty write lists no files); the empty-chain test pins that the
+  * next increments still run and equal a one-shot run.
   */
 class BandStoreSpec extends AnyFunSuite {
   private lazy val spark = SparkTest.spark
@@ -143,6 +145,38 @@ class BandStoreSpec extends AnyFunSuite {
     val expected = Candidates.bandKeysByUrl(st2.reps, cfg)
     assert(stored.exceptAll(expected).isEmpty && expected.exceptAll(stored).isEmpty,
       "after the rebuild and the increment the stored relation must equal the " +
+        "current rep set's bands")
+  }
+
+  test("a chain whose first generations have no reps runs: empty batches " +
+    "commit no band files, and the next non-empty increment equals a " +
+    "one-shot run") {
+    val pages = CorpusSpark.pages(spark, 320L, 4, cfg.seed)
+    val store = tmpStore()
+    val bandsTable = IcebergShaped.table(store.root + "/bands")
+    val (_, _, st1) = Pipeline.runIncrementalScoped(pages.limit(0), store, None, cfg)
+    assert(st1.reps.isEmpty && bandsTable.isEmpty,
+      "fixture broken: an empty first generation must leave the band table empty")
+    // a second empty generation reads (and rebuilds) the empty table too
+    val (_, _, st2) = Pipeline.runIncrementalScoped(pages.limit(0), store, Some(st1), cfg)
+    assert(bandsTable.isEmpty)
+    val (r3, _, st3) = Pipeline.runIncrementalScoped(pages, store, Some(st2), cfg)
+    val oneShot = Pipeline.run(pages, cfg)
+
+    def sortedRows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    assert(r3.pairs.filter(col("matched")).count() > 0, "fixture broken: no matched pairs")
+    assert(sortedRows(r3.pairs) ===
+      sortedRows(oneShot.pairs.select(r3.pairs.columns.map(col): _*)))
+    assert(sortedRows(r3.clusters) ===
+      sortedRows(oneShot.clusters.select(r3.clusters.columns.map(col): _*)))
+
+    val stored = bandsTable.read(spark)
+      .filter(col("config_fp") === cfg.configFp)
+      .select("url", "band_id", "key")
+    val expected = Candidates.bandKeysByUrl(st3.reps, cfg)
+    assert(stored.exceptAll(expected).isEmpty && expected.exceptAll(stored).isEmpty,
+      "after the first non-empty increment the stored relation must equal the " +
         "current rep set's bands")
   }
 }
