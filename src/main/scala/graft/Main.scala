@@ -94,11 +94,7 @@ object Main {
     val opts = parseArgs(args)
     val command = opts.getOrElse("command", "dedup")
 
-    val builder = SparkSession.builder()
-      .appName("graft-dedup")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    val builder = SparkSession.builder().appName("graft-dedup")
     // under spark-submit the master comes from the submit args; standalone
     // runs fall back to all local cores
     val spark =

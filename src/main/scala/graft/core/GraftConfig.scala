@@ -48,28 +48,14 @@ final case class GraftConfig(
     /** MinHash LSH bands (rows per band = numPerm / minhashBands). Default
       * 32 bands x 4 rows: P(candidate) = 1-(1-J^4)^32 — ~1.0 at J=0.8,
       * 0.9998 at J=0.7 — sized to catch threshold-boundary pairs (raw
-      * Hamming 4..8) that the simhash bands no longer guarantee. */
+      * Hamming 4..8). */
     minhashBands: Int = 32,
-    /** SimHash LSH band width in bits; 64/simhashBandBits bands per slot.
-      * Pigeonhole: B bands of w bits guarantee any pair within Hamming B-1
-      * shares an exact band. w=8 (B=8) guarantees the full <=7-bit default
-      * threshold but keys carry only 8 bits of entropy — random docs collide
-      * at 1/256 per band, which goes quadratic beyond ~10^4 docs. Default
-      * w=16 (B=4, guarantee <=3) keeps the guarantee for the near-identical
-      * mass (exact-ish pairs; the intact slot of head/tail-modified cutEnds
-      * pairs) with 65536-value keys, and delegates the Hamming 4..8 boundary
-      * zone to the minhash family; the recall >=0.99 gate is verified
-      * empirically by the pipeline spec. Shrink to 8 only for small corpora
-      * where guaranteed recall 1.0 matters more than join load. */
+    /** SimHash band width in bits (64 / simhashBandBits bands per slot).
+      * No band family reads it: candidates come from the minhash, rescue
+      * and sampled-shingle families alone (Candidates.bands). It stays a
+      * field because configFp hashes it, so stored signatures keep their
+      * config fingerprint. */
     simhashBandBits: Int = 16,
-    /** Emit the simhash slice band families at all. The slot-wise minhash
-      * families alone catch a Hamming<=3 pair (slot Jaccard >= ~0.95) with
-      * P(miss) ~ 3e-24, so the slices are belt-and-suspenders; their 16-bit
-      * keys collide RANDOMLY at n/65536 per band and contributed ~40% of all
-      * candidate volume at 200k docs (zero additional matches). Default off:
-      * the minhash-only path is the production web-scale posture; enable for
-      * small corpora where the pigeonhole guarantee is wanted on paper. */
-    simhashSliceBands: Boolean = false,
     /** Length-modifier tolerance in characters (the 1000 ms analog, see scaladoc). */
     lenTolChars: Long = 64L,
     /** Same-length bonus bits (reference: prefs.h:23 `_sameDurationModifier` = 1). */
@@ -156,7 +142,6 @@ final case class GraftConfig(
     * (reference: comparison.cpp:141-142). */
   def exactVerifyGate: Int = math.max(simBitsThreshold, 44)
 
-  def simhashBands: Int = 64 / simhashBandBits
   def minhashRowsPerBand: Int = numPerm / minhashBands
 
   /** Version/compat stamp for the signatures store — the analog of the

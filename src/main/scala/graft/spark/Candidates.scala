@@ -10,10 +10,6 @@ import graft.core.GraftConfig
   * slot-wise like the reference (hash[0] vs hash[0], hash[1] vs hash[1],
   * comparison.cpp:133-136), so every family is slot-wise too:
   *
-  *  - simhash slices (head: 0..B-1, tail: B..2B-1): w-bit slices of the slot
-  *    simhash. Pigeonhole: B bands of w bits => any pair within Hamming B-1
-  *    on that slot shares a band. Default w=16 (B=4, guarantee <=3, 65536-value
-  *    keys) — covers the near-identical mass with joinable key entropy.
   *  - slot-wise minhash bands (head: 100.., tail: 200..): 64-bit hash of r
   *    consecutive slot-minhash rows. P(candidate) = 1-(1-J_slot^4)^32 — ~1.0
   *    at the slot Jaccard levels that clear the 57/64 Hamming threshold.
@@ -23,9 +19,9 @@ import graft.core.GraftConfig
   *    emitted only for slots with < shortSlotShingles distinct shingles.
   *    Short slots have noisy SimHash bits (a matching pair can sit at slot
   *    Hamming 5-8 with slot Jaccard ~0.3), where r=4 banding under-recalls;
-  *    r=2 x 64 catches J_slot=0.3 w.p. 0.9976 — and unlike low-bit simhash
-  *    slices, minhash keys collide only for genuinely similar docs, so the
-  *    family adds no random join load.
+  *    r=2 x 64 catches J_slot=0.3 w.p. 0.9976 — and minhash keys collide
+  *    only for genuinely similar docs, so the family adds no random join
+  *    load.
   *  - (optional, cfg.substringPass) sampled-shingle bands (band_id 1000):
   *    key = shingle hash where hash % sampleMod == 0 (winnowing-style
   *    sample) — the candidate source for the suffix-array substring pass
@@ -33,11 +29,10 @@ import graft.core.GraftConfig
   *    Jaccard/Hamming are far from the thresholds.
   *
   * Scale note (10^12 docs): exact-dup pre-grouping (Pipeline) removes the
-  * dominant duplicate mass before banding; 16-bit simhash keys hold to ~10^8
-  * reps per shard-of-corpus; beyond that, drop the simhash slice families
-  * (minhash keys carry full 64-bit entropy at any scale) and lean on the
-  * recall tests to re-verify the >=0.99 gate. Hot keys that remain are
-  * handled below by the salted triangle join, not by luck.
+  * dominant duplicate mass before banding, and every band key is a 64-bit
+  * minhash or shingle hash, so keys keep their entropy at any scale. Hot
+  * keys that remain are handled below by the salted triangle join, not by
+  * luck.
   */
 object Candidates {
 
@@ -52,26 +47,10 @@ object Candidates {
     * bandwidth-bound stages (round-4 scaling measurement). */
 
   /** Explode signatures (representatives, keyed by dictionary `id`) into band
-    * rows. band_id layout: 0..B-1 simhash head slices, B..2B-1 simhash tail
-    * slices, 100.. minhash head bands, 200.. minhash tail bands, 300../400..
-    * rescue bands for short head/tail slots, 1000 sampled shingles. */
+    * rows. band_id layout: 100.. minhash head bands, 200.. minhash tail
+    * bands, 300.. rescue bands for short head then tail slots, 1000 sampled
+    * shingles. */
   def bands(reps: DataFrame, cfg: GraftConfig): DataFrame = {
-    val B = cfg.simhashBands
-    val w = cfg.simhashBandBits
-
-    def slices(c: Column, width: Int, nb: Int, idBase: Int): Seq[Column] =
-      (0 until nb).map { b =>
-        struct(lit(idBase + b).as("band_id"),
-          shiftrightunsigned(c, b * width).bitwiseAND(lit((1L << width) - 1)).as("key"))
-      }
-
-    // slice structs are omitted from the explode entirely when the family is
-    // off — gating them to null keys still materialized 2B dead rows per rep
-    // through the hottest explode before the isNotNull filter dropped them
-    val (headBands, tailBands) =
-      if (cfg.simhashSliceBands)
-        (slices(col("simhash_head"), w, B, 0), slices(col("simhash_tail"), w, B, B))
-      else (Nil, Nil)
     val mhHead: Seq[Column] = (0 until cfg.minhashBands).map { b =>
       struct(lit(100 + b).as("band_id"), get(col("mh_bands_head"), lit(b)).as("key"))
     }
@@ -87,10 +66,9 @@ object Candidates {
     }
 
     val base = reps
-      .select(col("id"), col("simhash_head"), col("simhash_tail"),
-        col("mh_bands_head"), col("mh_bands_tail"),
+      .select(col("id"), col("mh_bands_head"), col("mh_bands_tail"),
         col("mh_rescue_head"), col("mh_rescue_tail"),
-        explode(array(headBands ++ tailBands ++ mhHead ++ mhTail ++ shortHead ++ shortTail: _*)).as("b"))
+        explode(array(mhHead ++ mhTail ++ shortHead ++ shortTail: _*)).as("b"))
       .select(col("id"), col("b.band_id").as("band_id"), col("b.key").as("key"))
       .filter(col("key").isNotNull)
 
@@ -195,31 +173,26 @@ object Candidates {
       (if (cfg.substringPass) Seq("ss_keys") else Nil)
     val repProj = reps
       .select(("url" +: (bandCols ++ Seq("text_len", "size"))).map(col): _*)
-    // EAGER localCheckpoint, not persist+count (round-6): repSlim and the
-    // band relation are referenced by ~6 join branches of the pairs plan,
-    // and although the CACHE deduplicates execution, the LOGICAL tree below
-    // each reference is re-analyzed per branch — measured as a multi-second
-    // zero-job driver gap before the pairs checkpoint. A checkpoint leaf
-    // makes each reference O(1) to plan, costs the same one materialization
-    // pass the count() already paid, and cannot race concurrent AQE stage
-    // jobs (it materializes before any consumer is planned). Blocks are
-    // freed by the ContextCleaner once the pipeline's checkpointed results
-    // drop the references.
-    val repSlim = Pipeline.labeled(spark, "graft: rep projection") {
-      (sortedUrls match {
+    // repSlim and the band relation are referenced by ~6 join branches of
+    // the pairs plan: checkpoint leaves (Pipeline.leaf), so each reference
+    // is O(1) to plan — as cached frames, the tree below each reference was
+    // re-analyzed per branch (a multi-second zero-job driver gap before the
+    // pairs checkpoint).
+    val repSlim = Pipeline.leaf(spark, "graft: rep projection") {
+      sortedUrls match {
         case Some(su) => repProj.join(su.zipWithIndex().toDF("url", "id"), "url")
         case None => repProj.withColumn("id", col("url"))
-      }).localCheckpoint()
+      }
     }
 
     // the band relation feeds the key-count pass, both sides of the light
     // self-join and both sides of the heavy triangle join. In delta mode it
     // is the caller's (store-backed) relation, never an explode here.
-    val bnds = Pipeline.labeled(spark, "graft: band relation build") {
-      (delta match {
+    val bnds = Pipeline.leaf(spark, "graft: band relation build") {
+      delta match {
         case Some(d) => d.bands.select(col("url").as("id"), col("band_id"), col("key"))
         case None => bands(repSlim, cfg)
-      }).localCheckpoint()
+      }
     }
     // sortedUrls (one-shot mode only) is released after the rawPairs match
     // below, once everything downstream of the dictionary is planned
@@ -237,10 +210,10 @@ object Candidates {
     // the same rows regardless of partitioning or task order (ids are
     // themselves a pure function of the url set), so the pairs TABLE (not
     // just the clusters) is partition-invariant — SURVEY §5.7.
-    // Same checkpoint-leaf discipline as bnds above: the frame feeds two
-    // consumers one-shot (light anti-join + heavy semi-join) and three in
-    // delta mode — unmaterialized, each action re-ran the aggregation over
-    // the full band relation and re-broadcast it.
+    // A leaf like bnds above: the frame feeds two consumers one-shot (light
+    // anti-join + heavy semi-join) and three in delta mode — unmaterialized,
+    // each action re-ran the aggregation over the full band relation and
+    // re-broadcast it.
     //
     // The common case has NO heavy keys (boilerplate bands only appear in
     // skewed corpora): the leaf is tiny, so one O(1) emptiness probe skips
@@ -248,9 +221,9 @@ object Candidates {
     // full band-relation scan for the heavy slice plus the anti-join stream
     // filter on every light row. Pair-set identical by construction (an
     // empty heavy set routes nothing through either branch).
-    val (heavyKeys, noHeavy) = Pipeline.labeled(spark, "graft: heavy-key detect") {
+    val heavyKeys = Pipeline.leaf(spark, "graft: heavy-key detect") {
       val frac = cfg.heavyDetectSampleFrac
-      val hk = (if (frac <= 0)
+      if (frac <= 0)
         bnds.groupBy("band_id", "key").count()
           .filter(col("count") > cfg.heavyBandKeyCap)
           .select("band_id", "key")
@@ -262,9 +235,9 @@ object Candidates {
           .groupBy("band_id", "key").count()
           .filter(col("count") > cfg.heavyBandKeyCap * (cut.toDouble / m) / 2)
           .select("band_id", "key")
-      }).localCheckpoint()
-      (hk, hk.isEmpty)
+      }
     }
+    val noHeavy = Pipeline.labeled(spark, "graft: heavy-key detect")(heavyKeys.isEmpty)
     val light =
       if (noHeavy) bnds
       else bnds.join(broadcast(heavyKeys), Seq("band_id", "key"), "left_anti")
@@ -355,9 +328,8 @@ object Candidates {
           // Exchange boundary, so nothing is reused across references. An
           // eager leaf bounds that to ONE full scan; the materialized rows
           // are heavy-group volume (the rows heavyPairGen processes anyway).
-          val heavyRows = Pipeline.labeled(spark, "graft: heavy rows slice") {
+          val heavyRows = Pipeline.leaf(spark, "graft: heavy rows slice") {
             bnds.join(broadcast(heavyKeys), Seq("band_id", "key"), "left_semi")
-              .localCheckpoint()
           }
           lightPairs.unionByName(heavyPairGen(heavyRows))
         }
@@ -388,9 +360,11 @@ object Candidates {
         //    (no Exchange under a broadcast semi-join => no reuse; measured as
         //    ~143 leaf re-scans / 371 task-s inside one 60k increment's delta
         //    materialization).
-        val (newIds, bndsNew) = Pipeline.labeled(spark, "graft: incr new-band slice") {
-          val ids = d.newUrls.select(col("url").as("id")).distinct().localCheckpoint()
-          (ids, bnds.join(ids, Seq("id"), "left_semi").localCheckpoint())
+        val newIds = Pipeline.leaf(spark, "graft: incr new-band slice") {
+          d.newUrls.select(col("url").as("id")).distinct()
+        }
+        val bndsNew = Pipeline.leaf(spark, "graft: incr new-band slice") {
+          bnds.join(newIds, Seq("id"), "left_semi")
         }
         val lightNew =
           if (noHeavy) bndsNew
@@ -419,9 +393,8 @@ object Candidates {
             .join(bndsNew.select("band_id", "key").distinct(), Seq("band_id", "key"), "left_semi")
           // same eager-leaf rationale as the one-shot heavyRows above: ~5
           // references inside heavyPairGen, each otherwise a full-relation scan
-          val heavyRows = Pipeline.labeled(spark, "graft: heavy rows slice") {
+          val heavyRows = Pipeline.leaf(spark, "graft: heavy rows slice") {
             bnds.join(broadcast(touchedHeavy), Seq("band_id", "key"), "left_semi")
-              .localCheckpoint()
           }
           // no explicit broadcast hint on the new-id flags: an explicit hint
           // cannot be demoted at runtime, so a LARGE increment (the id set is

@@ -110,15 +110,13 @@ object Clusters {
       labeled.groupBy("url").agg(min("cluster_id").as("cluster_id"))
     }
 
-    // EAGER checkpoints are load-bearing: AQE materializes query stages
-    // concurrently (CompletableFuture jobs), and concurrent consumers of a
-    // lazily-checkpointed/uncached RDD RACE — each recomputes the full
-    // upstream lineage (measured 12x duplicate 11-22s computations at 200k
-    // docs with eager=false). One eager job here computes the pipeline once;
-    // every later stage reads the checkpoint blocks.
-    var edges = Pipeline.labeled(spark, "graft: union-find edges checkpoint") {
-      pairs.select(col("u"), col("v"))
-        .filter(col("u") =!= col("v")).distinct().localCheckpoint()
+    // EAGER checkpoints are load-bearing ([[Pipeline.leaf]]): with lazy
+    // ones, concurrent AQE stage jobs each recomputed the full upstream
+    // lineage (measured 12x duplicate 11-22s computations at 200k docs).
+    // One eager job here computes the pipeline once; every later stage
+    // reads the checkpoint blocks.
+    var edges = Pipeline.leaf(spark, "graft: union-find edges checkpoint") {
+      pairs.select(col("u"), col("v")).filter(col("u") =!= col("v")).distinct()
     }
     var (cnt, sig, bytes) = Pipeline.labeled(spark, "graft: union-find signature") {
       signature(edges)
@@ -132,6 +130,7 @@ object Clusters {
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxRounds) {
+      // bare (not Pipeline.leaf): perfbench counts unlabeled star-round jobs
       edges = smallStar(largeStar(edges)).localCheckpoint()
       val (c2, s2, b2) = signature(edges)
       if (fitsLocal(c2, b2)) return localFinish(edges)

@@ -45,41 +45,6 @@ final case class SignatureRow(
   */
 object Fingerprints {
 
-  /** Frames persisted internally by [[urlDedup]] (the slim (url, warc_ts)
-    * decision frame). The PIPELINE owns release: it calls [[cleanupCaches]]
-    * once its results are lineage-truncated; until then they back every
-    * dedup decision branch. Re-materialization after release is correct
-    * (just recomputes).
-    *
-    * CONTRACT: the registry is JVM-global, so pipeline runs must not
-    * overlap — a concurrent run's cleanupCaches would unpersist this run's
-    * frames mid-query (correct results, silent full recomputation). One
-    * pipeline at a time per SparkSession, which is how every entry point
-    * drives it. */
-  private val persistedFrames =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-  def cleanupCaches(): Unit = {
-    var df = persistedFrames.poll()
-    while (df != null) { df.unpersist(false); df = persistedFrames.poll() }
-  }
-
-  /** Persist `df`, materialize it in one labeled job and register it for
-    * [[cleanupCaches]] — unless the cache already holds the same plan. The
-    * fingerprint stage and the substring pass dedup the same `pages` (as do
-    * Resume's commit path and a scoped increment's substring pass), so the
-    * second caller finds the first one's frames still cached: re-persisting
-    * them is refused by the cache manager ("Asked to cache already cached
-    * data") and re-counting them is a wasted job. Only this helper persists
-    * these plans, so a cached plan is always a materialized one. */
-  private def persistOnce(df: DataFrame, label: String): DataFrame = {
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      persistedFrames.add(df)
-      Pipeline.labeled(df.sparkSession, label) { df.count() }
-    }
-    df
-  }
-
   /** content identity = md5(url + "_" + epochMillis(warc_ts)) — the analog of
     * the reference's md5(filename + "_" + mtime) cache key (db.cpp:22-30):
     * url-stable, content-version-sensitive. */
@@ -189,10 +154,11 @@ object Fingerprints {
     urlDedup(pages, caseRule = false, eagerKeys = false)
 
   /** [[dropRecrawlDuplicateUrls]] with its decision frame materialized NOW
-    * (one job): for eager call sites (Resume's commit path) where the first
-    * downstream action fans out into concurrent AQE stage jobs that would
-    * otherwise race the unpopulated decisions cache. The public entry
-    * points stay lazy (plan-construction contract, Round5ReviewSpec). */
+    * as a checkpoint leaf (one job): for eager call sites (Resume's commit
+    * path) where the first downstream action fans out into concurrent AQE
+    * stage jobs that would otherwise each re-derive the decisions. The
+    * public entry points stay lazy (plan-construction contract,
+    * Round5ReviewSpec). */
   private[graft] def dropRecrawlDuplicateUrlsEager(pages: DataFrame): DataFrame =
     urlDedup(pages, caseRule = false, eagerKeys = true)
 
@@ -212,16 +178,14 @@ object Fingerprints {
     // logical TREE each reference re-derives it: the broadcast builds ran
     // as concurrent jobs that each re-scanned `pages` (measured: a 6-job
     // ladder of 256-task stages owning the sigs-build wall at 60k docs).
-    // Eager mode persists + materializes it once (one job; its slim key
-    // aggregate is computed inside that job and referenced nowhere else);
-    // released by the pipeline via cleanupCaches.
-    // eagerKeys=false keeps plan construction side-effect-free (the
-    // Round5ReviewSpec contract): persist() alone already optimizes the
-    // cached plan, which EVALUATES LocalRelation projections — so the lazy
-    // entry points skip the persist too.
+    // Eager mode makes it a checkpoint leaf (Pipeline.leaf: one job; its
+    // slim key aggregate is computed inside that job and referenced nowhere
+    // else). eagerKeys=false keeps plan construction side-effect-free (the
+    // Round5ReviewSpec contract).
     val decisions0 = electUrlKeys(urlKeysOf(pages), caseRule)
     val decisions =
-      if (!eagerKeys) decisions0 else persistOnce(decisions0, "graft: url-dedup decisions")
+      if (!eagerKeys) decisions0
+      else Pipeline.leaf(pages.sparkSession, "graft: url-dedup decisions")(decisions0)
     // the broadcast hints are LOAD-BEARING (round-6 measurement): this dedup
     // is the child of the persisted signatures frame, and AQE does not
     // re-plan join strategies inside a cached-plan build — without the hints

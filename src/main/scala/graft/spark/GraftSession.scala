@@ -38,10 +38,12 @@ object GraftSession {
   }
 
   /** Tuning applied to an externally-provided session (spark-submit path):
-    * only settable-at-runtime knobs. */
+    * only settable-at-runtime knobs — the same AQE, skew-join and UTC
+    * session time zone as [[local]]. */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark
   }
 }

@@ -106,11 +106,12 @@ object Pipeline {
     * (WITHOUT the per-run dictionary ids — those are not stable across
     * generations), and its rep-level cluster assignment.
     *
-    * State frames are localCheckpoint'ed at hand-off: an increment chain
+    * State frames are checkpoint leaves ([[leaf]]) at hand-off — pairs is
+    * the generation's pairs leaf minus the id columns: an increment chain
     * otherwise stacks every previous generation's lineage into the current
     * plan — plan size (and plan-STRING size in listener events) grows per
-    * increment until analysis itself becomes the bottleneck. Checkpointing
-    * makes each increment's plans O(this increment). On a real cluster the
+    * increment until analysis itself becomes the bottleneck. Leaves make
+    * each increment's plans O(this increment). On a real cluster the
     * durable version of this hand-off is the store itself (write
     * pairs/assign as tables, read them back next increment).
     *
@@ -202,19 +203,18 @@ object Pipeline {
       case None =>
         val spark = sigs.sparkSession
         val res = downstream(sigs, eg, Pairs.substringText(pages), cfg)
-        val repsCk0 = labeled(spark, "graft: incr reps checkpoint") { reps.localCheckpoint() }
+        val repsCk0 = leaf(spark, "graft: incr reps checkpoint")(reps)
         // first-generation band commit: reps are persisted+materialized by
         // downstream() at this point, so this is one slim explode + write
         labeled(spark, "graft: band store commit") {
           bandsTable.commit(bandRowsOf(repsCk0), cfg.configFp, "overwrite")
         }
-        val state = IncState(repsCk0,
-          labeled(spark, "graft: incr pairs checkpoint") {
-            res.pairs.drop("id_a", "id_b").localCheckpoint()
-          },
-          labeled(spark, "graft: incr assign checkpoint") {
+        // res.pairs is already a leaf: dropping the dictionary ids over it
+        // is an O(1) plan, so the state needs no checkpoint of its own
+        val state = IncState(repsCk0, res.pairs.drop("id_a", "id_b"),
+          leaf(spark, "graft: incr assign checkpoint") {
             res.clusters.join(reps.select("url"), Seq("url"), "left_semi")
-              .select(col("url"), col("cluster_id")).localCheckpoint()
+              .select(col("url"), col("cluster_id"))
           },
           retained = Seq(reps))
         (res, inc, state)
@@ -246,9 +246,7 @@ object Pipeline {
         // No extra storage vs before — the state hand-off already
         // checkpointed reps at exit; this is the same checkpoint, earlier,
         // reused for both the increment's work and the outgoing state.
-        val repsCk = labeled(sigs.sparkSession, "graft: incr reps checkpoint") {
-          reps.localCheckpoint()
-        }
+        val repsCk = leaf(sigs.sparkSession, "graft: incr reps checkpoint")(reps)
         // new/changed vs stale reps by (url, content_id): a re-crawled url
         // (new warc_ts -> new content_id) is BOTH stale (old pairs invalid)
         // and new (delta candidates regenerate them); a demoted rep (its
@@ -274,9 +272,13 @@ object Pipeline {
         // had no band rows (an empty, all-rejected or all-filtered batch):
         // an empty partitionBy write lists no files, so the relation is an
         // empty frame of the table's schema rather than a store read.
+        // the read lists the table's files in a job of its own: it runs
+        // under the label of its first consumer, the band relation build
         val storedBandsFull =
           if (bandsTable.isEmpty) bandRowsOf(st.reps.limit(0))
-          else bandsTable.read(sigs.sparkSession)
+          else labeled(sigs.sparkSession, "graft: band relation build") {
+            bandsTable.read(sigs.sparkSession)
+          }
         val storedBands = storedBandsFull
           .filter(col("config_fp") === cfg.configFp)
           .select(col("url"), col("band_id"), col("key"))
@@ -313,7 +315,7 @@ object Pipeline {
             val coMembers = bndsAll
               .join(staleKeys, Seq("band_id", "key"), "left_semi")
               .select("url").distinct()
-            newUrls.unionByName(coMembers).distinct().persist(storage)
+            newUrls.unionByName(coMembers).distinct()
           }
 
         val cand = Candidates.candidatePairs(repsCk, cfg,
@@ -339,22 +341,18 @@ object Pipeline {
         // substring-matched pair to overlap_len=null / matched=false.
         val deltaNew = delta.select(keptPrev.columns.map(col): _*)
           .join(keptPrev.select("url_a", "url_b"), Seq("url_a", "url_b"), "left_anti")
-        val pairs = labeled(sigs.sparkSession, "graft: incr pairs checkpoint") {
-          keptPrev.unionByName(deltaNew).localCheckpoint()
+        val pairs = leaf(sigs.sparkSession, "graft: incr pairs checkpoint") {
+          keptPrev.unionByName(deltaNew)
         }
 
         val splice = labeled(sigs.sparkSession, "graft: incr splice") {
           Clusters.spliceAssign(repsCk.select("url"), st.repAssign,
             st.pairs.filter(col("matched")), delta.filter(col("matched")), staleUrls)
         }
-        val repAssign = labeled(sigs.sparkSession, "graft: incr assign checkpoint") {
-          splice.assign.localCheckpoint()
-        }
+        val repAssign = leaf(sigs.sparkSession, "graft: incr assign checkpoint")(splice.assign)
         // same result-boundary lineage truncation as downstream(): the
         // increment-chain plans stay O(this increment) for every consumer
-        val clusters = labeled(sigs.sparkSession, "graft: incr clustering") {
-          expandAndElect(eg, repAssign).localCheckpoint()
-        }
+        val clusters = leaf(sigs.sparkSession, "graft: incr clustering")(expandAndElect(eg, repAssign))
 
         val spark = sigs.sparkSession
         import spark.implicits._
@@ -369,9 +367,8 @@ object Pipeline {
         // every returned frame is a checkpoint leaf (sigs, pairs, repAssign,
         // clusters, state.reps) or persisted in its own right (reps —
         // metrics still aggregates it; the NEXT increment releases it via
-        // state.retained): the increment-local caches and the url-dedup
-        // caches are released below, keeping a long incremental chain's
-        // cache footprint O(one increment)
+        // state.retained): the increment-local caches are released below,
+        // keeping a long incremental chain's cache footprint O(one increment)
         // Band-table maintenance for the NEXT generation: append-only on the
         // common (no-stale) path; a stale increment compacts by committing
         // the already-computed live ∪ new rows (no re-explode).
@@ -390,9 +387,7 @@ object Pipeline {
         }
         if (newBandRows != null) newBandRows.unpersist(false)
         identDiff.unpersist(false)
-        if (!(seedUrls eq newUrls)) seedUrls.unpersist(false)
-        delta.unpersist(false); eg.members.unpersist(false)
-        Fingerprints.cleanupCaches()
+        delta.unpersist(false)
         (res, inc, state)
     }
   }
@@ -416,6 +411,29 @@ object Pipeline {
     try body finally sc.setJobDescription(prev)
   }
 
+  /** THE way the engine materializes an intermediate: an eager
+    * `localCheckpoint` of `df`, run under `desc`, so every such job is
+    * attributable to its phase.
+    *
+    * Why a checkpoint leaf and not persist+count, wherever a frame is read
+    * again:
+    *  - AQE materializes query stages concurrently, and concurrent consumers
+    *    of an unmaterialized frame race — each recomputes the full upstream
+    *    lineage. The eager job materializes once, before any consumer is
+    *    planned.
+    *  - A frame referenced by several join branches is re-ANALYZED per
+    *    reference as a logical tree (the shared subtrees multiply out —
+    *    measured as multi-second zero-job driver gaps and >10M-char plan
+    *    strings); a LogicalRDD leaf makes every reference O(1) to plan.
+    *  - Blocks are freed by the ContextCleaner once no frame references the
+    *    leaf, so no caller keeps an unpersist list.
+    * The leaf is lost on executor death; on a real cluster the durable
+    * equivalent is a store write read back. The one bare `localCheckpoint`
+    * left is the star round in [[Clusters.connectedComponents]]. */
+  private[graft] def leaf(spark: org.apache.spark.sql.SparkSession, desc: String)(
+      df: => DataFrame): DataFrame =
+    labeled(spark, desc)(df.localCheckpoint())
+
   /** The shared relational core: candidates -> scoring -> [exact verify /
     * substring pass] -> union-find -> keeper election over the caller's
     * exact groups. `pairs` and `clusters` come back MATERIALIZED and
@@ -426,20 +444,13 @@ object Pipeline {
                          cfg: GraftConfig): Result = {
     // candidates + scoring (representative level); lazy up to the checkpoint
     val scored = Pairs.score(Candidates.candidatePairs(eg.reps, cfg), cfg)
-    // Lineage truncation at the result boundary. The candidate stage is a
-    // DAG of self-joins and unions over the same subtrees (band self-join,
-    // heavy/light routing, payload join-back, verify re-joins); expressed as
-    // a logical plan TREE those shared subtrees multiply out, so every
-    // DataFrame later derived from `pairs`/`clusters` re-ANALYZES a tree
-    // that grows geometrically with consumer depth — measured as
-    // multi-minute single-core driver stalls per derived query and >10M-char
-    // plan strings. An eager localCheckpoint rewrites the frame to a
-    // LogicalRDD leaf: one materialization job here (the union-find needed
-    // the rows anyway), O(1)-size plans for every consumer. It also
-    // replaces the old clusters.count() AQE-cache-race guard — the eager
-    // checkpoint materializes single-threadedly by construction. On a real
-    // cluster the durable equivalent is writing pairs/clusters to the store
-    // and reading them back (localCheckpoint is lost on executor failure).
+    // Lineage truncation at the result boundary ([[leaf]]). The candidate
+    // stage is a DAG of self-joins and unions over the same subtrees (band
+    // self-join, heavy/light routing, payload join-back, verify re-joins),
+    // so every DataFrame later derived from `pairs`/`clusters` would
+    // re-analyze a tree that grows geometrically with consumer depth —
+    // measured as multi-minute single-core driver stalls per derived query.
+    // The union-find needs the rows anyway, so the leaf costs no extra pass.
     //
     // The exact-verify and substring passes are applied AFTER the first
     // checkpoint (round-6): planned inline, each pass's gated/untouched
@@ -449,29 +460,19 @@ object Pipeline {
     // LogicalRDD leaf each pass's plan is O(1); one extra pair-volume
     // checkpoint materialization per enabled pass buys it.
     val spark = sigs.sparkSession
-    val pairsBase = labeled(spark, "graft: pairs checkpoint") { scored.localCheckpoint() }
+    val pairsBase = leaf(spark, "graft: pairs checkpoint")(scored)
     val pairsVerified =
       if (!cfg.exactVerify) pairsBase
-      else labeled(spark, "graft: exact verify") {
-        Pairs.exactVerify(pairsBase, eg.reps, cfg).localCheckpoint()
-      }
+      else leaf(spark, "graft: exact verify")(Pairs.exactVerify(pairsBase, eg.reps, cfg))
     val pairs =
       if (!cfg.substringPass) pairsVerified
-      else labeled(spark, "graft: substring pass") {
-        Pairs.checkSubstrings(pairsVerified, text, cfg).localCheckpoint()
-      }
+      else leaf(spark, "graft: substring pass")(Pairs.checkSubstrings(pairsVerified, text, cfg))
     // union-find (EAGER — iterative) over the matched pairs; pairs carry
     // dictionary ids, so its rounds shuffle longs
-    val clusters = labeled(spark, "graft: clustering") {
+    val clusters = leaf(spark, "graft: clustering") {
       expandAndElect(eg, Clusters.assignByIds(eg.reps.select("url"),
-        pairs.filter(col("matched")))).localCheckpoint()
+        pairs.filter(col("matched"))))
     }
-    // pairs and clusters are now LogicalRDD leaves: nothing references the
-    // url-dedup caches any more — release them, or an incremental chain
-    // accumulates one set per increment. members likewise only fed the
-    // clustering.
-    Fingerprints.cleanupCaches()
-    eg.members.unpersist(false)
 
     Result(sigs, eg.rejects, pairs, clusters, runMetrics(sigs, eg.reps, pairs, clusters))
   }
@@ -482,20 +483,17 @@ object Pipeline {
   /** Exact-duplicate pre-grouping (one representative = min url per distinct
     * text) — the ONE definition of the grouping rule: every entry point
     * derives it once and hands it to downstream (the scoped increment also
-    * reads it directly). members and reps come back persisted. */
+    * reads it directly). reps comes back persisted: candidates, verify,
+    * clustering and the metrics all read it. members is lazy — its one
+    * reader is the member-expansion join. */
   private def exactGroups(sigs: DataFrame): ExactGroups = {
     val rejects = sigs.filter(col("reject_reason").isNotNull)
       .select(col("url"), col("reject_reason").as("reason"))
     val valid = sigs.filter(col("reject_reason").isNull)
     val groups = valid.groupBy("text_md5").agg(min("url").as("rep_url"))
-    // members has exactly ONE consumer on every path (the member-expansion
-    // join) — persisted MEMORY_AND_DISK anyway because callers unpersist it
-    // by contract, but at single-use the cache write is the only cost, so
-    // keep it cheap (the join inputs are the cached sigs either way)
     val members = valid.select(col("url"), col("text_md5"))
       .join(groups, "text_md5")
       .select(col("url"), col("rep_url"))
-      .persist(storage)
     val reps = valid.join(
       groups.select(col("rep_url").as("url")), Seq("url"), "left_semi")
       .persist(storage)

@@ -81,7 +81,8 @@ object Resume {
     val todo =
       if (firstRun) withId
       else {
-        val existing = store.read(spark)
+        // the read lists the store's files in a job of its own
+        val existing = Pipeline.labeled(spark, "graft: incr sig commit")(store.read(spark))
           .filter(col("config_fp") === cfg.configFp)
           .select(col("content_id"))
         withId.join(existing, Seq("content_id"), "left_anti")
@@ -124,10 +125,11 @@ object Resume {
     *
     * Two eager labeled jobs, both before any consumer fans out:
     *  - the key-space decisions (losing keys, duplicated keys) over a slim
-    *    (url, warc_ts) scan of the store, persisted and counted at once;
+    *    (url, warc_ts) scan of the store, persisted and counted at once (the
+    *    store read's file listing runs under the same label);
     *  - the live rows: ONE payload scan minus the losing keys (broadcast
-    *    left-anti join), checkpointed, so every consumer reads the leaf
-    *    instead of re-scanning the store.
+    *    left-anti join), a checkpoint leaf ([[Pipeline.leaf]]), so every
+    *    consumer reads the leaf instead of re-scanning the store.
     * Live rows are unique per (url, warc_ts) within one config_fp — the
     * commit anti-joins on content_id, a function of the key — so duplicated
     * keys never occur in a store written by [[commit]]; if some writer put
@@ -135,16 +137,16 @@ object Resume {
     * and only then does the second payload pass run. */
   private[graft] def liveView(spark: SparkSession, store: IcebergShaped.Table,
                               cfg: GraftConfig): DataFrame = {
-    val rows = Pipeline.scan(store.read(spark).filter(col("config_fp") === cfg.configFp), cfg)
+    val stored = Pipeline.labeled(spark, "graft: incr live keys")(store.read(spark))
+    val rows = Pipeline.scan(stored.filter(col("config_fp") === cfg.configFp), cfg)
     val decisions = Fingerprints.electUrlKeys(Fingerprints.urlKeysOf(rows), caseRule = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val duplicated = Pipeline.labeled(spark, "graft: incr live keys") {
         decisions.agg(coalesce(sum(col("__t")), lit(0L))).head().getLong(0)
       }
-      Pipeline.labeled(spark, "graft: incr live view") {
+      Pipeline.leaf(spark, "graft: incr live view") {
         Fingerprints.applyUrlElection(rows, decisions, collapse = duplicated > 0)
-          .localCheckpoint()
       }
     } finally decisions.unpersist(false)
   }

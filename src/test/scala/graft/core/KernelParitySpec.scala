@@ -13,7 +13,7 @@ import graft.data.Corpus
   *    unsigned min of the slot signatures plus a straddle-window pass; the
   *    direct signature over the full window set is the oracle.
   */
-class Round6KernelSpec extends AnyFunSuite {
+class KernelParitySpec extends AnyFunSuite {
 
   /** The pre-round-6 construction, verbatim: generalized suffix array over
     * a+sep+b, max LCP between adjacent suffixes from different docs. */

@@ -201,7 +201,7 @@ class VerifyModesSpec extends AnyFunSuite {
     assert(viaSub.filter(col("overlap_len") < cfg.minSubstringOverlap).count() === 0)
   }
 
-  test("substring pass reuses the fingerprint stage's url-dedup caches: no " +
+  test("substring pass reads the fingerprint stage's deduped pages: no " +
       "plan is persisted twice, no dedup frame is materialized twice") {
     import java.util.concurrent.atomic.AtomicInteger
     import org.apache.logging.log4j.{Level, LogManager}
@@ -325,10 +325,8 @@ class HeavyKeyStrategySpec extends AnyFunSuite {
     def pairSetOf(cfg: GraftConfig): Set[(String, String)] = {
       val reps = Fingerprints.fromPages(pages, cfg).toDF()
         .filter(org.apache.spark.sql.functions.col("reject_reason").isNull)
-      val out = Candidates.candidatePairs(reps, cfg)
+      Candidates.candidatePairs(reps, cfg)
         .select("url_a", "url_b").as[(String, String)].collect().toSet
-      Fingerprints.cleanupCaches()
-      out
     }
     val viaHeavy = pairSetOf(base.copy(heavyBandKeyCap = 5))
     val viaFast = pairSetOf(base.copy(heavyBandKeyCap = Int.MaxValue))
