@@ -89,8 +89,9 @@ object Candidates {
   /** Band keys per URL (no dictionary encoding) — the band relation the
     * scoped increment keeps in the store (`<root>/bands`), and the one a
     * [[Delta]] carries: [[Pipeline.runIncrementalScoped]] commits these rows
-    * per generation, then reads the keys a STALE rep used to emit and the
-    * current members of those keys back from them, so a group whose
+    * per generation, explodes the keys a STALE rep used to emit from the
+    * previous generation's reps, and finds the current members of those
+    * keys in the relation it read back, so a group whose
     * topology links left with the stale rep (a re-crawled star hub, a
     * demoted rep) regenerates in full instead of fragmenting. */
   private[graft] def bandKeysByUrl(reps: DataFrame, cfg: GraftConfig): DataFrame =
@@ -101,11 +102,14 @@ object Candidates {
     *
     * @param newUrls (url) rows of the reps whose pairs are regenerated: every
     *   emitted pair has at least one endpoint here.
-    * @param bands the band relation (url, band_id, key) of the WHOLE current
-    *   rep set; rows must equal what [[bandKeysByUrl]] over `reps` emits.
-    *   The scoped pipeline reads it back from the store instead of
-    *   re-exploding the full rep set, so an increment explodes only its NEW
-    *   reps' bands (bands are a pure function of the rep row). */
+    * @param bands the band relation (url, band_id, key, ...) of the WHOLE
+    *   current rep set; its (url, band_id, key) rows must equal what
+    *   [[bandKeysByUrl]] over `reps` emits. The caller passes a MATERIALIZED
+    *   relation (a [[Pipeline.leaf]]): the key-count pass and every join
+    *   branch below read it as is, with no checkpoint of their own. The
+    *   scoped pipeline builds it from one store read instead of re-exploding
+    *   the full rep set, so an increment explodes only its NEW reps' bands
+    *   (bands are a pure function of the rep row). */
   final case class Delta(newUrls: DataFrame, bands: DataFrame)
 
   /** Self-join bands into distinct candidate pairs (url_a < url_b), with
@@ -187,12 +191,11 @@ object Candidates {
 
     // the band relation feeds the key-count pass, both sides of the light
     // self-join and both sides of the heavy triangle join. In delta mode it
-    // is the caller's (store-backed) relation, never an explode here.
-    val bnds = Pipeline.leaf(spark, "graft: band relation build") {
-      delta match {
-        case Some(d) => d.bands.select(col("url").as("id"), col("band_id"), col("key"))
-        case None => bands(repSlim, cfg)
-      }
+    // is the caller's materialized (store-backed) relation, never an
+    // explode or a second leaf here.
+    val bnds = delta match {
+      case Some(d) => d.bands.select(col("url").as("id"), col("band_id"), col("key"))
+      case None => Pipeline.leaf(spark, "graft: band relation build")(bands(repSlim, cfg))
     }
     // sortedUrls (one-shot mode only) is released after the rawPairs match
     // below, once everything downstream of the dictionary is planned
@@ -340,14 +343,15 @@ object Candidates {
         // all-side join — when the increment is small Catalyst broadcasts the
         // new side, so the PAIR JOIN adds no full-corpus shuffle (the
         // 10^12-doc resume story: candidate-join work scales with the
-        // increment). Honest bound: the band-relation checkpoint and the
-        // sampled heavy detection above still scan the full (store-read)
-        // band relation each increment — a narrow scan plus a sample-volume
-        // shuffle, no full-corpus WIDE shuffle (the dictionary sort +
-        // dictionary join the one-shot path pays are skipped in delta mode —
-        // ids here ARE the urls, see the delta-mode note above). Old-old
-        // pairs are excluded by construction; the caller supplies them from
-        // the previous run's persisted pairs table (Pipeline.runIncrementalScoped
+        // increment). Honest bound: the caller's band-relation leaf costs
+        // one full scan of the stored band table per increment, and the
+        // sampled heavy detection above scans that leaf in full — a narrow
+        // scan plus a sample-volume shuffle, no full-corpus WIDE shuffle
+        // (the dictionary sort + dictionary join the one-shot path pays are
+        // skipped in delta mode — ids here ARE the urls, see the delta-mode
+        // note above). Old-old pairs are excluded by construction; the
+        // caller supplies them from the previous run's persisted pairs
+        // table (Pipeline.runIncrementalScoped
         // keeps them — candidate generation over unchanged reps is a pure
         // function of the rep set, so those rows cannot have changed).
         //

@@ -153,23 +153,16 @@ object Clusters {
       .groupBy("url").agg(min("cluster_id").as("cluster_id"))
   }
 
-  /** Cluster assignment for every valid document: matched components plus
-    * singletons (cluster_id = own url). */
-  def assign(validDocs: DataFrame, matchedPairs: DataFrame): DataFrame = {
-    val comp = connectedComponents(
-      matchedPairs.select(col("url_a").as("u"), col("url_b").as("v")))
-    validDocs.join(comp, Seq("url"), "left")
-      .withColumn("cluster_id", coalesce(col("cluster_id"), col("url")))
-  }
-
-  /** [[assign]] over pairs that carry dictionary ids (id_a/id_b alongside
-    * url_a/url_b — Candidates.candidatePairs): the union-find's iterative
+  /** Cluster assignment for every valid document — matched components plus
+    * singletons (cluster_id = own url) — over pairs that carry dictionary
+    * ids (id_a/id_b alongside url_a/url_b — Candidates.candidatePairs): the
+    * union-find's iterative
     * star rounds shuffle 8-byte longs instead of url strings, and the
     * id->url mapping is recovered from the matched pair rows themselves (no
     * extra dictionary join — every component node, including every root, is
     * an endpoint of some matched edge). Order isomorphism of the dictionary
     * (Candidates.dictionary) makes min-id roots map to min-url cluster ids,
-    * so the output is bit-identical to url-keyed [[assign]]. */
+    * so the output is bit-identical to a union-find over the url strings. */
   def assignByIds(validDocs: DataFrame, matchedPairs: DataFrame): DataFrame = {
     val comp = connectedComponents(
       matchedPairs.select(col("id_a").as("u"), col("id_b").as("v")))

@@ -115,13 +115,15 @@ object Pipeline {
     * durable version of this hand-off is the store itself (write
     * pairs/assign as tables, read them back next increment).
     *
-    * `retained` carries the generation's still-persisted frames (reps —
-    * the Result references them lazily, so they cannot be released at
-    * return); the NEXT scoped call unpersists them on entry, keeping a
-    * k-increment chain's cache footprint O(one increment) instead of k
-    * persisted corpus-sized frames. Consequence: a previous increment's lazy
-    * Result frames (metrics) recompute from lineage if consumed after the
-    * next increment starts. The live signature view is a checkpoint leaf
+    * `retained` carries the first generation's still-persisted reps — its
+    * Result's lazy metrics aggregate them, so they cannot be released at
+    * return; the NEXT scoped call unpersists them on entry. Consequence: the
+    * first generation's metrics recompute from lineage if consumed after the
+    * next increment starts. An increment retains nothing (`Nil`): it
+    * releases its persisted reps once their checkpoint leaf is built, and
+    * every frame it returns reads leaves. A k-increment chain's cache
+    * footprint stays O(one increment) instead of k persisted corpus-sized
+    * frames. The live signature view is a checkpoint leaf
     * (Resume.liveView), not a persisted frame. */
   final case class IncState(reps: DataFrame, pairs: DataFrame, repAssign: DataFrame,
                             retained: Seq[DataFrame] = Nil)
@@ -161,7 +163,9 @@ object Pipeline {
     *
     * First call (prev = None) runs the full downstream over the live set,
     * commits the band relation to `<root>/bands` and builds the state; a
-    * one-process run (`Main --store`) is exactly this generation. Returns
+    * one-process run (`Main --store`) is exactly this generation. A later
+    * call scans that table once, into the one band relation leaf that feeds
+    * its stale-key expansion, delta join and table update. Returns
     * (result, resume stats, state-for-next-call).
     * Metrics gain recluster_edges / affected_clusters / untouched_clusters —
     * the scale evidence that the union-find input is bounded by affected
@@ -184,30 +188,32 @@ object Pipeline {
     // the reference's read-before-compute cache protocol applied to the
     // candidate layer, db.cpp:50-69 analog): each generation commits the
     // band rows of its rep set to a sibling store table; the NEXT increment
-    // reads them back, drops stale reps' rows, and only explodes the NEW
-    // reps' bands — candidate generation no longer re-derives the full
+    // reads them back ONCE, drops stale reps' rows, and only explodes the
+    // NEW reps' bands — candidate generation no longer re-derives the full
     // band relation from the full signature payload every increment.
+    val spark = sigs.sparkSession
     val bandsTable = graft.store.IcebergShaped.table(store.root + "/bands")
+    // (url, band_id, key, part_id) rows of `repFrame`
     def bandRowsOf(repFrame: DataFrame): DataFrame =
       Candidates.bandKeysByUrl(repFrame, cfg)
         .withColumn("part_id",
           pmod(xxhash64(col("url")), lit(cfg.storeParts)).cast("int"))
-        .withColumn("config_fp", lit(cfg.configFp))
         // cluster by the partition column before the partitionBy write so
         // each part_id lands as ONE file instead of one per write task
         // (guide §6 output sizing — the explode otherwise fans 32 dirs x
         // n-task small files)
         .repartition(col("part_id"))
+    def commitBands(rows: DataFrame, operation: String): Unit =
+      bandsTable.commit(rows.withColumn("config_fp", lit(cfg.configFp)), cfg.configFp, operation)
 
     prev match {
       case None =>
-        val spark = sigs.sparkSession
         val res = downstream(sigs, eg, Pairs.substringText(pages), cfg)
         val repsCk0 = leaf(spark, "graft: incr reps checkpoint")(reps)
         // first-generation band commit: reps are persisted+materialized by
         // downstream() at this point, so this is one slim explode + write
         labeled(spark, "graft: band store commit") {
-          bandsTable.commit(bandRowsOf(repsCk0), cfg.configFp, "overwrite")
+          commitBands(bandRowsOf(repsCk0), "overwrite")
         }
         // res.pairs is already a leaf: dropping the dictionary ids over it
         // is an O(1) plan, so the state needs no checkpoint of its own
@@ -224,17 +230,6 @@ object Pipeline {
         // (reps): the state hand-off is all checkpoint leaves, so nothing in
         // this increment reads it — see IncState.retained
         st.retained.foreach(_.unpersist(false))
-        // The band relation this increment reads and maintains. A missing
-        // table (a wiped sibling dir, a store written before the table
-        // existed) is rebuilt from the previous generation's reps first, so
-        // there is one path below: bands are a pure function of the rep row,
-        // and the current reps are st.reps minus stale plus new by
-        // (url, content_id) — live ∪ new over the rebuilt table is the
-        // current rep set's relation.
-        if (bandsTable.isEmpty)
-          labeled(sigs.sparkSession, "graft: band store commit") {
-            bandsTable.commit(bandRowsOf(st.reps), cfg.configFp, "overwrite")
-          }
         // Lineage truncation at branch ENTRY, not just at hand-off: this
         // branch runs ~a dozen eager actions (the new/stale aggregate, delta
         // persists, splice rounds, metric aggregates) and each one would
@@ -243,10 +238,11 @@ object Pipeline {
         // increment being ~3x driver-side planning, ~1/4 execution.
         // The one-shot path pays that analysis once (downstream truncates at
         // the pairs boundary); here the same truncation happens up front.
-        // No extra storage vs before — the state hand-off already
-        // checkpointed reps at exit; this is the same checkpoint, earlier,
-        // reused for both the increment's work and the outgoing state.
-        val repsCk = leaf(sigs.sparkSession, "graft: incr reps checkpoint")(reps)
+        // The same checkpoint serves the increment's work and the outgoing
+        // state; it is the one copy of the rep set this increment keeps —
+        // the persisted `reps` it was built from has no reader after it.
+        val repsCk = leaf(spark, "graft: incr reps checkpoint")(reps)
+        reps.unpersist(false)
         // new/changed vs stale reps by (url, content_id): a re-crawled url
         // (new warc_ts -> new content_id) is BOTH stale (old pairs invalid)
         // and new (delta candidates regenerate them); a demoted rep (its
@@ -263,39 +259,32 @@ object Pipeline {
         val newUrls = identDiff.filter(col("__new")).select("url")
         val staleUrls = identDiff.filter(!col("__new")).select("url")
 
-        // Current-generation band relation, store-backed: the previous
-        // generation's committed rows minus stale reps, plus a fresh explode
-        // of the NEW reps only — row-identical to a full re-explode (bands
-        // are a pure function of the rep row; unchanged (url, content_id)
-        // means an unchanged row).
-        // Still empty after the rebuild only when the previous generation
-        // had no band rows (an empty, all-rejected or all-filtered batch):
-        // an empty partitionBy write lists no files, so the relation is an
-        // empty frame of the table's schema rather than a store read.
-        // the read lists the table's files in a job of its own: it runs
-        // under the label of its first consumer, the band relation build
-        val storedBandsFull =
-          if (bandsTable.isEmpty) bandRowsOf(st.reps.limit(0))
-          else labeled(sigs.sparkSession, "graft: band relation build") {
-            bandsTable.read(sigs.sparkSession)
-          }
-        val storedBands = storedBandsFull
-          .filter(col("config_fp") === cfg.configFp)
-          .select(col("url"), col("band_id"), col("key"))
         val (hasNew, hasStale) =
-          labeled(sigs.sparkSession, "graft: incr new/stale detect") {
+          labeled(spark, "graft: incr new/stale detect") {
             val n = identDiff.agg(count(when(col("__new"), 1)),
               count(when(!col("__new"), 1))).head()
             (n.getLong(0) > 0, n.getLong(1) > 0)
           }
-        val newBandRows =
-          if (hasNew) bandRowsOf(repsCk.join(newUrls, Seq("url"), "left_semi"))
-            .persist(storage)
-          else null
-        val liveBands = storedBands.join(staleUrls, Seq("url"), "left_anti")
-        val bndsAll =
-          if (hasNew) liveBands.unionByName(newBandRows.select("url", "band_id", "key"))
-          else liveBands
+
+        // The current rep set's band relation, built ONCE from one store
+        // read: the stored rows of this config minus stale reps, plus a fresh
+        // explode of the NEW reps only — row-identical to a full re-explode
+        // (bands are a pure function of the rep row; unchanged
+        // (url, content_id) means an unchanged row). The stale-key expansion,
+        // the delta join and the table update below all read this leaf.
+        // A table with no files (a wiped sibling dir, or no earlier
+        // generation had reps — an empty partitionBy write lists none)
+        // stands in as the previous generation's explode: st.reps is that
+        // generation's rep set.
+        val wasEmpty = bandsTable.isEmpty
+        val bands = leaf(spark, "graft: band relation build") {
+          val stored =
+            if (wasEmpty) bandRowsOf(st.reps)
+            else bandsTable.read(spark).filter(col("config_fp") === cfg.configFp)
+              .select("url", "band_id", "key", "part_id")
+          stored.join(staleUrls, Seq("url"), "left_anti")
+            .unionByName(bandRowsOf(repsCk.join(newUrls, Seq("url"), "left_semi")))
+        }
 
         // stale-key expansion (round-5 review): keptPrev below drops EVERY
         // previous pair with a stale endpoint, but under star routing those
@@ -304,22 +293,24 @@ object Pipeline {
         // delta's touched-key detection, which only sees NEW reps' keys. A
         // re-crawled hub therefore fragmented its cluster vs one-shot. Seed
         // the delta new-side with the CURRENT members of every key a stale
-        // rep used to emit — read from the committed band rows (no re-explode
-        // of the previous generation's reps). Runs only on increments that
+        // rep used to emit. Those keys are the stale reps' explode from the
+        // previous generation's rep leaf — the rows the table holds for them
+        // — so the expansion reads no store. Runs only on increments that
         // actually contain stale reps.
         val seedUrls =
           if (!hasStale) newUrls
           else {
-            val staleKeys = storedBands.join(staleUrls, Seq("url"), "left_semi")
+            val staleKeys = Candidates.bandKeysByUrl(
+              st.reps.join(staleUrls, Seq("url"), "left_semi"), cfg)
               .select("band_id", "key").distinct()
-            val coMembers = bndsAll
+            val coMembers = bands
               .join(staleKeys, Seq("band_id", "key"), "left_semi")
               .select("url").distinct()
             newUrls.unionByName(coMembers).distinct()
           }
 
         val cand = Candidates.candidatePairs(repsCk, cfg,
-          Some(Candidates.Delta(seedUrls, bndsAll)))
+          Some(Candidates.Delta(seedUrls, bands)))
         val scoredBase = Pairs.score(cand, cfg)
         val scoredVerified =
           if (cfg.exactVerify) Pairs.exactVerify(scoredBase, repsCk, cfg) else scoredBase
@@ -341,20 +332,19 @@ object Pipeline {
         // substring-matched pair to overlap_len=null / matched=false.
         val deltaNew = delta.select(keptPrev.columns.map(col): _*)
           .join(keptPrev.select("url_a", "url_b"), Seq("url_a", "url_b"), "left_anti")
-        val pairs = leaf(sigs.sparkSession, "graft: incr pairs checkpoint") {
+        val pairs = leaf(spark, "graft: incr pairs checkpoint") {
           keptPrev.unionByName(deltaNew)
         }
 
-        val splice = labeled(sigs.sparkSession, "graft: incr splice") {
+        val splice = labeled(spark, "graft: incr splice") {
           Clusters.spliceAssign(repsCk.select("url"), st.repAssign,
             st.pairs.filter(col("matched")), delta.filter(col("matched")), staleUrls)
         }
-        val repAssign = leaf(sigs.sparkSession, "graft: incr assign checkpoint")(splice.assign)
+        val repAssign = leaf(spark, "graft: incr assign checkpoint")(splice.assign)
         // same result-boundary lineage truncation as downstream(): the
         // increment-chain plans stay O(this increment) for every consumer
-        val clusters = leaf(sigs.sparkSession, "graft: incr clustering")(expandAndElect(eg, repAssign))
+        val clusters = leaf(spark, "graft: incr clustering")(expandAndElect(eg, repAssign))
 
-        val spark = sigs.sparkSession
         import spark.implicits._
         val metrics = runMetrics(sigs, repsCk, pairs, clusters)
           .unionByName(Seq(
@@ -363,29 +353,21 @@ object Pipeline {
             ("untouched_clusters", splice.untouchedClusters)).toDF("metric", "value"))
 
         val res = Result(sigs, eg.rejects, pairs, clusters, metrics)
-        val state = IncState(repsCk, pairs, repAssign, retained = Seq(reps))
         // every returned frame is a checkpoint leaf (sigs, pairs, repAssign,
-        // clusters, state.reps) or persisted in its own right (reps —
-        // metrics still aggregates it; the NEXT increment releases it via
-        // state.retained): the increment-local caches are released below,
-        // keeping a long incremental chain's cache footprint O(one increment)
-        // Band-table maintenance for the NEXT generation: append-only on the
-        // common (no-stale) path; a stale increment compacts by committing
-        // the already-computed live ∪ new rows (no re-explode).
-        labeled(sigs.sparkSession, "graft: band store update") {
-          if (hasStale) {
-            val staleThis = staleUrls.withColumn("config_fp", lit(cfg.configFp))
-            val liveAll = storedBandsFull.join(staleThis, Seq("url", "config_fp"), "left_anti")
-            val frame =
-              if (hasNew) liveAll.unionByName(
-                newBandRows.select(storedBandsFull.columns.map(col): _*))
-              else liveAll
-            bandsTable.commit(frame, cfg.configFp, "overwrite")
-          } else if (hasNew)
-            bandsTable.commit(newBandRows, cfg.configFp, "append")
+        // clusters, state.reps), so nothing is retained: the increment-local
+        // caches are released below, keeping a long incremental chain's cache
+        // footprint O(one increment)
+        val state = IncState(repsCk, pairs, repAssign)
+        // Band-table maintenance for the NEXT generation, written from the
+        // leaf (no second store read): a stale increment — or one that found
+        // no table — replaces the table with the current relation; otherwise
+        // the new reps' rows are appended (still clustered by part_id, one
+        // file per part_id).
+        labeled(spark, "graft: band store update") {
+          if (hasStale || wasEmpty) commitBands(bands, "overwrite")
+          else if (hasNew) commitBands(bands.join(newUrls, Seq("url"), "left_semi"), "append")
           // else no rep-set change: the table is already current
         }
-        if (newBandRows != null) newBandRows.unpersist(false)
         identDiff.unpersist(false)
         delta.unpersist(false)
         (res, inc, state)

@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.core.GraftConfig
 import graft.data.CorpusSpark
-import graft.spark.Fingerprints
+import graft.spark.{Fingerprints, GraftSession}
 
 /** Dump the physical plan of the fingerprint/sigs materialization (a tuning
   * aid): shows how many times the pages relation is scanned/exchanged by the
@@ -11,13 +10,7 @@ import graft.spark.Fingerprints
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 2000L
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-plandump")
-      .getOrCreate()
+    val spark = GraftSession.local(8, "graft-plandump")
     spark.sparkContext.setLogLevel("ERROR")
     val cfg = GraftConfig()
     val pages = CorpusSpark.pages(spark, n, parts = 16, seed = 42L)

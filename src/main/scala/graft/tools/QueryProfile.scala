@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.spark.GraftSession
 
 /** Wall vs in-job profile of named SparkEntry queries — separates execution
   * (inside Spark jobs) from single-threaded driver plan analysis (outside
@@ -13,14 +13,8 @@ object QueryProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = GraftSession.local(cpus, "graft-qprof")
 
     val inJob = new java.util.concurrent.atomic.AtomicLong(0) // ns, summed
     val nJobs = new java.util.concurrent.atomic.AtomicLong(0)

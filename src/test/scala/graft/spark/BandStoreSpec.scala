@@ -1,9 +1,14 @@
 package graft.spark
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import graft.core.GraftConfig
 import graft.data.CorpusSpark
 import graft.store.IcebergShaped
@@ -19,11 +24,15 @@ import graft.store.IcebergShaped
   * pair would appear; because banding is store-backed, the pair cannot be
   * proposed. A fresh-explode implementation fails this test.
   *
-  * A missing table is rebuilt from the previous generation's reps before the
-  * increment runs; the rebuild test pins that the increment then equals the
-  * intact chain's. A previous generation with no reps leaves the table
+  * A missing table is rebuilt from the previous generation's reps: the
+  * increment reads their explode in its place and rewrites the table; the
+  * rebuild test pins that the increment then equals the intact chain's. A previous generation with no reps leaves the table
   * empty (an empty write lists no files); the empty-chain test pins that the
   * next increments still run and equal a one-shot run.
+  *
+  * The scan-count test pins that an increment reads the table ONCE: one
+  * band relation feeds the stale-key expansion, the delta join and the
+  * table update.
   */
 class BandStoreSpec extends AnyFunSuite {
   private lazy val spark = SparkTest.spark
@@ -178,5 +187,64 @@ class BandStoreSpec extends AnyFunSuite {
     assert(stored.exceptAll(expected).isEmpty && expected.exceptAll(stored).isEmpty,
       "after the first non-empty increment the stored relation must equal the " +
         "current rep set's bands")
+  }
+
+  /** Executed file scans whose files lie under `dir`, among the queries
+    * `body` runs. Scan nodes come from the SQL plan events (the initial plan
+    * and every adaptive re-plan); a scan counts once when some task updated
+    * one of its metrics, so a re-planned scan that never ran is not
+    * counted. */
+  private def scansUnder(dir: String)(body: => Unit): Int = {
+    val scanOfMetric = new ConcurrentHashMap[Long, Long]() // metric id -> scan key
+    val updated = ConcurrentHashMap.newKeySet[Long]()
+    def collect(p: SparkPlanInfo): Unit = {
+      if (p.metadata.get("Location").exists(_.contains(dir)) && p.metrics.nonEmpty) {
+        val key = p.metrics.map(_.accumulatorId).min
+        p.metrics.foreach(m => scanOfMetric.put(m.accumulatorId, key))
+      }
+      p.children.foreach(collect)
+    }
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => collect(s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => collect(u.sparkPlanInfo)
+        case _ =>
+      }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        t.taskInfo.accumulables.foreach(a => updated.add(a.id))
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graftclock.TaskClock.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.graftclock.TaskClock.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    scanOfMetric.asScala.collect { case (m, key) if updated.contains(m) => key }.toSet.size
+  }
+
+  test("a stale increment scans the band table once") {
+    import graft.data.Render
+    val store = tmpStore()
+    val base = CorpusSpark.pages(spark, 320L, 4, cfg.seed)
+    // increment: 160 new pages plus a re-crawl of a base rep with new text,
+    // so the increment has stale reps as well as new ones
+    val victim = graft.data.Corpus.urlOf(0L)
+    val newText = (0 until 300).map(i => f"recrawl$i%05d").mkString(" ")
+    val full = CorpusSpark.pages(spark, 480L, 4, cfg.seed)
+    val current = full.filter(col("url") =!= victim).unionByName(
+      full.filter(col("url") === victim)
+        .withColumn("warc_ts",
+          timestamp_millis(unix_millis(col("warc_ts")) + lit(86400000L)))
+        .withColumn("html", lit(Render.html(newText, 3L)))
+        .withColumn("text", lit(newText)))
+    val (_, _, st1) = Pipeline.runIncrementalScoped(base, store, None, cfg)
+    assert(!st1.reps.filter(col("url") === victim).isEmpty,
+      s"fixture broken: $victim must be a base rep")
+
+    val scans = scansUnder(store.root + "/bands/") {
+      Pipeline.runIncrementalScoped(current, store, Some(st1), cfg)
+    }
+    assert(scans === 1, s"the increment scanned the band table $scans times")
   }
 }

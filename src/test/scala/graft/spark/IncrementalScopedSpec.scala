@@ -199,12 +199,21 @@ class IncrementalScopedSpec extends AnyFunSuite {
     r1.metrics.collect()
     assert(s1.retained.nonEmpty &&
       s1.retained.forall(_.storageLevel != StorageLevel.NONE))
+    val sc = spark.sparkContext
+    val persistedBefore = sc.getPersistentRDDs.keySet
     val (r2, _, s2) = Pipeline.runIncrementalScoped(
       CorpusSpark.pages(spark, 300L, 4, cfg.seed), store, Some(s1), cfg)
     r2.metrics.collect()
     assert(s1.retained.forall(_.storageLevel == StorageLevel.NONE),
       "previous generation's sigs/reps still cached after the next increment")
     assert(s2.retained.forall(_.storageLevel != StorageLevel.NONE))
+    // an increment's returned frames are all checkpoint leaves: every RDD it
+    // persisted and still holds is one of those leaves, never a cache
+    val cachedByIncrement = sc.getPersistentRDDs.filter { case (id, rdd) =>
+      !persistedBefore.contains(id) && !rdd.isCheckpointed
+    }
+    assert(cachedByIncrement.isEmpty,
+      s"an increment left cached frames behind: ${cachedByIncrement.values.mkString("; ")}")
   }
 
   test("no-op increment: nothing re-clusters, assignment unchanged") {
