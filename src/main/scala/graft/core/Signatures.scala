@@ -16,7 +16,6 @@ final case class DocSignature(
     simhashTail: Long,
     shinglesHead: Array[Long],
     shinglesTail: Array[Long],
-    minhash: Array[Long], // null when doc has no shingles
     /** Winnowing-style sampled shingle hashes (h % shingleSampleMod == 0) for
       * the substring pass's band keys, drawn from the FULL pre-cap shingle
       * stream — a verbatim block inside a giant document whose shingles fall
@@ -78,6 +77,13 @@ object DocSignatures {
     * cutEnds split: first half / last half of the token stream — the montage
     * half-split generalized (reference: video.cpp:181-182 copies
     * `hash*width/2, width/2` i.e. disjoint equal halves).
+    *
+    * Like the reference's cache row (db.cpp:38-47: a hash and a
+    * comparison-ready matrix), the record holds only what a comparison
+    * reads: per slot, the SimHash and the sampled keys over the full
+    * shingle set, the capped shingle sketch, and the MinHash of that sketch
+    * (the LSH band input). No full-document MinHash is computed: no
+    * comparison reads one.
     */
   def of(text: String, cfg: GraftConfig, minHasher: MinHasher): DocSignature = {
     val toks = Extract.tokens(text)
@@ -112,34 +118,18 @@ object DocSignatures {
       val mid = n / 2
       val head = sh.hashesOf(th, 0, mid)
       val tail = sh.hashesOf(th, mid, n)
-      val mhHead = minHasher.signature(cap(head))
-      val mhTail = minHasher.signature(cap(tail))
-      // minhash(full) WITHOUT re-hashing and re-scanning the full window set:
-      // when both slots hold full k-windows (n >= 2k) the full set is exactly
-      // head-windows ∪ straddling-windows ∪ tail-windows (positions 0..mid-k,
-      // mid-k+1..mid-1, mid..n-k), and the minhash of a union is the
-      // elementwise unsigned min of the parts' signatures — so the full-doc
-      // signature costs one (2k-2)-window straddle pass plus a combine,
-      // instead of an O(n) re-hash + sort + O(numPerm x n) scan. Valid only
-      // when the slot signatures were computed over UNCAPPED sets (under the
-      // stored-array cap); over-cap docs fall back to the direct path.
-      val minhashFull =
-        if (n >= 2 * cfg.k && head.length <= cfg.maxStoredShinglesPerSlot &&
-            tail.length <= cfg.maxStoredShinglesPerSlot) {
-          val straddle = sh.hashesOf(th, mid - cfg.k + 1, mid + cfg.k - 1)
-          combineMin(combineMin(mhHead, mhTail), minHasher.signature(straddle))
-        } else minHasher.signature(sh.hashesOf(th, 0, n))
+      val storedHead = cap(head)
+      val storedTail = cap(tail)
       DocSignature(
         textLen = text.length.toLong,
         sizeBytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong,
         simhashHead = SimHash64.of(head, cfg.minDistinctShingles),
         simhashTail = SimHash64.of(tail, cfg.minDistinctShingles),
-        shinglesHead = cap(head),
-        shinglesTail = cap(tail),
-        minhash = minhashFull,
+        shinglesHead = storedHead,
+        shinglesTail = storedTail,
         ssKeys = sampleKeys(head, tail),
-        mhHead = mhHead,
-        mhTail = mhTail
+        mhHead = minHasher.signature(storedHead),
+        mhTail = minHasher.signature(storedTail)
       )
     } else {
       // grid modes (and degenerate cutEnds at n<2): one slot over the union
@@ -167,39 +157,19 @@ object DocSignatures {
           }
           if (w == all.length) all else java.util.Arrays.copyOf(all, w)
         }
-      // one slot: the stored-array signature IS the full signature when the
-      // set fits under the cap — compute once, share both fields
-      val mhHead = minHasher.signature(cap(sampled))
-      val minhashFull =
-        if (sampled.length <= cfg.maxStoredShinglesPerSlot) mhHead
-        else minHasher.signature(sampled)
+      val stored = cap(sampled)
       DocSignature(
         textLen = text.length.toLong,
         sizeBytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong,
         simhashHead = SimHash64.of(sampled, cfg.minDistinctShingles),
         simhashTail = 0L,
-        shinglesHead = cap(sampled),
+        shinglesHead = stored,
         shinglesTail = Array.emptyLongArray,
-        minhash = minhashFull,
         ssKeys = sampleKeys(sampled, Array.emptyLongArray),
-        mhHead = mhHead,
+        mhHead = minHasher.signature(stored),
         mhTail = null
       )
     }
-  }
-
-  /** Elementwise unsigned min of two minhash signatures (null = empty set:
-    * the identity). The minhash of a set union. */
-  private def combineMin(a: Array[Long], b: Array[Long]): Array[Long] = {
-    if (a == null) return b
-    if (b == null) return a
-    val out = new Array[Long](a.length)
-    var i = 0
-    while (i < a.length) {
-      out(i) = if (java.lang.Long.compareUnsigned(a(i), b(i)) <= 0) a(i) else b(i)
-      i += 1
-    }
-    out
   }
 }
 

@@ -80,7 +80,6 @@ object PageFingerprint {
     StructField("text_md5", StringType, nullable = false),
     StructField("simhash_head", LongType, nullable = true),
     StructField("simhash_tail", LongType, nullable = true),
-    StructField("minhash", ArrayType(LongType, containsNull = false), nullable = false),
     StructField("mh_bands_head", ArrayType(LongType, containsNull = false), nullable = false),
     StructField("mh_bands_tail", ArrayType(LongType, containsNull = false), nullable = false),
     StructField("mh_rescue_head", ArrayType(LongType, containsNull = false), nullable = false),
@@ -110,36 +109,31 @@ final class FingerprintKernel(cfg: GraftConfig) extends Serializable {
     val extracted = Extract.text(html)
     val expected = if (text == null) "" else text.toString
     val sig = DocSignatures.of(extracted, cfg, mh)
-    val row = new GenericInternalRow(15)
+    val row = new GenericInternalRow(14)
     row.setLong(0, sig.textLen)
     row.setLong(1, sig.sizeBytes)
     row.update(2, UTF8String.fromString(FingerprintKernel.md5hex(extracted)))
     if (sig.simhashHead == 0L) row.setNullAt(3) else row.setLong(3, sig.simhashHead)
     if (sig.simhashTail == 0L) row.setNullAt(4) else row.setLong(4, sig.simhashTail)
-    val mhFull = if (sig.minhash == null) Array.emptyLongArray else sig.minhash
     // per-slot signatures come precomputed on the DocSignature (computed once
-    // over the stored arrays in DocSignatures.of — the full-doc signature is
-    // derived from them there, so re-running the O(numPerm x slot) pass here
-    // would double the hottest kernel's cost)
-    val mhHead = sig.mhHead
-    val mhTail = sig.mhTail
-    row.update(5, UnsafeArrayData.fromPrimitiveArray(mhFull))
-    row.update(6, UnsafeArrayData.fromPrimitiveArray(bandKeys(mhHead)))
-    row.update(7, UnsafeArrayData.fromPrimitiveArray(bandKeys(mhTail)))
+    // over the stored arrays in DocSignatures.of) — re-running the
+    // O(numPerm x slot) pass here would double the hottest kernel's cost
+    row.update(5, UnsafeArrayData.fromPrimitiveArray(bandKeys(sig.mhHead)))
+    row.update(6, UnsafeArrayData.fromPrimitiveArray(bandKeys(sig.mhTail)))
+    row.update(7, UnsafeArrayData.fromPrimitiveArray(
+      rescueKeys(sig.mhHead, sig.shinglesHead.length)))
     row.update(8, UnsafeArrayData.fromPrimitiveArray(
-      rescueKeys(mhHead, sig.shinglesHead.length)))
-    row.update(9, UnsafeArrayData.fromPrimitiveArray(
-      rescueKeys(mhTail, sig.shinglesTail.length)))
-    row.update(10, UnsafeArrayData.fromPrimitiveArray(sig.shinglesHead))
-    row.update(11, UnsafeArrayData.fromPrimitiveArray(sig.shinglesTail))
-    row.update(12, UnsafeArrayData.fromPrimitiveArray(sig.ssKeys))
-    row.setBoolean(13, extracted == expected)
+      rescueKeys(sig.mhTail, sig.shinglesTail.length)))
+    row.update(9, UnsafeArrayData.fromPrimitiveArray(sig.shinglesHead))
+    row.update(10, UnsafeArrayData.fromPrimitiveArray(sig.shinglesTail))
+    row.update(11, UnsafeArrayData.fromPrimitiveArray(sig.ssKeys))
+    row.setBoolean(12, extracted == expected)
     val reject =
       if (extracted.isEmpty) "empty_text"
       else if (html != null && extracted.length > html.length) "extract_anomaly"
       else if (sig.isRejected) "low_entropy"
       else null
-    if (reject == null) row.setNullAt(14) else row.update(14, UTF8String.fromString(reject))
+    if (reject == null) row.setNullAt(13) else row.update(13, UTF8String.fromString(reject))
     row
   }
 

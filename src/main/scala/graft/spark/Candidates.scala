@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.GraftConfig
 
@@ -51,26 +51,22 @@ object Candidates {
     * bands, 300.. rescue bands for short head then tail slots, 1000 sampled
     * shingles. */
   def bands(reps: DataFrame, cfg: GraftConfig): DataFrame = {
-    val mhHead: Seq[Column] = (0 until cfg.minhashBands).map { b =>
-      struct(lit(100 + b).as("band_id"), get(col("mh_bands_head"), lit(b)).as("key"))
-    }
-    val mhTail: Seq[Column] = (0 until cfg.minhashBands).map { b =>
-      struct(lit(200 + b).as("band_id"), get(col("mh_bands_tail"), lit(b)).as("key"))
-    }
-    // short-slot rescue: dense r=2 minhash bands (see Fingerprints.rescueKeys)
-    val shortHead: Seq[Column] = (0 until cfg.numPerm / 2).map { b =>
-      struct(lit(300 + b).as("band_id"), get(col("mh_rescue_head"), lit(b)).as("key"))
-    }
-    val shortTail: Seq[Column] = (0 until cfg.numPerm / 2).map { b =>
-      struct(lit(300 + cfg.numPerm / 2 + b).as("band_id"), get(col("mh_rescue_tail"), lit(b)).as("key"))
-    }
-
+    // Two small generators: one row per family carrying its key array and
+    // band_id base, then one row per key (band_id = base + position). Rescue
+    // arrays are empty for long slots and every key array is empty for an
+    // empty slot, so those emit no rows. A literal array of one struct per
+    // band (192 at the defaults) generates a method over the JIT's
+    // 8,000-byte limit, which then runs interpreted (BandExplodeSpec).
+    val family = array(
+      struct(lit(100).as("base"), col("mh_bands_head").as("keys")),
+      struct(lit(200).as("base"), col("mh_bands_tail").as("keys")),
+      struct(lit(300).as("base"), col("mh_rescue_head").as("keys")),
+      struct(lit(300 + cfg.numPerm / 2).as("base"), col("mh_rescue_tail").as("keys")))
     val base = reps
-      .select(col("id"), col("mh_bands_head"), col("mh_bands_tail"),
-        col("mh_rescue_head"), col("mh_rescue_tail"),
-        explode(array(mhHead ++ mhTail ++ shortHead ++ shortTail: _*)).as("b"))
-      .select(col("id"), col("b.band_id").as("band_id"), col("b.key").as("key"))
-      .filter(col("key").isNotNull)
+      .select(col("id"), explode(family).as("f"))
+      .select(col("id"), col("f.base").as("base"),
+        posexplode(col("f.keys")).as(Seq("pos", "key")))
+      .select(col("id"), (col("base") + col("pos")).as("band_id"), col("key"))
 
     if (!cfg.substringPass) base
     else {
@@ -114,7 +110,9 @@ object Candidates {
 
   /** Self-join bands into distinct candidate pairs (url_a < url_b), with
     * explicit salted handling of heavy band keys. With a [[Delta]], only
-    * pairs with a new endpoint are emitted, over the delta's band relation.
+    * pairs with a new endpoint are emitted, over the delta's band relation,
+    * and `reps` must be a materialized leaf: its payload projection is read
+    * by the join-back without a checkpoint of its own.
     *
     * Heavy keys (> cfg.heavyBandKeyCap rows — boilerplate bands, near-constant
     * simhash slices) are routed through a triangle-bucket replicated join
@@ -181,12 +179,13 @@ object Candidates {
     // the pairs plan: checkpoint leaves (Pipeline.leaf), so each reference
     // is O(1) to plan — as cached frames, the tree below each reference was
     // re-analyzed per branch (a multi-second zero-job driver gap before the
-    // pairs checkpoint).
-    val repSlim = Pipeline.leaf(spark, "graft: rep projection") {
-      sortedUrls match {
-        case Some(su) => repProj.join(su.zipWithIndex().toDF("url", "id"), "url")
-        case None => repProj.withColumn("id", col("url"))
+    // pairs checkpoint). In delta mode `reps` is already the caller's leaf
+    // and the projection is a select over it: nothing to materialize.
+    val repSlim = sortedUrls match {
+      case Some(su) => Pipeline.leaf(spark, "graft: rep projection") {
+        repProj.join(su.zipWithIndex().toDF("url", "id"), "url")
       }
+      case None => repProj.withColumn("id", col("url"))
     }
 
     // the band relation feeds the key-count pass, both sides of the light
@@ -213,18 +212,20 @@ object Candidates {
     // the same rows regardless of partitioning or task order (ids are
     // themselves a pure function of the url set), so the pairs TABLE (not
     // just the clusters) is partition-invariant — SURVEY §5.7.
-    // A leaf like bnds above: the frame feeds two consumers one-shot (light
-    // anti-join + heavy semi-join) and three in delta mode — unmaterialized,
-    // each action re-ran the aggregation over the full band relation and
-    // re-broadcast it.
+    // Materialized once, like bnds above: the set feeds two consumers
+    // one-shot (light anti-join + heavy semi-join) and three in delta mode —
+    // unmaterialized, each action re-ran the aggregation over the full band
+    // relation and re-broadcast it.
     //
     // The common case has NO heavy keys (boilerplate bands only appear in
-    // skewed corpora): the leaf is tiny, so one O(1) emptiness probe skips
-    // the whole heavy branch — otherwise the empty-set plumbing still pays a
-    // full band-relation scan for the heavy slice plus the anti-join stream
+    // skewed corpora), so the whole heavy branch is skipped when the set is
+    // empty — otherwise the empty-set plumbing still pays a full
+    // band-relation scan for the heavy slice plus the anti-join stream
     // filter on every light row. Pair-set identical by construction (an
-    // empty heavy set routes nothing through either branch).
-    val heavyKeys = Pipeline.leaf(spark, "graft: heavy-key detect") {
+    // empty heavy set routes nothing through either branch). The key set is
+    // broadcast-sized by construction, so ONE job collects it to the driver
+    // and every consumer reads it back as a local relation.
+    val heavyQuery = {
       val frac = cfg.heavyDetectSampleFrac
       if (frac <= 0)
         bnds.groupBy("band_id", "key").count()
@@ -240,7 +241,10 @@ object Candidates {
           .select("band_id", "key")
       }
     }
-    val noHeavy = Pipeline.labeled(spark, "graft: heavy-key detect")(heavyKeys.isEmpty)
+    val heavyKeyRows = Pipeline.labeled(spark, "graft: heavy-key detect")(heavyQuery.collect())
+    val noHeavy = heavyKeyRows.isEmpty
+    val heavyKeys = spark.createDataFrame(
+      java.util.Arrays.asList(heavyKeyRows: _*), heavyQuery.schema)
     val light =
       if (noHeavy) bnds
       else bnds.join(broadcast(heavyKeys), Seq("band_id", "key"), "left_anti")

@@ -26,7 +26,6 @@ final case class SignatureRow(
     text_md5: String,
     simhash_head: Option[Long],
     simhash_tail: Option[Long],
-    minhash: Array[Long],
     mh_bands_head: Array[Long],
     mh_bands_tail: Array[Long],
     mh_rescue_head: Array[Long],
@@ -104,7 +103,6 @@ object Fingerprints {
       text_md5 = md5hex(extracted),
       simhash_head = if (sig.simhashHead == 0L) None else Some(sig.simhashHead),
       simhash_tail = if (sig.simhashTail == 0L) None else Some(sig.simhashTail),
-      minhash = if (sig.minhash == null) Array.emptyLongArray else sig.minhash,
       mh_bands_head = bandKeys(mhHead),
       mh_bands_tail = bandKeys(mhTail),
       mh_rescue_head = rescueKeys(mhHead, sig.shinglesHead.length),
@@ -314,7 +312,7 @@ object Fingerprints {
         col("warc_ts"), col("lang"),
         col("fp.text_len"), col("fp.size"), col("fp.text_md5"),
         col("fp.simhash_head"), col("fp.simhash_tail"),
-        col("fp.minhash"), col("fp.mh_bands_head"), col("fp.mh_bands_tail"),
+        col("fp.mh_bands_head"), col("fp.mh_bands_tail"),
         col("fp.mh_rescue_head"), col("fp.mh_rescue_tail"),
         col("fp.shingles_head"), col("fp.shingles_tail"), col("fp.ss_keys"),
         col("fp.extract_ok"),
@@ -330,7 +328,9 @@ object Fingerprints {
     * the cache and the store write path of a bandwidth-bound workload.
     * configFp carries a payload=full/pruned marker for exactly this schema
     * split, so a pruned store can never satisfy a resume that needs the
-    * shingle columns, and every store holds a single schema. */
+    * shingle columns. A store may still mix schemas under one config_fp:
+    * snapshots committed before the full-document MinHash was dropped carry
+    * an extra `minhash` column, which [[Resume.liveView]] drops at read. */
   def pruneForMode(sigs: DataFrame, cfg: GraftConfig): DataFrame =
     if (cfg.exactVerify || cfg.substringPass) sigs
     else sigs.drop("shingles_head", "shingles_tail", "ss_keys")

@@ -137,7 +137,11 @@ object Resume {
     * and only then does the second payload pass run. */
   private[graft] def liveView(spark: SparkSession, store: IcebergShaped.Table,
                               cfg: GraftConfig): DataFrame = {
+    // snapshots committed while signature rows still carried the
+    // full-document MinHash hold an extra `minhash` column (same config_fp):
+    // no reader wants it, so it leaves at the scan and the leaf never holds it
     val stored = Pipeline.labeled(spark, "graft: incr live keys")(store.read(spark))
+      .drop("minhash")
     val rows = Pipeline.scan(stored.filter(col("config_fp") === cfg.configFp), cfg)
     val decisions = Fingerprints.electUrlKeys(Fingerprints.urlKeysOf(rows), caseRule = true)
       .persist(StorageLevel.MEMORY_AND_DISK)

@@ -42,7 +42,7 @@ class SamplingModeSpec extends AnyFunSuite {
     assert(got.simhashHead === SimHash64.of(full, cfg.minDistinctShingles))
     assert(got.simhashTail === 0L)
     assert(got.shinglesHead.toSeq === full.take(cfg.maxStoredShinglesPerSlot).toSeq)
-    assert(got.minhash.toSeq === mh(c1).signature(full).toSeq)
+    assert(got.mhHead.toSeq === mh(c1).signature(full).toSeq)
   }
 
   test("cutEnds two-slot path unchanged by the mode machinery") {

@@ -15,7 +15,7 @@ class FingerprintExprSpec extends AnyFunSuite {
   test("expression path == typed path, field for field") {
     val pages = CorpusSpark.pages(spark, 400L, 4, cfg.seed)
     val cols = Seq("url", "content_id", "part_id", "text_len", "size", "text_md5",
-      "simhash_head", "simhash_tail", "minhash", "mh_bands_head", "mh_bands_tail",
+      "simhash_head", "simhash_tail", "mh_bands_head", "mh_bands_tail",
       "mh_rescue_head", "mh_rescue_tail", "shingles_head", "shingles_tail",
       "ss_keys", "extract_ok", "config_fp", "reject_reason")
     val a = Fingerprints.fromPages(pages, cfg)

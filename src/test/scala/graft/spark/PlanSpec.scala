@@ -143,7 +143,7 @@ class PlanSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     object Plans extends AdaptiveSparkPlanHelper
     val plans = seen.asScala.toSeq.map(_.executedPlan)
-    val payload = Set("minhash", "mh_bands_head")
+    val payload = Set("mh_bands_head", "mh_bands_tail")
     def carriesPayload(attrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute]) =
       attrs.exists(a => payload.contains(a.name))
     assert(plans.exists(p => Plans.collect(p) {
