@@ -344,9 +344,10 @@ object Candidates {
       case Some(d) =>
         // INCREMENTAL delta: only pairs with >= 1 endpoint in `d.newUrls`
         // (new or changed reps). The light family becomes a new-side x
-        // all-side join — when the increment is small Catalyst broadcasts the
-        // new side, so the PAIR JOIN adds no full-corpus shuffle (the
-        // 10^12-doc resume story: candidate-join work scales with the
+        // all-side join — the new side is a measured leaf (bndsNew below),
+        // so when the increment is small Catalyst plans it as a broadcast
+        // join from the start and the PAIR JOIN adds no full-corpus shuffle
+        // (the 10^12-doc resume story: candidate-join work scales with the
         // increment). Honest bound: the caller's band-relation leaf costs
         // one full scan of the stored band table per increment, and the
         // sampled heavy detection above scans that leaf in full — a narrow
@@ -407,8 +408,8 @@ object Candidates {
           // no explicit broadcast hint on the new-id flags: an explicit hint
           // cannot be demoted at runtime, so a LARGE increment (the id set is
           // increment-sized, not bounded) would OOM instead of falling back;
-          // the join keys are slim longs at topology volume, and AQE
-          // broadcasts the small-increment case on its own.
+          // newIds is a measured leaf, so Catalyst broadcasts it at plan time
+          // exactly when it is under the broadcast threshold.
           val na = newIds.select(col("id").as("id_a"), lit(true).as("__na"))
           val nb = newIds.select(col("id").as("id_b"), lit(true).as("__nb"))
           val heavyDelta = heavyPairGen(heavyRows)
@@ -430,10 +431,10 @@ object Candidates {
       .groupBy("id_a", "id_b")
       .agg(max(col("from_ss")).as("from_ss"))
 
-    // payload join-back at pair volume (Catalyst picks broadcast vs SMJ):
-    // urls re-enter here. Order isomorphism of the dictionary guarantees
-    // id_a < id_b implies url_a < url_b — the pair orientation contract is
-    // unchanged. id_a/id_b stay on the pairs table for the union-find
+    // payload join-back at pair volume (Catalyst picks broadcast vs SMJ from
+    // the measured size of the rep leaf under `slim`): urls re-enter here.
+    // Order isomorphism of the dictionary guarantees id_a < id_b implies
+    // url_a < url_b — the pair orientation contract is unchanged. id_a/id_b stay on the pairs table for the union-find
     // (Clusters.assignByIds), which then also shuffles longs.
     val slim = repSlim.select(col("id"), col("url"), col("simhash_head"),
       col("simhash_tail"), col("text_len"), col("size"))

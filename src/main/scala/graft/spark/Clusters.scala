@@ -16,7 +16,7 @@ import org.apache.spark.sql.expressions.Window
   *                  m = min(N-(u) ∪ {u})
   * Converges to star graphs rooted at component minima in O(log^2 n) rounds;
   * `localCheckpoint` every round truncates lineage (Catalyst cannot express
-  * fixpoints); convergence check = (count, xor-of-hashes) signature.
+  * fixpoints); convergence check = (measured row count, edge-hash sum).
   * cluster_id = min(url) of the component — deterministic (SURVEY C2).
   */
 object Clusters {
@@ -46,21 +46,12 @@ object Clusters {
   private def isStringNodes(edges: DataFrame): Boolean =
     edges.schema("u").dataType == org.apache.spark.sql.types.StringType
 
-  private def signature(edges: DataFrame): (Long, Long, Long) = {
-    // hashes folded mod p so the ANSI-mode sum cannot overflow Long; the
-    // same one job also estimates the edge-list payload so the local-finish
-    // gate is a BYTE budget, not a row count (url lengths make row counts a
-    // wildly unreliable proxy for driver heap). Long-keyed edges (dictionary
-    // ids, Candidates.dictionary) cost a flat 16 bytes/row.
-    val byteCol =
-      if (isStringNodes(edges)) length(col("u")) + length(col("v"))
-      else lit(16)
-    val row = edges.agg(
-      count(lit(1)).as("c"),
-      coalesce(sum(pmod(xxhash64(col("u"), col("v")), lit(1000000007L))), lit(0L)).as("h"),
-      coalesce(sum(byteCol), lit(0L)).as("b")).head()
-    (row.getLong(0), row.getLong(1), row.getLong(2))
-  }
+  /** Order-free hash of the edge set — with the leaf's row count, the
+    * convergence signature of a star round. Hashes are folded mod p so the
+    * ANSI-mode sum cannot overflow Long. */
+  private def edgeHash(edges: DataFrame): Long =
+    edges.agg(coalesce(sum(pmod(xxhash64(col("u"), col("v")), lit(1000000007L))), lit(0L)))
+      .head().getLong(0)
 
   /** Connected components of an undirected edge list (columns u, v; node
     * type string url OR long dictionary id — the long path keeps every star
@@ -69,14 +60,22 @@ object Clusters {
     * are whatever node type came in); callers add singletons.
     *
     * Hybrid execution: star rounds run distributed while the edge set is
-    * large; once it fits comfortably on the driver (`localFinishEdges`,
-    * default 2M edges ~ 300 MB of url strings) the remainder finishes in a
+    * large; once it fits comfortably on the driver (`localFinishEdges`
+    * edges AND `localFinishBytes` of edge rows) the remainder finishes in a
     * path-compressed local union-find — each distributed round costs a
     * checkpoint job + a signature job, and on real corpora the exact-dup
     * pre-grouping leaves a pair graph orders of magnitude smaller than the
     * corpus, so the tail rounds were pure fixed overhead. At 10^12-doc scale
     * with billions of edges the distributed rounds keep running until the
-    * graph contracts below the threshold. */
+    * graph contracts below the threshold.
+    *
+    * The gate reads each checkpoint's measured size ([[Pipeline.leafSize]]):
+    * rows, and bytes as `UnsafeRow` bytes (24 per long-keyed edge; 24 plus
+    * both url strings, each padded to 8 bytes, per url-keyed edge) — a byte
+    * budget, not a row count, because url lengths make row counts a wildly
+    * unreliable proxy for driver heap. So deciding to finish locally costs no
+    * job; the edge-set hash that the convergence check needs runs only once
+    * distributed rounds start. */
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 50,
                           localFinishEdges: Long = 2000000L,
                           localFinishBytes: Long = 256L << 20): DataFrame = {
@@ -118,22 +117,25 @@ object Clusters {
     var edges = Pipeline.leaf(spark, "graft: union-find edges checkpoint") {
       pairs.select(col("u"), col("v")).filter(col("u") =!= col("v")).distinct()
     }
-    var (cnt, sig, bytes) = Pipeline.labeled(spark, "graft: union-find signature") {
-      signature(edges)
-    }
-    if (cnt == 0) return {
+    val (edgeRows, edgeBytes) = Pipeline.leafSize(edges)
+    if (edgeRows == 0) return {
       if (stringNodes) Seq.empty[(String, String)].toDF("url", "cluster_id")
       else Seq.empty[(Long, Long)].toDF("url", "cluster_id")
     }
-    if (fitsLocal(cnt, bytes)) return localFinish(edges)
+    if (fitsLocal(edgeRows, edgeBytes)) return localFinish(edges)
 
+    var cnt = edgeRows
+    var sig = Pipeline.labeled(spark, "graft: union-find signature")(edgeHash(edges))
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxRounds) {
-      // bare (not Pipeline.leaf): perfbench counts unlabeled star-round jobs
-      edges = smallStar(largeStar(edges)).localCheckpoint()
-      val (c2, s2, b2) = signature(edges)
+      // measured like a leaf, but bare (not Pipeline.leaf): perfbench
+      // counts unlabeled star-round jobs
+      edges = org.apache.spark.sql.graftbridge.CheckpointBridge
+        .localCheckpoint(smallStar(largeStar(edges)))
+      val (c2, b2) = Pipeline.leafSize(edges)
       if (fitsLocal(c2, b2)) return localFinish(edges)
+      val s2 = edgeHash(edges)
       converged = (c2, s2) == (cnt, sig)
       cnt = c2; sig = s2
       rounds += 1

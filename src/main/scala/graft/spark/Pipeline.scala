@@ -81,16 +81,15 @@ object Pipeline {
     * the hazard is detectable exactly as live rows exceeding input rows.
     * (A previous cut warned on `skipped > 0`, which fires on the CORRECT
     * usage — full live corpus passed, store satisfies most of it — and
-    * stays silent on the hazardous batch-only shape.) Costs one count on
-    * the already-materialized live view. */
+    * stays silent on the hazardous batch-only shape.) The live view is a
+    * measured leaf (or, over an empty store, a zero-row limit), so its row
+    * count comes from its statistics ([[leafSize]]): no job. */
   private def warnIfSubstringTextMissing(liveSigs: DataFrame,
                                          inc: Resume.IncrementalResult,
                                          cfg: GraftConfig): Unit =
     if (cfg.substringPass) {
       val inputRows = inc.newlyFingerprinted + inc.skipped
-      val liveRows = labeled(liveSigs.sparkSession, "graft: incr input count") {
-        liveSigs.count()
-      }
+      val (liveRows, _) = leafSize(liveSigs)
       if (liveRows > inputRows)
         System.err.println(
           "[graft] substringPass on an incremental run: `pages` must be the " +
@@ -393,9 +392,17 @@ object Pipeline {
     try body finally sc.setJobDescription(prev)
   }
 
-  /** THE way the engine materializes an intermediate: an eager
-    * `localCheckpoint` of `df`, run under `desc`, so every such job is
-    * attributable to its phase.
+  /** THE way the engine materializes an intermediate: an eager local
+    * checkpoint of `df`, run under `desc`, so every such job is attributable
+    * to its phase. The leaf reports what it materialized — its row count and
+    * `UnsafeRow` bytes, counted by the checkpoint job's own tasks
+    * ([[org.apache.spark.sql.graftbridge.CheckpointBridge]]) — instead of
+    * the origin plan's estimate (1e24+ bytes over the candidate layer's
+    * joins). So Catalyst plans a join with a leaf side under
+    * `spark.sql.autoBroadcastJoinThreshold` as a broadcast join up front
+    * (the band self-join, the pair payload join-back at small scale) and
+    * keeps the sort-merge join above it, instead of shuffling both sides
+    * before AQE demotes the join; [[leafSize]] reads the same numbers.
     *
     * Why a checkpoint leaf and not persist+count, wherever a frame is read
     * again:
@@ -410,11 +417,21 @@ object Pipeline {
     *  - Blocks are freed by the ContextCleaner once no frame references the
     *    leaf, so no caller keeps an unpersist list.
     * The leaf is lost on executor death; on a real cluster the durable
-    * equivalent is a store write read back. The one bare `localCheckpoint`
-    * left is the star round in [[Clusters.connectedComponents]]. */
+    * equivalent is a store write read back. The one other checkpoint is the
+    * star round in [[Clusters.connectedComponents]], the same measured
+    * checkpoint without a label of its own. */
   private[graft] def leaf(spark: org.apache.spark.sql.SparkSession, desc: String)(
       df: => DataFrame): DataFrame =
-    labeled(spark, desc)(df.localCheckpoint())
+    labeled(spark, desc)(org.apache.spark.sql.graftbridge.CheckpointBridge.localCheckpoint(df))
+
+  /** (rows, `UnsafeRow` bytes) a [[leaf]] measured when it materialized —
+    * read from its plan statistics, so it costs no job. */
+  private[graft] def leafSize(df: DataFrame): (Long, Long) = {
+    val st = df.queryExecution.analyzed.stats
+    val rows = st.rowCount.getOrElse(
+      throw new IllegalArgumentException("not a measured leaf: no row count in its statistics"))
+    (rows.toLong, st.sizeInBytes.toLong)
+  }
 
   /** The shared relational core: candidates -> scoring -> [exact verify /
     * substring pass] -> union-find -> keeper election over the caller's

@@ -72,12 +72,28 @@ class ClustersSpec extends AnyFunSuite {
     // 40 edges x ~40 KB urls ~ 3.2 MB of strings: trivially under the edge
     // COUNT gate, far over a 1 MB byte budget — a row-count gate would
     // collect these onto the driver regardless of string width
+    // (the budget counts UnsafeRow bytes: ~40 KB per edge row here)
     val fat = "x" * 20000
     val edges = (0 until 40).map(i => (s"$fat-${i}", s"$fat-${i + 1}"))
-    val viaBytes = Clusters.connectedComponents(
-        edges.toDF("u", "v"), maxRounds = 50,
-        localFinishEdges = 1000L, localFinishBytes = 1L << 20)
-      .as[(String, String)].collect().toMap
+    // star rounds are the checkpoint jobs started from Clusters itself
+    val starJobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.stageInfos.exists(_.name.startsWith("localCheckpoint at Clusters")))
+          starJobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val viaBytes =
+      try {
+        val out = Clusters.connectedComponents(
+            edges.toDF("u", "v"), maxRounds = 50,
+            localFinishEdges = 1000L, localFinishBytes = 1L << 20)
+          .as[(String, String)].collect().toMap
+        org.apache.spark.graftclock.TaskClock.drain(sc)
+        out
+      } finally sc.removeSparkListener(listener)
+    assert(starJobs.get > 0, "the byte budget must route these edges through the star rounds")
     val uf = new UnionFind[String]
     edges.foreach { case (a, b) => uf.union(a, b) }
     val expected = uf.components(edges.flatMap(e => Seq(e._1, e._2)).distinct)

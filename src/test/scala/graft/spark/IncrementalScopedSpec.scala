@@ -32,6 +32,46 @@ class IncrementalScopedSpec extends AnyFunSuite {
     df.select("url_a", "url_b", "sim_bits", "matched").orderBy("url_a", "url_b")
       .collect().toSeq.map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getBoolean(3)))
 
+  test("substringPass increment warns when `pages` lacks live text, from the " +
+      "live view's measured rows: no count job of its own") {
+    val base = CorpusSpark.pages(spark, 240L, 4, cfg.seed)
+    val batch = CorpusSpark.pages(spark, 300L, 4, cfg.seed)
+      .join(base.select("url"), Seq("url"), "left_anti")
+    /** (stderr of the increment over `pages`, its `graft: incr input count` jobs) */
+    def increment(c: GraftConfig, pages: DataFrame): (String, Int) = {
+      val store = tmpStore()
+      val (_, _, st1) = Pipeline.runIncrementalScoped(base, store, None, c)
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (j.properties.getProperty("spark.job.description") == "graft: incr input count")
+            jobs.incrementAndGet()
+      }
+      val sc = spark.sparkContext
+      val err = new java.io.ByteArrayOutputStream()
+      val saved = System.err
+      org.apache.spark.graftclock.TaskClock.drain(sc)
+      sc.addSparkListener(listener)
+      System.setErr(new java.io.PrintStream(err, true))
+      try {
+        Pipeline.runIncrementalScoped(pages, store, Some(st1), c)
+        org.apache.spark.graftclock.TaskClock.drain(sc)
+      } finally {
+        System.setErr(saved)
+        sc.removeSparkListener(listener)
+      }
+      (err.toString, jobs.get)
+    }
+    val warning = "substringPass on an incremental run"
+    val ss = cfg.copy(substringPass = true)
+    val (batchOnly, ssJobs) = increment(ss, batch)
+    assert(batchOnly.contains(warning), "batch-only pages must warn")
+    assert(!increment(ss, base.unionByName(batch))._1.contains(warning),
+      "the live page source must not warn")
+    assert(ssJobs === increment(cfg, batch)._2,
+      "the warning must read the live view's row count, not count it")
+  }
+
   test("append increment: scoped == one-shot; union-find input bounded by affected") {
     val store = tmpStore()
     val base = CorpusSpark.pages(spark, 600L, 4, cfg.seed)

@@ -52,16 +52,60 @@ class PlanSpec extends AnyFunSuite {
     // statistics — so the heavy group can never collapse into per-key
     // sorted tasks (the straggler the star path exists to kill). Pin the
     // hub/routing joins: at least one BroadcastHashJoin keyed by the band
-    // key must exist. (Round-6 note: the LIGHT self-join may legitimately
-    // plan as SortMergeJoin now that the band relation is a checkpoint leaf
-    // without plan-time size stats — SMJ is the correct at-scale strategy
-    // for that join, and AQE rewrites the small-corpus case at runtime, so
-    // the old blanket no-SMJ-on-band_id assertion pinned a stats artifact,
-    // not the invariant.)
+    // key must exist. (The LIGHT self-join is sized, not hinted: the band
+    // relation is a measured leaf, so it broadcasts below
+    // spark.sql.autoBroadcastJoinThreshold and sort-merges above it — the
+    // test below pins both; a blanket no-SMJ-on-band_id assertion would pin
+    // a corpus size, not the invariant.)
     val bhjOnBand = plan.linesIterator.exists(l =>
       l.contains("BroadcastHashJoin") && l.contains("band_id"))
     assert(bhjOnBand, "hub/routing joins must broadcast on the band key:\n" +
       plan.take(3000))
+  }
+
+  test("light band self-join is planned from the band leaf's measured size: " +
+      "broadcast below the threshold, sort-merge above it, in the initial plan") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.execution.SparkPlan
+    val cfg = GraftConfig()
+    val pages = CorpusSpark.pages(spark, 400L, parts = 2, seed = cfg.seed)
+    val reps = Fingerprints.fromPages(pages, cfg).toDF()
+      .filter(col("reject_reason").isNull)
+    // the INITIAL plan: AQE re-plans from runtime sizes, which would mask a
+    // leaf that reports no size of its own
+    def initialPlan(df: org.apache.spark.sql.DataFrame): SparkPlan =
+      df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+    def onBandKey(keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+      keys.map(_.references.map(_.name).mkString).toSet == Set("band_id", "key")
+    // the self-join is the one INNER join on (band_id, key); heavy-key
+    // routing, when present, adds anti/semi joins on the same keys
+    import org.apache.spark.sql.catalyst.plans.Inner
+    def bandJoins(p: SparkPlan): (Int, Int) = (
+      p.collect { case j: BroadcastHashJoinExec
+        if j.joinType == Inner && onBandKey(j.leftKeys) => j }.length,
+      p.collect { case j: SortMergeJoinExec
+        if j.joinType == Inner && onBandKey(j.leftKeys) => j }.length)
+
+    val small = Candidates.candidatePairs(reps, cfg)
+    assert(bandJoins(initialPlan(small)) === (1, 0), initialPlan(small).toString.take(3000))
+    val bandLeafBytes = small.queryExecution.analyzed.collect {
+      case r: LogicalRDD if r.output.map(_.name).contains("band_id") => r.stats.sizeInBytes
+    }.head
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, (bandLeafBytes - 1).toString)
+    try {
+      val big = Candidates.candidatePairs(reps, cfg)
+      assert(bandJoins(initialPlan(big)) === (0, 1), initialPlan(big).toString.take(3000))
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("delta-mode candidate plan skips the dictionary (no full-corpus " +
