@@ -47,8 +47,11 @@ final case class GraftConfig(
     numPerm: Int = 128,
     /** MinHash LSH bands (rows per band = numPerm / minhashBands). Default
       * 32 bands x 4 rows: P(candidate) = 1-(1-J^4)^32 — ~1.0 at J=0.8,
-      * 0.9998 at J=0.7 — sized to catch threshold-boundary pairs (raw
-      * Hamming 4..8). */
+      * 0.9998 at J=0.7. Pairs at the Hamming threshold are not all that
+      * similar: a slot at sim 57 can have Jaccard 0.39-0.50, where a pair is
+      * a candidate w.p. about 0.66-0.90 over both slots (3 of 31,216
+      * truth-matched pairs missed over seeds 1-100 of the benchmark corpus;
+      * ROADMAP direction 3). */
     minhashBands: Int = 32,
     /** SimHash band width in bits (64 / simhashBandBits bands per slot).
       * No band family reads it: candidates come from the minhash, rescue

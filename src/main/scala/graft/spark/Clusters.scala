@@ -184,11 +184,13 @@ object Clusters {
   }
 
   /** Result of [[spliceAssign]]: the new rep-level assignment plus the scale
-    * evidence — how many edges the union-find actually saw (bounded by the
-    * affected components + the delta, NOT the corpus) and how many previous
-    * clusters were touched. */
-  final case class Splice(assign: DataFrame, reclusterEdges: Long,
-                          affectedClusters: Long, untouchedClusters: Long)
+    * evidence as lazy (metric, value) rows — `recluster_edges`, how many
+    * edges the union-find actually saw (bounded by the affected components +
+    * the delta, NOT the corpus), `affected_clusters`, how many previous
+    * clusters were touched, and `untouched_clusters`. The first two are the
+    * measured sizes of the splice's leaves; the third is an aggregate that
+    * runs wherever the caller's metrics run. */
+  final case class Splice(assign: DataFrame, metrics: DataFrame)
 
   /** Incremental re-cluster scoped to AFFECTED components (SURVEY §2.10;
     * reference analog: the re-run skip memoization, mainwindow.cpp:153-154 —
@@ -221,7 +223,9 @@ object Clusters {
   def spliceAssign(allReps: DataFrame, prevAssign: DataFrame,
                    prevMatched: DataFrame, deltaMatched: DataFrame,
                    staleUrls: DataFrame): Splice = {
-    val stale = staleUrls.select(col("url")).distinct()
+    // stale and touched urls only ever feed semi/anti joins, which ignore
+    // duplicates: no distinct (and no shuffle) is needed to build them
+    val stale = staleUrls.select(col("url"))
     val keptPrev = prevMatched.select(col("url_a"), col("url_b"))
       .join(stale.select(col("url").as("url_a")), Seq("url_a"), "left_anti")
       .join(stale.select(col("url").as("url_b")), Seq("url_b"), "left_anti")
@@ -231,22 +235,23 @@ object Clusters {
     // — they have no prev cluster to pull in (they only add subgraph nodes).
     val touchedUrls = deltaMatched.select(col("url_a").as("url"))
       .unionByName(deltaMatched.select(col("url_b").as("url")))
-      .unionByName(stale).distinct()
-    val affectedRoots = prevAssign.join(touchedUrls, Seq("url"), "left_semi")
-      .select(col("cluster_id")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
+      .unionByName(stale)
+    val spark = allReps.sparkSession
+    // two measured leaves, built under the splice's own label: the union-find
+    // and the assignment read them, and their row counts are the scale
+    // evidence below, so no aggregate job re-reads them
+    val affectedRoots = Pipeline.leaf(spark, "graft: incr splice") {
+      prevAssign.join(touchedUrls, Seq("url"), "left_semi").select(col("cluster_id")).distinct()
+    }
     val affectedMembers = prevAssign
       .join(affectedRoots, Seq("cluster_id"), "left_semi")
     // prev edges live entirely inside one component, so one endpoint decides
-    // persisted: connectedComponents materializes its own deduped CHECKPOINT
-    // of this frame, so without the persist the reclusterEdges count below
-    // would re-execute the whole anti/semi-join/union plan a second time
-    val subEdges = keptPrev
-      .join(affectedMembers.select(col("url").as("url_a")), Seq("url_a"), "left_semi")
-      .unionByName(deltaMatched.select(col("url_a"), col("url_b")))
-      .select(col("url_a").as("u"), col("url_b").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val subEdges = Pipeline.leaf(spark, "graft: incr splice") {
+      keptPrev
+        .join(affectedMembers.select(col("url").as("url_a")), Seq("url_a"), "left_semi")
+        .unionByName(deltaMatched.select(col("url_a"), col("url_b")))
+        .select(col("url_a").as("u"), col("url_b").as("v"))
+    }
     val comp = connectedComponents(subEdges)
 
     val untouched = prevAssign.join(affectedRoots, Seq("cluster_id"), "left_anti")
@@ -256,18 +261,16 @@ object Clusters {
         Seq("url"), "left")
       .withColumn("cluster_id", coalesce(col("cluster_id"), col("url")))
 
-    // scale evidence in ONE aggregate job (cheap: subEdges and affectedRoots
-    // are persisted above, so it reads cached blocks; the untouched count
-    // runs at assignment volume). An assignment's cluster_id is never null
-    // (every generation's assign coalesces it to the url), so count_distinct
-    // counts every untouched cluster.
-    val n = subEdges.agg(count(lit(1)))
-      .crossJoin(affectedRoots.agg(count(lit(1))))
-      .crossJoin(untouched.agg(count_distinct(col("cluster_id"))))
-      .head()
-    affectedRoots.unpersist(blocking = false)
-    subEdges.unpersist(blocking = false)
-    Splice(assign, n.getLong(0), n.getLong(1), n.getLong(2))
+    // An assignment's cluster_id is never null (every generation's assign
+    // coalesces it to the url), so count_distinct counts every untouched
+    // cluster.
+    import spark.implicits._
+    val metrics = Seq(
+      ("recluster_edges", Pipeline.leafSize(subEdges)._1),
+      ("affected_clusters", Pipeline.leafSize(affectedRoots)._1)).toDF("metric", "value")
+      .unionByName(untouched.agg(lit("untouched_clusters").as("metric"),
+        count_distinct(col("cluster_id")).as("value")))
+    Splice(assign, metrics)
   }
 
   /** Keeper election (SURVEY §2.5 W1): the reference highlights the "better"

@@ -1,7 +1,7 @@
 package graft.spark
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core._
@@ -124,8 +124,9 @@ object Fingerprints {
     * over raw rows would put the surviving copy's own (url, warc_ts) key in
     * the loser set and the anti-join would drop the document entirely.
     *
-    * This is the dedup the INCREMENTAL commit path applies ([[Resume]]):
-    * rule 2 (the case rule) must NOT run before a commit, because a later
+    * The INCREMENTAL commit applies the same rule 1 in its key pass
+    * ([[Resume]], through [[rankUrlKeys]]): rule 2 (the case rule) must NOT
+    * run before a commit, because a later
     * batch can add an older case-variant that changes the cross-increment
     * case election — rule-2 losers are committed and the live view elects
     * among all of them (batch-split invariance).
@@ -150,15 +151,6 @@ object Fingerprints {
     * invariant without re-reading committed payloads. */
   def dropRecrawlDuplicateUrls(pages: DataFrame): DataFrame =
     urlDedup(pages, caseRule = false, eagerKeys = false)
-
-  /** [[dropRecrawlDuplicateUrls]] with its decision frame materialized NOW
-    * as a checkpoint leaf (one job): for eager call sites (Resume's commit
-    * path) where the first downstream action fans out into concurrent AQE
-    * stage jobs that would otherwise each re-derive the decisions. The
-    * public entry points stay lazy (plan-construction contract,
-    * Round5ReviewSpec). */
-  private[graft] def dropRecrawlDuplicateUrlsEager(pages: DataFrame): DataFrame =
-    urlDedup(pages, caseRule = false, eagerKeys = true)
 
   /** Shared body of the two url-dedup entry points. Plan discipline (the
     * round-5 perf regression root cause, see BENCH/BASELINE.md): EVERY
@@ -208,8 +200,8 @@ object Fingerprints {
     * with `caseRule`, rule 2 (among the rule-1 winners, the earliest
     * (warc_ts, url) per lower(url) wins) — computed on [[urlKeysOf]] keys
     * only, never on a payload row. The one-shot dedup ([[urlDedup]]) and the
-    * incremental live view ([[Resume.liveView]]) both call it, so the two
-    * paths cannot elect different survivors. Rule 2 ranks the rule-1
+    * incremental key pass ([[Resume]]) both rank through [[rankUrlKeys]], so
+    * the two paths cannot elect different survivors. Rule 2 ranks the rule-1
     * winners of each lower(url) first (a loser's rank is irrelevant: it
     * leaves anyway), so one window pass over the keys decides both rules.
     *
@@ -217,18 +209,29 @@ object Fingerprints {
     * 0 for losers (either rule), 1 for surviving keys held by more than one
     * record (copies that [[applyUrlElection]] collapses to one row). Lazy:
     * no job runs here. */
-  private[graft] def electUrlKeys(keys: DataFrame, caseRule: Boolean): DataFrame = {
+  private[graft] def electUrlKeys(keys: DataFrame, caseRule: Boolean): DataFrame =
+    rankUrlKeys(keys, caseRule)
+      .select(col("url"), col("warc_ts"),
+        when(col("__lost"), 0).when(col("__copies") > 1, 1).as("__t"))
+      .filter(col("__t").isNotNull)
+
+  /** The ranking behind [[electUrlKeys]], with every key kept: `__lost` is
+    * true for a key that loses either rule and false for a winner. With
+    * `among`, only the keys for which it holds take part — the others sort
+    * after them in every window, so they cannot move a participant's rank,
+    * and their `__lost` is null ([[Resume]] elects the batch's rule 1 and the
+    * live view's two rules over one key relation this way). */
+  private[graft] def rankUrlKeys(keys: DataFrame, caseRule: Boolean,
+                                 among: Option[Column] = None): DataFrame = {
+    val first = among.map(c => (!c).asc).toSeq
     val ranked = keys.withColumn("__rn", row_number().over(
-      Window.partitionBy(col("__lu"), col("url")).orderBy(col("warc_ts").desc)))
+      Window.partitionBy(col("__lu"), col("url")).orderBy(first :+ col("warc_ts").desc: _*)))
     val (withRanks, lost) =
       if (!caseRule) (ranked, col("__rn") > 1)
       else (ranked.withColumn("__rc", row_number().over(Window.partitionBy(col("__lu"))
-          .orderBy(col("__rn") > 1, col("warc_ts"), col("url")))),
+          .orderBy(first ++ Seq(col("__rn") > 1, col("warc_ts"), col("url")): _*))),
         col("__rn") > 1 || col("__rc") > 1)
-    withRanks
-      .select(col("url"), col("warc_ts"),
-        when(lost, 0).when(col("__copies") > 1, 1).as("__t"))
-      .filter(col("__t").isNotNull)
+    withRanks.withColumn("__lost", among.fold(lost)(when(_, lost))).drop("__rn", "__rc")
   }
 
   /** Applies an [[electUrlKeys]] decision frame to the full rows. Payload
@@ -272,7 +275,7 @@ object Fingerprints {
 
   /** Full url recency/case dedup — rule 1 ([[dropRecrawlDuplicateUrls]])
     * then rule 2, through the SAME election ([[electUrlKeys]]) as the
-    * cross-increment live view in [[Resume.liveView]], so the surviving row
+    * cross-increment live view of [[Resume]], so the surviving row
     * per url is independent of how a crawl is split into batches
     * (batch-split invariance, pinned in KernelHardeningSpec):
     *
@@ -283,9 +286,11 @@ object Fingerprints {
   def dropCaseDuplicateUrls(pages: DataFrame): DataFrame =
     urlDedup(pages, caseRule = true, eagerKeys = false)
 
-  /** Eager-keys variant of [[dropCaseDuplicateUrls]] — see
-    * [[dropRecrawlDuplicateUrlsEager]]; used by the pipeline fingerprint
-    * stage, whose first downstream action fans out concurrently. */
+  /** [[dropCaseDuplicateUrls]] with its decision frame materialized NOW as a
+    * checkpoint leaf (one job), for the pipeline fingerprint stage: its
+    * first downstream action fans out into concurrent AQE stage jobs that
+    * would otherwise each re-derive the decisions. The public entry points
+    * stay lazy (plan-construction contract, Round5ReviewSpec). */
   private[graft] def dropCaseDuplicateUrlsEager(pages: DataFrame): DataFrame =
     urlDedup(pages, caseRule = true, eagerKeys = true)
 
@@ -330,7 +335,7 @@ object Fingerprints {
     * split, so a pruned store can never satisfy a resume that needs the
     * shingle columns. A store may still mix schemas under one config_fp:
     * snapshots committed before the full-document MinHash was dropped carry
-    * an extra `minhash` column, which [[Resume.liveView]] drops at read. */
+    * an extra `minhash` column, which [[Resume.commit]] drops at read. */
   def pruneForMode(sigs: DataFrame, cfg: GraftConfig): DataFrame =
     if (cfg.exactVerify || cfg.substringPass) sigs
     else sigs.drop("shingles_head", "shingles_tail", "ss_keys")

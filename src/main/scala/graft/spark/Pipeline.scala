@@ -123,16 +123,20 @@ object Pipeline {
     * every frame it returns reads leaves. A k-increment chain's cache
     * footprint stays O(one increment) instead of k persisted corpus-sized
     * frames. The live signature view is a checkpoint leaf
-    * (Resume.liveView), not a persisted frame. */
+    * (Resume.liveView), not a persisted frame, and `reps` must be a measured
+    * leaf: the next increment reads its size. */
   final case class IncState(reps: DataFrame, pairs: DataFrame, repAssign: DataFrame,
                             retained: Seq[DataFrame] = Nil)
 
   /** The incremental entry, SCOPED to the increment (SURVEY §2.10
     * "re-cluster affected components"; reference analog
     * mainwindow.cpp:153-154 — skip unaffected work on re-runs).
-    * Fingerprints come from / go to the Iceberg-shaped store (anti-join
-    * resume, Resume.scala), and instead of re-running banding + scoring +
-    * union-find over the FULL live set every increment, this path:
+    * Fingerprints come from / go to the Iceberg-shaped store in one store
+    * pass (Resume.scala: one key pass decides the commit and the url
+    * election, the batch is fingerprinted once into a leaf that is both
+    * committed and unioned into the live view), and instead of re-running
+    * banding + scoring + union-find over the FULL live set every increment,
+    * this path:
     *
     *   - generates candidates only for pairs with >= 1 NEW/CHANGED endpoint
     *     (Candidates.candidatePairs delta mode — a broadcastable new-side x
@@ -168,7 +172,10 @@ object Pipeline {
     * (result, resume stats, state-for-next-call).
     * Metrics gain recluster_edges / affected_clusters / untouched_clusters —
     * the scale evidence that the union-find input is bounded by affected
-    * components. */
+    * components; the first two are measured leaf sizes, the third runs in
+    * the lazy metrics union. Every intermediate the increment reads twice
+    * (the rep identity diff, the delta pairs, the splice's affected roots
+    * and edges) is a labeled leaf, so each label's jobs are its own. */
   def runIncrementalScoped(pages: DataFrame, store: graft.store.IcebergShaped.Table,
                            prev: Option[IncState],
                            cfg: GraftConfig = GraftConfig())
@@ -246,24 +253,26 @@ object Pipeline {
         // (new warc_ts -> new content_id) is BOTH stale (old pairs invalid)
         // and new (delta candidates regenerate them); a demoted rep (its
         // text group gained a smaller url) is stale only. ONE full-outer
-        // identity join yields both sides (reps are unique per url), and one
-        // aggregate job below materializes it and answers both emptiness
-        // questions.
-        val identDiff = repsCk.select(col("url"), col("content_id"), lit(true).as("__cur"))
-          .join(st.reps.select(col("url"), col("content_id"), lit(true).as("__prev")),
-            Seq("url", "content_id"), "full_outer")
-          .filter(col("__cur").isNull || col("__prev").isNull)
-          .select(col("url"), col("__prev").isNull.as("__new"))
-          .persist(storage)
+        // identity join yields both sides (reps are unique per url), as a
+        // leaf. Its rows are the cur-only (new) plus the prev-only (stale)
+        // identities, and both rep sets hold the same number of matched
+        // identities, so the measured sizes of the three leaves give both
+        // counts: new - stale = |cur| - |prev|.
+        val identDiff = leaf(spark, "graft: incr new/stale detect") {
+          repsCk.select(col("url"), col("content_id"), lit(true).as("__cur"))
+            .join(st.reps.select(col("url"), col("content_id"), lit(true).as("__prev")),
+              Seq("url", "content_id"), "full_outer")
+            .filter(col("__cur").isNull || col("__prev").isNull)
+            .select(col("url"), col("__prev").isNull.as("__new"))
+        }
         val newUrls = identDiff.filter(col("__new")).select("url")
         val staleUrls = identDiff.filter(!col("__new")).select("url")
 
-        val (hasNew, hasStale) =
-          labeled(spark, "graft: incr new/stale detect") {
-            val n = identDiff.agg(count(when(col("__new"), 1)),
-              count(when(!col("__new"), 1))).head()
-            (n.getLong(0) > 0, n.getLong(1) > 0)
-          }
+        val (hasNew, hasStale) = {
+          val changed = leafSize(identDiff)._1
+          val grown = leafSize(repsCk)._1 - leafSize(st.reps)._1
+          (changed + grown > 0, changed - grown > 0)
+        }
 
         // The current rep set's band relation, built ONCE from one store
         // read: the stored rows of this config minus stale reps, plus a fresh
@@ -313,9 +322,11 @@ object Pipeline {
         val scoredBase = Pairs.score(cand, cfg)
         val scoredVerified =
           if (cfg.exactVerify) Pairs.exactVerify(scoredBase, repsCk, cfg) else scoredBase
-        val delta =
+        // a leaf: the pairs leaf and the splice both read it
+        val delta = leaf(spark, "graft: incr pairs checkpoint") {
           (if (cfg.substringPass) Pairs.substringPass(scoredVerified, pages, cfg)
-           else scoredVerified).drop("id_a", "id_b").persist(storage)
+           else scoredVerified).drop("id_a", "id_b")
+        }
 
         val keptPrev = st.pairs
           .join(staleUrls.select(col("url").as("url_a")), Seq("url_a"), "left_anti")
@@ -344,18 +355,12 @@ object Pipeline {
         // increment-chain plans stay O(this increment) for every consumer
         val clusters = leaf(spark, "graft: incr clustering")(expandAndElect(eg, repAssign))
 
-        import spark.implicits._
-        val metrics = runMetrics(sigs, repsCk, pairs, clusters)
-          .unionByName(Seq(
-            ("recluster_edges", splice.reclusterEdges),
-            ("affected_clusters", splice.affectedClusters),
-            ("untouched_clusters", splice.untouchedClusters)).toDF("metric", "value"))
+        val metrics = runMetrics(sigs, repsCk, pairs, clusters).unionByName(splice.metrics)
 
         val res = Result(sigs, eg.rejects, pairs, clusters, metrics)
         // every returned frame is a checkpoint leaf (sigs, pairs, repAssign,
-        // clusters, state.reps), so nothing is retained: the increment-local
-        // caches are released below, keeping a long incremental chain's cache
-        // footprint O(one increment)
+        // clusters, state.reps), so nothing is retained and the chain's cache
+        // footprint stays O(one increment)
         val state = IncState(repsCk, pairs, repAssign)
         // Band-table maintenance for the NEXT generation, written from the
         // leaf (no second store read): a stale increment — or one that found
@@ -367,8 +372,6 @@ object Pipeline {
           else if (hasNew) commitBands(bands.join(newUrls, Seq("url"), "left_semi"), "append")
           // else no rep-set change: the table is already current
         }
-        identDiff.unpersist(false)
-        delta.unpersist(false)
         (res, inc, state)
     }
   }

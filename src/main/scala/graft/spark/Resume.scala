@@ -1,8 +1,8 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.expressions.Window
 import graft.core.GraftConfig
 import graft.store.IcebergShaped
 
@@ -17,20 +17,26 @@ import graft.store.IcebergShaped
   * under a different GraftConfig are ignored AND superseded (config_fp
   * mismatch => recompute; db.cpp:46-47 version-stamp analog).
   *
-  * Two halves, each usable alone:
-  *  - [[commit]] (write after compute): rule-1 dedup of the batch, anti-join
-  *    on content_id, fingerprint the rest, append one snapshot. Rows are
-  *    clustered by part_id before the write, so every commit adds exactly
-  *    one parquet file per part_id dir it touches — store scans open a few
-  *    files per snapshot, not one per write task per part.
+  * One store pass per increment, in two halves:
+  *  - [[commit]] (write after compute): lists the store once and runs ONE
+  *    slim key pass ([[keyDecisions]]) over the stored `(url, warc_ts, lang)`
+  *    keys of the config plus the batch's keys. That pass decides both the
+  *    batch's commit (rule-1 dedup of the batch, and batch keys whose
+  *    content_id is already stored are resumed, not written) and the url
+  *    election of the live view. The batch's new rows are fingerprinted once
+  *    into a leaf ([[Pipeline.leaf]]), whose measured size is the number of
+  *    rows added, and the snapshot is written from that leaf — clustered by
+  *    part_id, so every commit adds exactly one parquet file per part_id dir
+  *    it touches.
   *  - [[liveView]] (read before compute): the rows clustering sees — the
-  *    current config's store rows with the url election (rule 1, then rule
-  *    2) applied across every committed batch. The election runs in url-KEY
-  *    space ([[Fingerprints.electUrlKeys]], the one-shot dedup's own rules):
-  *    only (url, warc_ts) keys are ranked, and the losing keys leave the
-  *    store scan in one broadcast left-anti join, so no MinHash or band array
-  *    crosses a shuffle and an increment's shuffle tracks the increment, not
-  *    the corpus.
+  *    stored payload of the config (the files listed BEFORE the commit)
+  *    unioned with the batch leaf, minus the election's losing keys, as one
+  *    leaf. Nothing just written is read back, and the store's data files
+  *    are scanned twice per increment: once for keys, once for payload.
+  * The election runs in url-KEY space (the one-shot dedup's own rules,
+  * [[Fingerprints.rankUrlKeys]]): the losing keys leave the payload in one
+  * broadcast left-anti join, so no MinHash or band array crosses a shuffle
+  * and an increment's shuffle tracks the increment, not the corpus.
   */
 object Resume {
 
@@ -44,10 +50,15 @@ object Resume {
       skipped: Long // rows served from the store
   )
 
-  /** What one [[commit]] did: the fingerprinted frame it wrote (lazy; its
-    * schema is the store's), the batch's rule-1 row count, and the rows
+  /** What one [[commit]] did, and what [[liveView]] builds from: the stored
+    * rows of the config as listed before the commit (None: the store had no
+    * files), the fingerprinted batch leaf it wrote, the live view's decision
+    * keys (None: no stored or new key loses or is duplicated), whether those
+    * include duplicated keys, the batch's rule-1 row count, and the rows
     * added. */
-  private[graft] final case class Committed(sigs: DataFrame, total: Long, added: Long)
+  private[graft] final case class Committed(stored: Option[DataFrame], fresh: DataFrame,
+                                            liveDecisions: Option[DataFrame], collapse: Boolean,
+                                            total: Long, added: Long)
 
   /** Fingerprint pages incrementally against `store`, append only new rows,
     * and return the live view after the commit. */
@@ -56,102 +67,141 @@ object Resume {
       store: IcebergShaped.Table,
       cfg: GraftConfig): IncrementalResult = {
     val c = commit(pages, store, cfg)
-    val live = if (store.isEmpty) c.sigs.limit(0) else liveView(pages.sparkSession, store, cfg)
-    IncrementalResult(live, c.added, skipped = c.total - c.added)
+    IncrementalResult(liveView(c, cfg), c.added, skipped = c.total - c.added)
   }
 
-  /** The write half. The anti-join runs on (content_id, config_fp) BEFORE
-    * the expensive fingerprint map, so cached rows cost one hash + one join
-    * probe. Driver-job budget: one count of the (cheap, pre-fingerprint)
-    * input, one emptiness probe on re-runs, and the commit itself. */
+  /** The write half. Driver-job budget: the store listing, the key pass (a
+    * leaf), one aggregate over that in-memory leaf (skipped rows and the
+    * collapse flags — it runs only when some key has a decision), the batch
+    * leaf (the fingerprint map runs here, and only over rows the store does
+    * not hold) and the snapshot write, which runs only when the batch leaf
+    * measured a row. No count of the input and no emptiness probe. */
   private[graft] def commit(pages: DataFrame, store: IcebergShaped.Table,
                             cfg: GraftConfig): Committed = {
     val spark = pages.sparkSession
+    // snapshots committed while signature rows still carried the
+    // full-document MinHash hold an extra `minhash` column (same config_fp):
+    // no reader wants it, so it leaves at the scan and no leaf holds it. The
+    // read lists the store's files (a job of its own) before the commit, so
+    // every later scan of `stored` sees exactly the pre-commit snapshots.
+    val stored =
+      if (store.isEmpty) None
+      else Some(Pipeline.labeled(spark, "graft: incr live keys")(store.read(spark))
+        .drop("minhash").filter(col("config_fp") === cfg.configFp))
+    val decisions = Pipeline.leaf(spark, "graft: incr live keys")(keyDecisions(pages, stored, cfg))
+    val (nCommit, skipped, batchCopies, nLive, liveCopies) =
+      if (Pipeline.leafSize(decisions)._1 == 0) (0L, 0L, false, 0L, false)
+      else Pipeline.labeled(spark, "graft: incr live keys") {
+        // one partition: the aggregate then needs no exchange, so it is one job
+        val r = decisions.coalesce(1).agg(count(col("__c")), count(when(col("__c") === 2, 1)),
+          count(when(col("__c") === 1, 1)), count(col("__t")), count(when(col("__t") === 1, 1))).head()
+        (r.getLong(0), r.getLong(1), r.getLong(2) > 0, r.getLong(3), r.getLong(4) > 0)
+      }
     // Rule 1 ONLY before the commit (per-url newest + duplicate-record
     // collapse): case-variant (rule 2) losers MUST be fingerprinted and
     // committed, because a later batch can add an OLDER variant that
     // changes the cross-increment case election — dropping them here made
     // the surviving variant depend on batch boundaries (round-5 review).
     // The live view applies the case rule across everything committed.
-    val withId = Fingerprints.dropRecrawlDuplicateUrlsEager(pages)
-      .withColumn("content_id", contentIdCol)
-    val total = Pipeline.labeled(spark, "graft: incr input count") { withId.count() }
-    val firstRun = store.isEmpty
-
     val todo =
-      if (firstRun) withId
-      else {
-        // the read lists the store's files in a job of its own
-        val existing = Pipeline.labeled(spark, "graft: incr sig commit")(store.read(spark))
-          .filter(col("config_fp") === cfg.configFp)
-          .select(col("content_id"))
-        withId.join(existing, Seq("content_id"), "left_anti")
-      }
-
+      if (nCommit == 0) pages
+      else Fingerprints.applyUrlElection(pages,
+        decisions.filter(col("__c").isNotNull)
+          .select(col("url"), col("warc_ts"), (col("__c") === 1).cast("int").as("__t")),
+        collapse = batchCopies)
     // default-mode commits drop the dead-weight shingle/sample arrays —
-    // config_fp keys the store, so each config's snapshots stay schema-stable.
-    // PreDeduped entry: withId already ran the rule-1 recrawl dedup (and the
-    // case rule must NOT run pre-commit); the plain fromPages would apply
-    // the full two-rule window inside the commit job.
-    val newSigs = Fingerprints.pruneForMode(
-      Fingerprints.fromPagesPreDeduped(todo.drop("content_id"), cfg).toDF(), cfg)
-    // cluster by the partition column before the partitionBy write: each
-    // part_id then lands as ONE file instead of one per write task
-    val clustered = newSigs.repartition(col("part_id"))
-    val added = Pipeline.labeled(spark, "graft: incr sig commit") {
-      if (firstRun) store.commit(clustered, cfg.configFp, "overwrite").addedRows
-      else if (!todo.isEmpty) store.commit(clustered, cfg.configFp, "append").addedRows
-      else 0L
+    // config_fp keys the store, so each config's snapshots stay schema-stable
+    val fresh = Pipeline.leaf(spark, "graft: incr sig commit") {
+      Fingerprints.pruneForMode(Fingerprints.fromPagesPreDeduped(todo, cfg), cfg)
     }
-    Committed(newSigs, total, added)
+    val added = Pipeline.leafSize(fresh)._1
+    if (added > 0) Pipeline.labeled(spark, "graft: incr sig commit") {
+      // cluster by the partition column before the partitionBy write: each
+      // part_id then lands as ONE file instead of one per write task
+      store.commit(fresh.repartition(col("part_id")), cfg.configFp,
+        if (stored.isEmpty) "overwrite" else "append")
+    }
+    val live = if (nLive == 0) None
+      else Some(decisions.filter(col("__t").isNotNull).select("url", "warc_ts", "__t"))
+    Committed(stored, fresh, live, liveCopies, added + skipped, added)
   }
 
-  /** The read half: the live signature rows of a non-empty `store` under
-    * `cfg`, returned as a materialized checkpoint leaf.
+  /** The increment's one key pass: the stored keys of the config (every
+    * language — the resume must see every row it could skip) and the batch's
+    * keys, in one slim shuffle by lower(url), where both elections run
+    * ([[Fingerprints.rankUrlKeys]]). Returns the keys with a decision:
+    *  - `__c`, the commit's, for batch keys: 0 = a rule-1 loser within the
+    *    batch, 2 = a rule-1 winner whose content_id (url plus epoch millis)
+    *    is already stored (resumed, not written), 1 = a new winner held by
+    *    more than one batch record (collapsed to one row). A new winner held
+    *    once has no commit decision.
+    *  - `__t`, the live view's ([[Fingerprints.electUrlKeys]] over every
+    *    stored row that passes `langFilter` plus the batch's new winners that
+    *    pass it): 0 = loses rule 1 or 2, 1 = survives but is held by several
+    *    stored records.
+    * A batch key already stored is counted once: its stored copies stand for
+    * it, so a resumed batch never makes a "duplicated" key. */
+  private def keyDecisions(pages: DataFrame, stored: Option[DataFrame],
+                           cfg: GraftConfig): DataFrame = {
+    val inLang = cfg.langFilter.fold(lit(true))(ls => col("lang").isin(ls.toSeq: _*))
+    def keysOf(rows: DataFrame, fromStore: Boolean): DataFrame =
+      rows.select(col("url"), col("warc_ts"), lower(col("url")).as("__lu"),
+        lit(fromStore).as("__s"), inLang.as("__in"))
+    val keys = stored.fold(keysOf(pages, fromStore = false))(s =>
+        keysOf(s, fromStore = true).unionByName(keysOf(pages, fromStore = false)))
+      .repartition(col("__lu"))
+      .groupBy(col("__lu"), col("url"), col("warc_ts"))
+      .agg(count(when(col("__s"), 1)).as("__sc"),
+        count(when(col("__s") && col("__in"), 1)).as("__sl"),
+        count(when(!col("__s"), 1)).as("__bc"),
+        count(when(!col("__s") && col("__in"), 1)).as("__bl"))
+    val inBatch = col("__bc") > 0
+    // every window below partitions by a superset of __lu: no further shuffle
+    val batch = Fingerprints.rankUrlKeys(keys, caseRule = false, Some(inBatch))
+      .withColumn("__old", max(col("__sc")).over(Window.partitionBy(
+        col("__lu"), col("url"), unix_millis(col("warc_ts")))) > 0)
+      .withColumn("__c", when(inBatch,
+        when(col("__lost"), 0).when(col("__old"), 2).when(col("__bc") > 1, 1)))
+      .withColumn("__copies", col("__sl") +
+        when(inBatch && !col("__lost") && !col("__old") && col("__bl") > 0, 1).otherwise(0))
+      .drop("__lost")
+    Fingerprints.rankUrlKeys(batch, caseRule = true, Some(col("__copies") > 0))
+      .select(col("url"), col("warc_ts"), col("__c"),
+        when(col("__lost"), 0).when(col("__copies") > 1, 1).as("__t"))
+      .filter(col("__c").isNotNull || col("__t").isNotNull)
+  }
+
+  /** The read half: the live signature rows under `cfg` after `c`, as a
+    * measured checkpoint leaf — the stored rows listed before the commit
+    * plus the batch leaf, honoring cfg.langFilter, minus the live keys that
+    * lose the url election ([[keyDecisions]]).
     *
     * Stale-config rows remain as history in older snapshots but are not
-    * live. The url election runs HERE and ONLY here for the incremental path
-    * — across every committed row, whatever batch it arrived in: rule 1
-    * (newest warc_ts per url; a re-crawled url gets a fresh content_id and
-    * is appended, so without it the old capture would stay live beside the
-    * new one) and rule 2 (F1: earliest (warc_ts, url) per lower(url) among
-    * the rule-1 winners). Running rule 2 per batch before the commit would
-    * discard a variant a later batch's OLDER twin needs to lose against.
-    * The view also honors cfg.langFilter (S2, the one rule in
-    * [[Pipeline.scan]]): rows committed by an unfiltered earlier config are
-    * config-compatible (langFilter is not fingerprint-affecting), so the
-    * store side must filter too or an incremental run clusters languages a
-    * one-shot run excludes.
+    * live. The url election runs across every committed row, whatever batch
+    * it arrived in: rule 1 (newest warc_ts per url; a re-crawled url gets a
+    * fresh content_id and is appended, so without it the old capture would
+    * stay live beside the new one) and rule 2 (F1: earliest (warc_ts, url)
+    * per lower(url) among the rule-1 winners). Running rule 2 per batch
+    * before the commit would discard a variant a later batch's OLDER twin
+    * needs to lose against. The view also honors cfg.langFilter (S2, the one
+    * rule in [[Pipeline.scan]]): rows committed by an unfiltered earlier
+    * config are config-compatible (langFilter is not fingerprint-affecting),
+    * so the store side must filter too or an incremental run clusters
+    * languages a one-shot run excludes.
     *
-    * Two eager labeled jobs, both before any consumer fans out:
-    *  - the key-space decisions (losing keys, duplicated keys) over a slim
-    *    (url, warc_ts) scan of the store, persisted and counted at once (the
-    *    store read's file listing runs under the same label);
-    *  - the live rows: ONE payload scan minus the losing keys (broadcast
-    *    left-anti join), a checkpoint leaf ([[Pipeline.leaf]]), so every
-    *    consumer reads the leaf instead of re-scanning the store.
     * Live rows are unique per (url, warc_ts) within one config_fp — the
-    * commit anti-joins on content_id, a function of the key — so duplicated
+    * commit skips a stored content_id, a function of the key — so duplicated
     * keys never occur in a store written by [[commit]]; if some writer put
-    * them there, the copies collapse to one row ([[Fingerprints.applyUrlElection]])
-    * and only then does the second payload pass run. */
-  private[graft] def liveView(spark: SparkSession, store: IcebergShaped.Table,
-                              cfg: GraftConfig): DataFrame = {
-    // snapshots committed while signature rows still carried the
-    // full-document MinHash hold an extra `minhash` column (same config_fp):
-    // no reader wants it, so it leaves at the scan and the leaf never holds it
-    val stored = Pipeline.labeled(spark, "graft: incr live keys")(store.read(spark))
-      .drop("minhash")
-    val rows = Pipeline.scan(stored.filter(col("config_fp") === cfg.configFp), cfg)
-    val decisions = Fingerprints.electUrlKeys(Fingerprints.urlKeysOf(rows), caseRule = true)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val duplicated = Pipeline.labeled(spark, "graft: incr live keys") {
-        decisions.agg(coalesce(sum(col("__t")), lit(0L))).head().getLong(0)
-      }
-      Pipeline.leaf(spark, "graft: incr live view") {
-        Fingerprints.applyUrlElection(rows, decisions, collapse = duplicated > 0)
-      }
-    } finally decisions.unpersist(false)
+    * them there, the copies collapse to one row
+    * ([[Fingerprints.applyUrlElection]]) and only then does a second payload
+    * pass run. Columns come in the order of a store read: the stored frame's
+    * when the store had files, else the batch leaf's with part_id last. */
+  private[graft] def liveView(c: Committed, cfg: GraftConfig): DataFrame = {
+    val fresh = c.fresh.select((c.fresh.columns.filter(_ != "part_id") :+ "part_id").map(col): _*)
+    val rows = Pipeline.scan(
+      c.stored.fold(fresh)(_.unionByName(fresh, allowMissingColumns = true)), cfg)
+    Pipeline.leaf(c.fresh.sparkSession, "graft: incr live view") {
+      c.liveDecisions.fold(rows)(Fingerprints.applyUrlElection(rows, _, c.collapse))
+    }
   }
 }

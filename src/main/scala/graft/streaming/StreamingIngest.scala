@@ -38,12 +38,12 @@ object StreamingIngest {
   /** Micro-batch ingest into the signatures store via the batch resume path
     * (its write half, [[Resume.commit]]; the live view is built by whoever
     * reads the store): new content is fingerprinted and committed as one
-    * snapshot per non-empty batch; already-seen content_ids are skipped
-    * (idempotent under replay). Each batch goes through the SAME scan filter (S2) as the
-    * batch entry — without it, out-of-filter pages would be fingerprinted
-    * and committed to the store forever. The default trigger drains
-    * available data and stops (backfill shape); continuous ingest passes
-    * e.g. `Trigger.ProcessingTime("1 minute")`. */
+    * snapshot per batch that measured a new row; already-seen content_ids
+    * are skipped (idempotent under replay). Each batch goes through the SAME
+    * scan filter (S2) as the batch entry — without it, out-of-filter pages
+    * would be fingerprinted and committed to the store forever. The default
+    * trigger drains available data and stops (backfill shape); continuous
+    * ingest passes e.g. `Trigger.ProcessingTime("1 minute")`. */
   def ingestToStore(pagesStream: DataFrame, store: IcebergShaped.Table,
                     cfg: GraftConfig,
                     checkpointDir: String,
@@ -53,12 +53,11 @@ object StreamingIngest {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // one persist per batch: the resume path otherwise re-evaluates the
-        // source (emptiness probe, pre-fingerprint count, commit job)
+        // one persist per batch: the write half reads the batch twice (its
+        // key pass and the fingerprint leaf), which would re-evaluate the source
         val scanned = graft.spark.Pipeline.scan(batch, cfg).persist()
-        try {
-          if (!scanned.isEmpty) { Resume.commit(scanned, store, cfg); () }
-        } finally { scanned.unpersist(false); () }
+        try { Resume.commit(scanned, store, cfg); () }
+        finally { scanned.unpersist(false); () }
       }
       .start()
 

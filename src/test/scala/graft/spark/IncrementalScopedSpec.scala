@@ -256,6 +256,68 @@ class IncrementalScopedSpec extends AnyFunSuite {
       s"an increment left cached frames behind: ${cachedByIncrement.values.mkString("; ")}")
   }
 
+  test("splice metrics equal an eager recomputation: a re-crawled rep and a " +
+      "delta edge that merges two previous clusters") {
+    import spark.implicits._
+    val store = tmpStore()
+    val base = CorpusSpark.pages(spark, 400L, 4, cfg.seed)
+    val (r1, _, st1) = Pipeline.runIncrementalScoped(base, store, None, cfg)
+    // the re-crawl victim: the second url of a matched pair, with new text
+    val victim = r1.pairs.filter(col("matched")).select("url_b").orderBy("url_a", "url_b")
+      .head().getString(0)
+    val newText = (0 until 300).map(i => f"splice$i%05d").mkString(" ")
+    val current = base.filter(col("url") =!= victim).unionByName(
+      base.filter(col("url") === victim)
+        .withColumn("warc_ts", timestamp_millis(unix_millis(col("warc_ts")) + lit(86400000L)))
+        .withColumn("html", lit(Render.html(newText, 9L)))
+        .withColumn("text", lit(newText)))
+    val (r2, _, st2) = Pipeline.runIncrementalScoped(current, store, Some(st1), cfg)
+
+    // the splice's inputs, taken from the two generations: stale reps by
+    // (url, content_id), the increment's new matched pairs, and one more
+    // delta edge between two previous multi-member clusters
+    val stale = st1.reps.select("url", "content_id")
+      .join(st2.reps.select("url", "content_id"), Seq("url", "content_id"), "left_anti")
+      .select("url")
+    assert(stale.collect().map(_.getString(0)).toSeq === Seq(victim))
+    val prevMatched = st1.pairs.filter(col("matched"))
+    val roots = st1.repAssign.groupBy("cluster_id").count().filter(col("count") > 1)
+      .orderBy("cluster_id").select("cluster_id").as[String].take(2)
+    assert(roots.length === 2, "fixture broken: fewer than two previous clusters")
+    val delta = r2.pairs.filter(col("matched")).select("url_a", "url_b")
+      .join(prevMatched.select("url_a", "url_b"), Seq("url_a", "url_b"), "left_anti")
+      .unionByName(Seq((roots(0), roots(1))).toDF("url_a", "url_b"))
+    val splice = Clusters.spliceAssign(st2.reps.select("url"), st1.repAssign,
+      prevMatched, delta, stale)
+
+    // the oracle: the three counts as the splice used to compute them, with
+    // distinct frames and eager counts
+    val staleD = stale.distinct()
+    val touched = delta.select(col("url_a").as("url"))
+      .unionByName(delta.select(col("url_b").as("url"))).unionByName(staleD).distinct()
+    val affectedRoots = st1.repAssign.join(touched, Seq("url"), "left_semi")
+      .select("cluster_id").distinct()
+    val affectedMembers = st1.repAssign.join(affectedRoots, Seq("cluster_id"), "left_semi")
+    val keptPrev = prevMatched.select("url_a", "url_b")
+      .join(staleD.select(col("url").as("url_a")), Seq("url_a"), "left_anti")
+      .join(staleD.select(col("url").as("url_b")), Seq("url_b"), "left_anti")
+    val subEdges = keptPrev
+      .join(affectedMembers.select(col("url").as("url_a")), Seq("url_a"), "left_semi")
+      .unionByName(delta)
+    val untouched = st1.repAssign.join(affectedRoots, Seq("cluster_id"), "left_anti")
+    val oracle = Map(
+      "recluster_edges" -> subEdges.count(),
+      "affected_clusters" -> affectedRoots.count(),
+      "untouched_clusters" -> untouched.select("cluster_id").distinct().count())
+    val got = splice.metrics.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got === oracle)
+    assert(oracle("untouched_clusters") > 0L && oracle("affected_clusters") >= 2L)
+    // the delta edge merged the two previous clusters
+    val merged = splice.assign.filter(col("url").isin(roots: _*))
+      .select("cluster_id").distinct().count()
+    assert(merged === 1L)
+  }
+
   test("no-op increment: nothing re-clusters, assignment unchanged") {
     val store = tmpStore()
     val base = CorpusSpark.pages(spark, 300L, 4, cfg.seed)

@@ -17,13 +17,16 @@ class JobLabelSpec extends AnyFunSuite {
 
   /** (description, first stage name) of every job whose description does
     * not start with `graft: `, among the jobs `body` starts. */
-  private def unlabeledJobsOf(body: => Unit): Seq[(String, String)] = {
+  private def unlabeledJobsOf(body: => Unit): Seq[(String, String)] =
+    jobsOf(body).filter { case (desc, _) => !desc.startsWith("graft: ") }
+
+  /** (description, first stage name) of every job `body` starts. */
+  private def jobsOf(body: => Unit): Seq[(String, String)] = {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         val desc = Option(j.properties).map(_.getProperty("spark.job.description")).orNull
-        if (desc == null || !desc.startsWith("graft: "))
-          seen.add((String.valueOf(desc), j.stageInfos.headOption.map(_.name).getOrElse("?")))
+        seen.add((String.valueOf(desc), j.stageInfos.headOption.map(_.name).getOrElse("?")))
       }
     }
     val sc = spark.sparkContext
@@ -44,12 +47,11 @@ class JobLabelSpec extends AnyFunSuite {
     }
   }
 
-  test("a two-generation scoped chain with a re-crawl starts only labeled jobs") {
-    val cfg = GraftConfig()
-    val store = IcebergShaped.table(Files.createTempDirectory("graft-store").toString)
+  /** A base of 320 pages, and an increment of 160 new pages plus a re-crawl
+    * of a base page with new text, so the increment has stale reps as well
+    * as new ones. */
+  private def chain(cfg: GraftConfig) = {
     val base = CorpusSpark.pages(spark, 320L, 4, cfg.seed)
-    // increment: 160 new pages plus a re-crawl of a base page with new text,
-    // so the increment has stale reps as well as new ones
     val victim = graft.data.Corpus.urlOf(0L)
     val newText = (0 until 300).map(i => f"recrawl$i%05d").mkString(" ")
     val recrawl = base.filter(col("url") === victim)
@@ -58,10 +60,31 @@ class JobLabelSpec extends AnyFunSuite {
       .withColumn("text", lit(newText))
     val increment = CorpusSpark.pages(spark, 480L, 4, cfg.seed)
       .filter(col("url") =!= victim).unionByName(recrawl)
+    (base, increment)
+  }
+
+  test("a two-generation scoped chain with a re-crawl starts only labeled jobs") {
+    val cfg = GraftConfig()
+    val store = IcebergShaped.table(Files.createTempDirectory("graft-store").toString)
+    val (base, increment) = chain(cfg)
     val unlabeled = unlabeledJobsOf {
       val (_, _, st1) = Pipeline.runIncrementalScoped(base, store, None, cfg)
       Pipeline.runIncrementalScoped(increment, store, Some(st1), cfg)
     }
     assert(unlabeled.isEmpty, s"unlabeled jobs: ${unlabeled.mkString("; ")}")
+  }
+
+  test("an increment's store pass starts at most 12 jobs, none of them an input count") {
+    val cfg = GraftConfig()
+    val store = IcebergShaped.table(Files.createTempDirectory("graft-store").toString)
+    val (base, increment) = chain(cfg)
+    val (_, _, st1) = Pipeline.runIncrementalScoped(base, store, None, cfg)
+    val storeLabels = Set("graft: incr input count", "graft: url-dedup decisions",
+      "graft: incr sig commit", "graft: incr live keys", "graft: incr live view")
+    val jobs = jobsOf { Pipeline.runIncrementalScoped(increment, store, Some(st1), cfg) }
+      .map(_._1).filter(storeLabels)
+    assert(!jobs.contains("graft: incr input count"), jobs.mkString("; "))
+    assert(jobs.size <= 12, s"${jobs.size} store jobs: " +
+      jobs.groupBy(identity).map { case (l, js) => s"$l x${js.size}" }.mkString("; "))
   }
 }

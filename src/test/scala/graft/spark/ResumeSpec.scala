@@ -1,7 +1,12 @@
 package graft.spark
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.GraftConfig
 import graft.data.CorpusSpark
@@ -240,5 +245,66 @@ class ResumeSpec extends AnyFunSuite {
       val files = list(d).map(_.getFileName.toString).filter(_.endsWith(".parquet"))
       assert(files.size === 1, s"$d holds ${files.size} parquet files")
     }
+  }
+
+  /** The file locations of the executed scans under `dir`, one entry per
+    * scan node, among the queries `body` runs — the listener method of
+    * BandStoreSpec: scan nodes come from the SQL plan events (the initial
+    * plan and every adaptive re-plan), and a scan counts once when some task
+    * updated one of its metrics. */
+  private def scansUnder(dir: String)(body: => Unit): Seq[String] = {
+    val scanOfMetric = new ConcurrentHashMap[Long, (Long, String)]() // metric id -> scan
+    val updated = ConcurrentHashMap.newKeySet[Long]()
+    def collect(p: SparkPlanInfo): Unit = {
+      p.metadata.get("Location").filter(_.contains(dir)).foreach { loc =>
+        if (p.metrics.nonEmpty) {
+          val key = p.metrics.map(_.accumulatorId).min
+          p.metrics.foreach(m => scanOfMetric.put(m.accumulatorId, (key, loc)))
+        }
+      }
+      p.children.foreach(collect)
+    }
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => collect(s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => collect(u.sparkPlanInfo)
+        case _ =>
+      }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        t.taskInfo.accumulables.foreach(a => updated.add(a.id))
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graftclock.TaskClock.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.graftclock.TaskClock.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    scanOfMetric.asScala.collect { case (m, scan) if updated.contains(m) => scan }
+      .toSeq.distinct.map(_._2)
+  }
+
+  test("an increment scans the store's data twice (keys, payload) and never " +
+      "reads back the snapshot it commits") {
+    val store = tmpStore()
+    val base = CorpusSpark.pages(spark, 320L, 4, cfg.seed)
+    Resume.incrementalFingerprints(base, store, cfg)
+    assert(store.liveFilesTagged.map(_._1.snapshotId).distinct.size === 1)
+    // new pages plus re-crawls of base pages: rows to commit and stored keys
+    // that lose the election
+    val batch = CorpusSpark.pages(spark, 480L, 4, cfg.seed)
+      .join(base.select("url"), Seq("url"), "left_anti")
+      .unionByName(base.filter(pmod(xxhash64(col("url")), lit(8)) === 0)
+        .withColumn("warc_ts", timestamp_millis(unix_millis(col("warc_ts")) + lit(86400000L))))
+    val scans = scansUnder(store.root + "/data/") {
+      val r = Resume.incrementalFingerprints(batch, store, cfg)
+      assert(r.newlyFingerprinted > 0L)
+    }
+    val committed = store.currentSnapshot.get.files.map(f =>
+      java.nio.file.Paths.get(f.path).getParent.getFileName.toString).distinct
+    assert(committed.size === 1)
+    assert(scans.size <= 2, s"the increment scanned the store ${scans.size} times")
+    assert(!scans.exists(_.contains(committed.head)),
+      s"the increment read back its own snapshot ${committed.head}")
   }
 }
